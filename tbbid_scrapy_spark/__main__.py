@@ -24,28 +24,20 @@ def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="tbbid_scrapy_spark")
     sub = ap.add_subparsers(dest="cmd", required=True)
 
-    crawl = sub.add_parser("crawl", help="run the frontier crawl")
-    crawl.add_argument("--checkpoint", default=None)
-    crawl.add_argument("--max-waves", type=int, default=100)
-    crawl.add_argument("--seen-mode", default="hybrid",
+    for cmd, help_ in (("crawl", "run the frontier crawl"),
+                       ("resume", "resume a checkpointed crawl")):
+        p = sub.add_parser(cmd, help=help_)
+        p.add_argument("--checkpoint", required=cmd == "resume", default=None)
+        p.add_argument("--max-waves", type=int, default=100)
+        p.add_argument("--cpus", type=int, default=None)
+        # the fixture site is rebuilt deterministically at resume, so these
+        # must match the original crawl's values or pending URLs point at
+        # pages the rebuilt site doesn't carry
+        p.add_argument("--seen-mode", default="hybrid",
                        choices=["exact", "bloom", "hybrid", "cuckoo"])
-    crawl.add_argument("--listings", type=int, default=4)
-    crawl.add_argument("--projects", type=int, default=400)
-    crawl.add_argument("--budget", type=int, default=4)
-    crawl.add_argument("--cpus", type=int, default=None)
-
-    res = sub.add_parser("resume", help="resume a checkpointed crawl")
-    res.add_argument("--checkpoint", required=True)
-    res.add_argument("--max-waves", type=int, default=100)
-    res.add_argument("--cpus", type=int, default=None)
-    # the fixture site is rebuilt deterministically at resume, so these
-    # must match the original crawl's values or pending URLs point at
-    # pages the rebuilt site doesn't carry
-    res.add_argument("--seen-mode", default="hybrid",
-                     choices=["exact", "bloom", "hybrid", "cuckoo"])
-    res.add_argument("--listings", type=int, default=4)
-    res.add_argument("--projects", type=int, default=400)
-    res.add_argument("--budget", type=int, default=4)
+        p.add_argument("--listings", type=int, default=4)
+        p.add_argument("--projects", type=int, default=400)
+        p.add_argument("--budget", type=int, default=4)
 
     sub.add_parser("bench", help="run bench.py main")
 
@@ -62,6 +54,7 @@ def main(argv: list[str] | None = None) -> int:
     from tbbid_scrapy_spark import schemas
     from tbbid_scrapy_spark.fixtures import sitegen
     from tbbid_scrapy_spark.operators.bloom import BloomSpec
+    from tbbid_scrapy_spark.operators.cuckoo import CuckooSpec
     from tbbid_scrapy_spark.plans.crawl import CrawlConfig, CrawlEngine
     from tbbid_scrapy_spark.session import get_spark
 
@@ -70,50 +63,25 @@ def main(argv: list[str] | None = None) -> int:
         list(schemas.DOCUMENTS.fields)
         + [T.StructField("fail_first", T.IntegerType(), False)]
     )
-    if args.cmd == "crawl":
-        site = sitegen.build_site(args.listings, args.projects, seed=42)
-        site_df = spark.createDataFrame(sitegen.site_to_rows(site), site_schema)
-        pol = spark.createDataFrame(
-            sitegen.default_politeness(args.budget, args.budget), schemas.POLITENESS
-        )
-        rob = spark.createDataFrame(sitegen.default_robots(), schemas.ROBOTS)
-        from tbbid_scrapy_spark.operators.cuckoo import CuckooSpec
-
-        spec = BloomSpec.for_capacity(10_000_000, 0.01, 64)
-        cuckoo = (
-            CuckooSpec.for_capacity(10_000_000, 64)
-            if args.seen_mode == "cuckoo"
-            else None
-        )
-        eng = CrawlEngine(
-            spark, site_df, sitegen.default_seeds(), pol, rob,
-            CrawlConfig(max_waves=args.max_waves, seen_mode=args.seen_mode,
-                        bloom_spec=spec, cuckoo_spec=cuckoo,
-                        checkpoint_dir=args.checkpoint),
-        )
-        st = eng.run()
-    else:
-        site = sitegen.build_site(args.listings, args.projects, seed=42)
-        site_df = spark.createDataFrame(sitegen.site_to_rows(site), site_schema)
-        pol = spark.createDataFrame(
-            sitegen.default_politeness(args.budget, args.budget), schemas.POLITENESS
-        )
-        rob = spark.createDataFrame(sitegen.default_robots(), schemas.ROBOTS)
-        from tbbid_scrapy_spark.operators.cuckoo import CuckooSpec
-
-        spec = BloomSpec.for_capacity(10_000_000, 0.01, 64)
-        cuckoo = (
-            CuckooSpec.for_capacity(10_000_000, 64)
-            if args.seen_mode == "cuckoo"
-            else None
-        )
-        eng = CrawlEngine(
-            spark, site_df, sitegen.default_seeds(), pol, rob,
-            CrawlConfig(max_waves=args.max_waves, seen_mode=args.seen_mode,
-                        bloom_spec=spec, cuckoo_spec=cuckoo,
-                        checkpoint_dir=args.checkpoint),
-        )
-        st = eng.run(resume=True)
+    site = sitegen.build_site(args.listings, args.projects, seed=42)
+    site_df = spark.createDataFrame(sitegen.site_to_rows(site), site_schema)
+    pol = spark.createDataFrame(
+        sitegen.default_politeness(args.budget, args.budget), schemas.POLITENESS
+    )
+    rob = spark.createDataFrame(sitegen.default_robots(), schemas.ROBOTS)
+    spec = BloomSpec.for_capacity(10_000_000, 0.01, 64)
+    cuckoo = (
+        CuckooSpec.for_capacity(10_000_000, 64)
+        if args.seen_mode == "cuckoo"
+        else None
+    )
+    eng = CrawlEngine(
+        spark, site_df, sitegen.default_seeds(), pol, rob,
+        CrawlConfig(max_waves=args.max_waves, seen_mode=args.seen_mode,
+                    bloom_spec=spec, cuckoo_spec=cuckoo,
+                    checkpoint_dir=args.checkpoint),
+    )
+    st = eng.run(resume=args.cmd == "resume")
 
     summary = {
         "waves": st.wave,

@@ -16,7 +16,7 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -53,10 +53,3 @@ def analyse_notice_cols(html_col: Column) -> dict[str, Column]:
         "company_req": extract_construction_qualification(pure),
         "person_req": extract_profession_and_level(pure),
     }
-
-
-def with_notice_analysis(df: DataFrame, html_col: str = "notice_html") -> DataFrame:
-    """Apply the notice analysis as one withColumns block (single pass,
-    one Arrow exchange for the strip, Catalyst regex for the rest)."""
-    cols = analyse_notice_cols(F.col(html_col))
-    return df.withColumns(cols)

@@ -127,66 +127,6 @@ def is_plain_url(url: Column) -> Column:
     return F.regexp_like(F.trim(url), F.lit(PLAIN_URL_RE))
 
 
-def canonicalize_url_jvm(url: Column) -> Column:
-    """Catalyst-only canonicalizer — valid ONLY where is_plain_url holds
-    (callers split-union with the Arrow UDF for the rest). Parsing is
-    pure linear string ops (substring_index/locate) — the predicate
-    already guarantees the URL's shape, and each regexp_extract this
-    replaced re-scans the string through the regex engine (~6× the cost
-    of the whole pipeline at 4M URLs)."""
-    # Each component comes from ONE flat parse_url/extract on the input —
-    # deep chains of string ops referencing each other explode the
-    # Catalyst expression tree (every reference copies its subtree;
-    # measured 4× slower than the regex version they replaced), while
-    # flat extraction keeps the projection linear in component count.
-    u = F.substring_index(F.trim(url), "#", 1)  # fragment dropped first
-    scheme = F.lower(F.parse_url(u, F.lit("PROTOCOL")))
-    authority = F.parse_url(u, F.lit("AUTHORITY"))
-    host = F.lower(F.substring_index(authority, ":", 1))
-    port = F.when(
-        F.instr(authority, ":") > 0, F.substring_index(authority, ":", -1)
-    ).otherwise(F.lit(""))
-    default_port = (
-        F.when(scheme == "http", F.lit("80"))
-        .when(scheme == "https", F.lit("443"))
-        .otherwise(F.lit(""))
-    )
-    netloc = F.when(
-        (port != "") & (port != default_port), F.concat(host, F.lit(":"), port)
-    ).otherwise(host)
-    path = F.coalesce(F.parse_url(u, F.lit("PATH")), F.lit(""))
-    path = F.when(path == "", F.lit("/")).otherwise(path)
-    qraw = F.coalesce(F.parse_url(u, F.lit("QUERY")), F.lit(""))
-    busters = F.array(*[F.lit(k) for k in sorted(CACHE_BUSTER_KEYS)])
-    kv = F.transform(
-        F.filter(F.split(qraw, "&"), lambda p: p != ""),
-        # split on the FIRST '=' (parse_qsl semantics); keep the value RAW
-        # here — python sorts the DECODED pairs, so the urlencode-style
-        # re-quoting of '=' inside values (%3D) happens after the sort
-        lambda p: F.struct(
-            F.get(F.split(p, "=", 2), 0).alias("k"),
-            F.coalesce(F.get(F.split(p, "=", 2), 1), F.lit("")).alias("v"),
-        ),
-    )
-    kv = F.array_sort(F.filter(kv, lambda s: ~F.array_contains(busters, s["k"])))
-    qout = F.array_join(
-        F.transform(
-            kv,
-            lambda s: F.concat(
-                s["k"], F.lit("="), F.regexp_replace(s["v"], "=", "%3D")
-            ),
-        ),
-        "&",
-    )
-    return F.concat(
-        scheme,
-        F.lit("://"),
-        netloc,
-        path,
-        F.when(qout == "", F.lit("")).otherwise(F.concat(F.lit("?"), qout)),
-    )
-
-
 @_functools.lru_cache(maxsize=None)
 def _canonical_jvm_cols(url_col: str) -> tuple:
     """The staged canonicalizer's Column objects, built ONCE per input
@@ -200,8 +140,18 @@ def _canonical_jvm_cols(url_col: str) -> tuple:
     class as the F.expr single-parse trees and the lru_cached pandas-UDF
     factories in dedup/similarity). Returns (u, stage1, stage2, norm);
     the caller's withColumn/withColumns sequence is unchanged, so the
-    resulting plan is byte-identical to the uncached construction."""
-    u = F.substring_index(F.trim(F.col(url_col)), "#", 1)
+    resulting plan is byte-identical to the uncached construction.
+
+    Parsing is pure linear string ops (parse_url/substring_index) — the
+    plain predicate already guarantees the URL's shape, and each
+    regexp_extract this replaced re-scanned the string through the regex
+    engine (~6× the cost of the whole pipeline at 4M URLs)."""
+    # Each component comes from ONE flat parse_url/extract on the input —
+    # deep chains of string ops referencing each other explode the
+    # Catalyst expression tree (every reference copies its subtree;
+    # measured 4× slower than the regex version they replaced), while
+    # flat extraction keeps the projection linear in component count.
+    u = F.substring_index(F.trim(F.col(url_col)), "#", 1)  # fragment dropped first
     stage1 = {
         "_scheme": F.lower(F.parse_url(F.col("_cu"), F.lit("PROTOCOL"))),
         "_auth": F.parse_url(F.col("_cu"), F.lit("AUTHORITY")),
@@ -209,9 +159,10 @@ def _canonical_jvm_cols(url_col: str) -> tuple:
         "_qraw": F.coalesce(F.parse_url(F.col("_cu"), F.lit("QUERY")), F.lit("")),
     }
     busters = F.array(*[F.lit(k) for k in sorted(CACHE_BUSTER_KEYS)])
-    # split each pair ONCE (the Column form split twice per pair, once
-    # per F.get); keep value RAW until after the sort — see
-    # canonicalize_url_jvm for the parse_qsl/urlencode rationale
+    # split each pair ONCE on the FIRST '=' (parse_qsl semantics); keep
+    # the value RAW until after the sort — python sorts the DECODED
+    # pairs, so the urlencode-style re-quoting of '=' inside values (%3D)
+    # happens after the sort
     pair_arrays = F.transform(
         F.filter(F.split(F.col("_qraw"), "&"), lambda p: p != ""),
         lambda p: F.split(p, "=", 2),
@@ -272,8 +223,9 @@ def _canonical_jvm_cols(url_col: str) -> tuple:
 
 def with_canonical_jvm(df: DataFrame, url_col: str,
                        out_col: str = "url_norm") -> DataFrame:
-    """Frame-level Catalyst canonicalizer — the same expressions as
-    ``canonicalize_url_jvm`` STAGED over intermediate columns, so each
+    """Frame-level Catalyst canonicalizer — valid ONLY where is_plain_url
+    holds (callers split-union with the Arrow UDF for the rest). The
+    expressions are STAGED over intermediate columns, so each
     shared component (the fragment-stripped url, the four parse_url
     results, the split query pair) is evaluated once per row instead of
     once per reference: a Column-level expression tree copies its
@@ -283,12 +235,11 @@ def with_canonical_jvm(df: DataFrame, url_col: str,
     projection is free. CollapseProject keeps the stages separate
     because the produced attributes are non-cheap and multiply
     consumed — the same mechanism as dedup._with_tokens. Measured on the
-    2M-URL wave input: 1.74 s → 0.57 s for the canonical projection.
-    Byte-identical output to ``canonicalize_url_jvm`` (identical
-    expressions, only factored); valid ONLY where is_plain_url holds.
-    The Column trees come from ``_canonical_jvm_cols`` (built once per
-    column name, cached — construction itself was 0.3 s of py4j
-    round-trips per call, inside every crawl wave)."""
+    2M-URL wave input: 1.74 s → 0.57 s for the canonical projection
+    against the unstaged single-expression form. The Column trees come
+    from ``_canonical_jvm_cols`` (built once per column name, cached —
+    construction itself was 0.3 s of py4j round-trips per call, inside
+    every crawl wave)."""
     u, stage1, stage2, norm = _canonical_jvm_cols(url_col)
     return (
         df.withColumn("_cu", u)
@@ -358,8 +309,7 @@ def with_url_norm(df: DataFrame, url_col: str = "url", base_col: str | None = No
     mode='python': the Arrow UDF for every row — one branch, no union."""
     plain, slow_norm, hash_c, host_c = _url_norm_cols(url_col, base_col)
     if mode == "hybrid":
-        # staged frame-level canonicalizer: byte-identical to
-        # canonicalize_url_jvm, ~3× cheaper (shared components evaluated
+        # staged frame-level canonicalizer (shared components evaluated
         # once per row — see with_canonical_jvm)
         fast = with_canonical_jvm(df.filter(plain), url_col)
         slow = df.filter(~plain).withColumn("url_norm", slow_norm)

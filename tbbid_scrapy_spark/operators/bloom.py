@@ -9,7 +9,8 @@ bidSaver.py:16,30-35,123-124) — with a structure that works at a
 Design
 ------
 - Identity: the JVM-side ``xxhash64(url_norm)`` (no Python hashing).
-- Sharding: ``shard_id = pmod(url_hash, n_shards)``. Each shard owns an
+- Sharding (operators/sharded.py, shared with the cuckoo filter):
+  ``shard_id = pmod(url_hash, n_shards)``. Each shard owns an
   independent bitset; shards are rows ``(shard_id, bitset binary,
   n_inserted)`` so the whole seen-set is itself a DataFrame that
   checkpoints like any other table. At 10^10 URLs / 1% FP the total is
@@ -19,9 +20,9 @@ Design
 - Probes: k positions derived from the single 64-bit hash by the
   Kirsch-Mitzenmacher double-hashing scheme (h_lo + i*h_hi mod m) —
   standard result: no extra hash functions needed.
-- Test/insert run as a cogrouped ``applyInPandas`` (candidates grouped by
-  shard_id cogrouped with the shard rows): one Arrow batch per shard,
-  numpy bit ops inside — no per-row Python.
+- Test/insert run as the shard layer's cogrouped ``applyInPandas``: one
+  Arrow batch per shard, the numpy bit ops below inside — no per-row
+  Python. This module keeps only the spec and those kernels.
 
 False-positive caveat: a bloom FP silently drops a never-seen URL. The
 crawl loop therefore supports four modes (plans/crawl.py): 'exact'
@@ -37,14 +38,12 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass
-from typing import Iterable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from tbbid_scrapy_spark import schemas
+from tbbid_scrapy_spark.operators import sharded
 
 
 @dataclass(frozen=True)
@@ -85,6 +84,12 @@ class BloomSpec:
             f"bloom:{PROBE_FORMAT}:shards={self.n_shards}"
             f":bits={self.bits_per_shard}:k={self.n_probes}"
         )
+
+    def empty(self, spark: SparkSession) -> DataFrame:
+        return empty_shards(spark, self)
+
+    def insert(self, keys: DataFrame, shards: DataFrame) -> DataFrame:
+        return bloom_insert(keys, shards, self)
 
 
 # Version of the probe-derivation math below (_splitmix64 remix + lo/hi
@@ -142,184 +147,62 @@ def _set_bits(bitset: np.ndarray, pos: np.ndarray) -> None:
 
 
 def empty_shards(spark: SparkSession, spec: BloomSpec) -> DataFrame:
-    """All-zero shard table. Built distributedly (spark.range) so that a
-    4096-shard × multi-MB filter never materializes on the driver."""
-    zeros = bytes(spec.bits_per_shard // 8)
-    return (
-        spark.range(spec.n_shards)
-        .select(
-            F.col("id").cast("int").alias("shard_id"),
-            F.lit(zeros).alias("bitset"),
-            F.lit(0).cast("long").alias("n_inserted"),
-        )
+    """All-zero shard table (schemas.SEEN_SHARDS)."""
+    return sharded.empty_table(
+        spark, spec.n_shards, schemas.SEEN_SHARDS, spec.bits_per_shard // 8
     )
-
-
-def with_shard_id(df: DataFrame, spec: BloomSpec, hash_col: str = "url_hash") -> DataFrame:
-    return df.withColumn("shard_id", F.pmod(F.col(hash_col), F.lit(spec.n_shards)).cast("int"))
 
 
 def bloom_test(candidates: DataFrame, shards: DataFrame, spec: BloomSpec,
                hash_col: str = "url_hash") -> DataFrame:
-    """Candidates + ``maybe_seen`` boolean. One Arrow batch per shard via
-    cogrouped applyInPandas; candidate rows pass through untouched."""
-    from pyspark.sql import types as T
+    """Candidates + ``maybe_seen`` boolean; candidate rows pass through
+    untouched."""
 
-    cand = with_shard_id(candidates, spec, hash_col)
-    # StructType.add mutates in place — build a fresh copy instead
-    out_schema = T.StructType(
-        list(cand.schema.fields) + [T.StructField("maybe_seen", T.BooleanType(), False)]
-    )
-    cols = [f.name for f in cand.schema.fields]
+    def test(payload: bytes, hashes: np.ndarray) -> np.ndarray:
+        bitset = np.frombuffer(payload, dtype=np.uint8)
+        return _test_bits(bitset, _positions(hashes, spec))
 
-    def per_shard(key, cand_pdf: pd.DataFrame, shard_pdf: pd.DataFrame) -> pd.DataFrame:
-        if cand_pdf.empty:
-            return pd.DataFrame(columns=cols + ["maybe_seen"])
-        if shard_pdf.empty:
-            return cand_pdf.assign(maybe_seen=False)
-        bitset = np.frombuffer(shard_pdf["bitset"].iloc[0], dtype=np.uint8)
-        pos = _positions(cand_pdf[hash_col].to_numpy(), spec)
-        return cand_pdf.assign(maybe_seen=_test_bits(bitset, pos))
-
-    return (
-        cand.groupBy("shard_id")
-        .cogroup(shards.groupBy("shard_id"))
-        .applyInPandas(per_shard, schema=out_schema)
-        .drop("shard_id")
+    return sharded.probe(
+        candidates, shards, schemas.SEEN_SHARDS, spec.n_shards, test, hash_col
     )
 
 
 def bloom_insert(candidates: DataFrame, shards: DataFrame, spec: BloomSpec,
                  hash_col: str = "url_hash") -> DataFrame:
-    """New shard table with all candidate hashes inserted. Shards with no
-    candidates pass through unchanged (full outer cogroup)."""
-    cand = with_shard_id(candidates.select(hash_col), spec, hash_col)
+    """New shard table with all candidate hashes inserted."""
 
-    def per_shard(key, cand_pdf: pd.DataFrame, shard_pdf: pd.DataFrame) -> pd.DataFrame:
-        shard_id = int(key[0])
-        if shard_pdf.empty:
-            return pd.DataFrame(
-                {"shard_id": [shard_id], "bitset": [b""], "n_inserted": [0]}
-            ).iloc[0:0]  # shard table must pre-exist; never invent shards
-        bitset = np.frombuffer(shard_pdf["bitset"].iloc[0], dtype=np.uint8).copy()
-        n = int(shard_pdf["n_inserted"].iloc[0])
-        if not cand_pdf.empty:
-            pos = _positions(cand_pdf[hash_col].to_numpy(), spec)
-            _set_bits(bitset, pos)
-            n += len(cand_pdf)
-        return pd.DataFrame(
-            {"shard_id": [shard_id], "bitset": [bitset.tobytes()], "n_inserted": [n]}
-        )
+    def insert(payload: bytes, hashes: np.ndarray, shard_id: int, n: int):
+        bitset = np.frombuffer(payload, dtype=np.uint8).copy()
+        _set_bits(bitset, _positions(hashes, spec))
+        return bitset.tobytes(), n + len(hashes)
 
-    return (
-        shards.groupBy("shard_id")
-        .cogroup(cand.groupBy("shard_id"))
-        .applyInPandas(
-            lambda key, s_pdf, c_pdf: per_shard(key, c_pdf, s_pdf),
-            schema=schemas.SEEN_SHARDS,
-        )
+    return sharded.update(
+        candidates, shards, schemas.SEEN_SHARDS, spec.n_shards, insert, hash_col
     )
 
 
 def bloom_test_insert(candidates: DataFrame, shards: DataFrame, spec: BloomSpec,
                       hash_col: str = "url_hash") -> DataFrame:
-    """Fused membership test + insert: ONE cogrouped pass per wave where
-    the split ops take two (each pass = shuffle both sides + an Arrow
-    round-trip). Emits a UNION-shaped frame the caller persists and
-    filters:
+    """Fused membership test + insert (``sharded.probe_update``): ONE
+    cogrouped pass per wave where the split ops take two. The
+    ``row_kind='v'`` rows are tested against the PRE-batch bitset
+    (identical to ``bloom_test``); the ``row_kind='s'`` rows carry every
+    candidate's bits set. Setting bits for a maybe-seen candidate is
+    bitwise idempotent, so the resulting bitset equals
+    test-then-insert-novel exactly; ``n_inserted`` counts bloom-fresh
+    candidates (in hybrid mode the split pipeline counted fresh +
+    FP-confirmed-novel — a ≤FP-rate difference in the METADATA counter
+    only, never in membership)."""
 
-    - ``row_kind='v'``: one row per candidate — (hash_col, maybe_seen),
-      tested against the PRE-batch bitset (identical to ``bloom_test``).
-    - ``row_kind='s'``: one row per existing shard — (shard_id, bitset,
-      n_inserted) with every candidate's bits set. Setting bits for a
-      maybe-seen candidate is bitwise idempotent, so the resulting
-      bitset equals test-then-insert-novel exactly; ``n_inserted``
-      counts bloom-fresh candidates (in hybrid mode the split pipeline
-      counted fresh + FP-confirmed-novel — a ≤FP-rate difference in the
-      METADATA counter only, never in membership).
+    def test_insert(payload: bytes, hashes: np.ndarray) -> tuple[np.ndarray, bytes]:
+        bitset = np.frombuffer(payload, dtype=np.uint8).copy()
+        pos = _positions(hashes, spec)
+        seen = _test_bits(bitset, pos)
+        _set_bits(bitset, pos)
+        return seen, bitset.tobytes()
 
-    Shards with no candidates pass through unchanged; shards are never
-    invented for stray shard_ids (candidates there get maybe_seen=False
-    and no shard row — same contract as the split ops)."""
-    from pyspark.sql import types as T
-
-    cand = with_shard_id(candidates.select(hash_col), spec, hash_col)
-    out_schema = T.StructType(
-        [
-            T.StructField("row_kind", T.StringType(), False),
-            T.StructField("shard_id", T.IntegerType(), True),
-            T.StructField("bitset", T.BinaryType(), True),
-            T.StructField("n_inserted", T.LongType(), True),
-            T.StructField(hash_col, T.LongType(), True),
-            T.StructField("maybe_seen", T.BooleanType(), True),
-        ]
-    )
-    empty = pd.DataFrame(
-        {
-            "row_kind": pd.Series(dtype="object"),
-            "shard_id": pd.Series(dtype="int32"),
-            "bitset": pd.Series(dtype="object"),
-            "n_inserted": pd.Series(dtype="int64"),
-            hash_col: pd.Series(dtype="int64"),
-            "maybe_seen": pd.Series(dtype="object"),
-        }
-    )
-
-    def per_shard(key, shard_pdf: pd.DataFrame, cand_pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        if cand_pdf.empty and shard_pdf.empty:
-            return empty
-        if cand_pdf.empty:
-            return pd.DataFrame(
-                {
-                    "row_kind": ["s"],
-                    "shard_id": [int(shard_pdf["shard_id"].iloc[0])],
-                    "bitset": [shard_pdf["bitset"].iloc[0]],
-                    "n_inserted": [int(shard_pdf["n_inserted"].iloc[0])],
-                    hash_col: [None],
-                    "maybe_seen": [None],
-                }
-            )
-        hashes = cand_pdf[hash_col].to_numpy()
-        if shard_pdf.empty:
-            seen = np.zeros(len(hashes), dtype=bool)
-        else:
-            bitset = np.frombuffer(shard_pdf["bitset"].iloc[0], dtype=np.uint8).copy()
-            pos = _positions(hashes, spec)
-            seen = _test_bits(bitset, pos)
-            _set_bits(bitset, pos)
-            out.append(
-                pd.DataFrame(
-                    {
-                        "row_kind": ["s"],
-                        "shard_id": [int(shard_pdf["shard_id"].iloc[0])],
-                        "bitset": [bitset.tobytes()],
-                        "n_inserted": [
-                            int(shard_pdf["n_inserted"].iloc[0]) + int((~seen).sum())
-                        ],
-                        hash_col: [None],
-                        "maybe_seen": [None],
-                    }
-                )
-            )
-        out.append(
-            pd.DataFrame(
-                {
-                    "row_kind": "v",
-                    "shard_id": None,
-                    "bitset": None,
-                    "n_inserted": None,
-                    hash_col: hashes,
-                    "maybe_seen": seen,
-                }
-            )
-        )
-        return pd.concat(out, ignore_index=True)
-
-    return (
-        shards.groupBy("shard_id")
-        .cogroup(cand.groupBy("shard_id"))
-        .applyInPandas(per_shard, schema=out_schema)
+    return sharded.probe_update(
+        candidates, shards, schemas.SEEN_SHARDS, spec.n_shards, test_insert, hash_col
     )
 
 

@@ -1,7 +1,8 @@
 """Sharded cuckoo-filter URL-seen set — the deletable alternative to the
 bloom filter (operators/bloom.py), behind the same DataFrame interface:
 shards are rows ``(shard_id, table binary, n_inserted)``, test/insert/
-delete run as cogrouped ``applyInPandas`` with one Arrow batch per shard.
+delete run through the shared shard layer (operators/sharded.py) as
+cogrouped ``applyInPandas`` with one Arrow batch per shard.
 
 Why cuckoo (BASELINE.json north-star names "bloom/cuckoo"): a bloom
 filter cannot delete — re-admitting a URL after a permanent-failure
@@ -32,12 +33,10 @@ import math
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from tbbid_scrapy_spark.operators import bloom
+from tbbid_scrapy_spark.operators import bloom, sharded
 
 SLOTS = 4
 _MIX = np.uint64(0x5BD1E995)
@@ -81,6 +80,12 @@ class CuckooSpec:
             f":slots={SLOTS}:fp=16"
         )
 
+    def empty(self, spark: SparkSession) -> DataFrame:
+        return empty_cuckoo_shards(spark, self)
+
+    def insert(self, keys: DataFrame, shards: DataFrame) -> DataFrame:
+        return cuckoo_insert(keys, shards, self)
+
 
 # Version of CUCKOO's own fingerprint/bucket derivation (_fp_and_buckets:
 # splitmix64 remix, fp = bits 48-63 with the 0→1 remap, bucket-2 = b1 XOR
@@ -122,27 +127,17 @@ def _alt_bucket(i: int, fp: int, n_buckets: int) -> int:
 
 
 def empty_cuckoo_shards(spark: SparkSession, spec: CuckooSpec) -> DataFrame:
-    zeros = bytes(spec.buckets_per_shard * SLOTS * 2)
-    return spark.range(spec.n_shards).select(
-        F.col("id").cast("int").alias("shard_id"),
-        F.lit(zeros).alias("table"),
-        F.lit(0).cast("long").alias("n_inserted"),
+    return sharded.empty_table(
+        spark, spec.n_shards, SHARDS_SCHEMA, spec.buckets_per_shard * SLOTS * 2
     )
 
 
-def _with_shard(df: DataFrame, spec: CuckooSpec, hash_col: str) -> DataFrame:
-    return df.withColumn(
-        "shard_id", F.pmod(F.col(hash_col), F.lit(spec.n_shards)).cast("int")
-    )
-
-
-def _table_of(shard_pdf: pd.DataFrame, spec: CuckooSpec,
-              copy: bool = True) -> np.ndarray:
+def _table_of(payload: bytes, spec: CuckooSpec, copy: bool = True) -> np.ndarray:
     """Shard bytes → (buckets, SLOTS) uint16 view. ``copy=False`` returns
     the read-only frombuffer view — the membership test never mutates,
     and at the 10^10 spec (~23 MB/shard) an unconditional memcpy per
     Arrow batch is pure waste; insert/delete MUST copy (they mutate)."""
-    view = np.frombuffer(shard_pdf["table"].iloc[0], dtype=np.uint16).reshape(
+    view = np.frombuffer(payload, dtype=np.uint16).reshape(
         spec.buckets_per_shard, SLOTS
     )
     return view.copy() if copy else view
@@ -151,30 +146,15 @@ def _table_of(shard_pdf: pd.DataFrame, spec: CuckooSpec,
 def cuckoo_test(candidates: DataFrame, shards: DataFrame, spec: CuckooSpec,
                 hash_col: str = "url_hash") -> DataFrame:
     """Candidates + ``maybe_seen`` (FP possible at spec.fp_rate, no FN)."""
-    cand = _with_shard(candidates, spec, hash_col)
-    out_schema = T.StructType(
-        list(cand.schema.fields) + [T.StructField("maybe_seen", T.BooleanType(), False)]
-    )
-    cols = [f.name for f in cand.schema.fields]
 
-    def per_shard(key, cand_pdf: pd.DataFrame, shard_pdf: pd.DataFrame) -> pd.DataFrame:
-        if cand_pdf.empty:
-            return pd.DataFrame(columns=cols + ["maybe_seen"])
-        if shard_pdf.empty:
-            return cand_pdf.assign(maybe_seen=False)
-        table = _table_of(shard_pdf, spec, copy=False)  # read-only probe
-        fp, i1, i2 = _fp_and_buckets(cand_pdf[hash_col].to_numpy(), spec.buckets_per_shard)
-        hit = (table[i1] == fp[:, None]).any(axis=1) | (
+    def test(payload: bytes, hashes: np.ndarray) -> np.ndarray:
+        table = _table_of(payload, spec, copy=False)  # read-only probe
+        fp, i1, i2 = _fp_and_buckets(hashes, spec.buckets_per_shard)
+        return (table[i1] == fp[:, None]).any(axis=1) | (
             table[i2] == fp[:, None]
         ).any(axis=1)
-        return cand_pdf.assign(maybe_seen=hit)
 
-    return (
-        cand.groupBy("shard_id")
-        .cogroup(shards.groupBy("shard_id"))
-        .applyInPandas(per_shard, schema=out_schema)
-        .drop("shard_id")
-    )
+    return sharded.probe(candidates, shards, SHARDS_SCHEMA, spec.n_shards, test, hash_col)
 
 
 def _insert_one(table: np.ndarray, fp: int, i1: int, i2: int,
@@ -206,36 +186,19 @@ def cuckoo_insert(candidates: DataFrame, shards: DataFrame, spec: CuckooSpec,
     walk is per-item Python inside the Arrow batch — the price of
     deletability; bloom stays the insert-throughput path."""
 
-    cand = _with_shard(candidates.select(hash_col), spec, hash_col)
-
-    def per_shard(key, shard_pdf: pd.DataFrame, cand_pdf: pd.DataFrame) -> pd.DataFrame:
-        if shard_pdf.empty:
-            return shard_pdf.iloc[0:0]  # shard table must pre-exist
-        if cand_pdf.empty:
-            return shard_pdf[["shard_id", "table", "n_inserted"]]
-        table = _table_of(shard_pdf, spec)
-        fp, i1, i2 = _fp_and_buckets(cand_pdf[hash_col].to_numpy(), spec.buckets_per_shard)
+    def insert(payload: bytes, hashes: np.ndarray, shard_id: int, n: int):
+        table = _table_of(payload, spec)
+        fp, i1, i2 = _fp_and_buckets(hashes, spec.buckets_per_shard)
         for k in range(len(fp)):
             if not _insert_one(table, int(fp[k]), int(i1[k]), int(i2[k]),
                                spec.buckets_per_shard):
                 raise RuntimeError(
-                    f"cuckoo shard {int(key[0])} full at "
-                    f"{int(shard_pdf['n_inserted'].iloc[0]) + k} items — "
+                    f"cuckoo shard {shard_id} full at {n + k} items — "
                     "resize with CuckooSpec.for_capacity"
                 )
-        return pd.DataFrame(
-            {
-                "shard_id": [int(key[0])],
-                "table": [table.tobytes()],
-                "n_inserted": [int(shard_pdf["n_inserted"].iloc[0]) + len(fp)],
-            }
-        )
+        return table.tobytes(), n + len(fp)
 
-    return (
-        shards.groupBy("shard_id")
-        .cogroup(cand.groupBy("shard_id"))
-        .applyInPandas(per_shard, schema=SHARDS_SCHEMA)
-    )
+    return sharded.update(candidates, shards, SHARDS_SCHEMA, spec.n_shards, insert, hash_col)
 
 
 def cuckoo_delete(candidates: DataFrame, shards: DataFrame, spec: CuckooSpec,
@@ -245,15 +208,10 @@ def cuckoo_delete(candidates: DataFrame, shards: DataFrame, spec: CuckooSpec,
     key is a no-op on the table (it can, at fp_rate, remove a colliding
     entry — the documented cuckoo semantics: only delete what you
     inserted)."""
-    cand = _with_shard(candidates.select(hash_col), spec, hash_col)
 
-    def per_shard(key, shard_pdf: pd.DataFrame, cand_pdf: pd.DataFrame) -> pd.DataFrame:
-        if shard_pdf.empty:
-            return shard_pdf.iloc[0:0]
-        if cand_pdf.empty:
-            return shard_pdf[["shard_id", "table", "n_inserted"]]
-        table = _table_of(shard_pdf, spec)
-        fp, i1, i2 = _fp_and_buckets(cand_pdf[hash_col].to_numpy(), spec.buckets_per_shard)
+    def delete(payload: bytes, hashes: np.ndarray, shard_id: int, n: int):
+        table = _table_of(payload, spec)
+        fp, i1, i2 = _fp_and_buckets(hashes, spec.buckets_per_shard)
         removed = 0
         for k in range(len(fp)):
             for i in (int(i1[k]), int(i2[k])):
@@ -262,16 +220,6 @@ def cuckoo_delete(candidates: DataFrame, shards: DataFrame, spec: CuckooSpec,
                     table[i][slots[0]] = 0
                     removed += 1
                     break
-        return pd.DataFrame(
-            {
-                "shard_id": [int(key[0])],
-                "table": [table.tobytes()],
-                "n_inserted": [int(shard_pdf["n_inserted"].iloc[0]) - removed],
-            }
-        )
+        return table.tobytes(), n - removed
 
-    return (
-        shards.groupBy("shard_id")
-        .cogroup(cand.groupBy("shard_id"))
-        .applyInPandas(per_shard, schema=SHARDS_SCHEMA)
-    )
+    return sharded.update(candidates, shards, SHARDS_SCHEMA, spec.n_shards, delete, hash_col)

@@ -638,50 +638,6 @@ def simhash_shingle(documents: DataFrame, n: int = 3,
     )
 
 
-def simhash_pairs(documents: DataFrame, max_hamming: int = 3,
-                  n_bands: int = 4) -> DataFrame:
-    """Near-dup pairs with hamming(simhash_a, simhash_b) ≤ k.
-
-    Candidates by band equality (pigeonhole: distance ≤ n_bands-1 ⇒ at
-    least one band equal — pick n_bands > max_hamming for a recall
-    GUARANTEE, fewer bands for cheaper probabilistic recall), verified
-    with bit_count(a XOR b). The band join replaces the quadratic
-    all-pairs scan with n_bands bucket joins."""
-    assert 64 % n_bands == 0, "n_bands must divide 64"
-    width = 64 // n_bands
-    mask = (1 << width) - 1
-    sh = simhash(documents)
-    bands = sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftrightunsigned(F.col("simhash"), width * i)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("chunk"),
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("bc"),
-    ).select("doc_id", "simhash", "bc.band", "bc.chunk")
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(b, on=["band", "chunk"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
 def simhash_rotated_band_candidates(sh: DataFrame, width: int = 8,
                                     offsets: tuple[int, ...] = (0, 2, 4, 6),
                                     max_hamming: int | None = None) -> DataFrame:

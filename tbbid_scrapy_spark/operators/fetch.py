@@ -16,17 +16,21 @@ Two transports ship:
   pages serialized as JSON bodies), byte-equivalent to the equi-join
   fetch: missing page → 404, ``attempts < fail_first`` → 503, else 200.
   Crawl parity vs the single-threaded simulator is asserted with this
-  transport swapped in (tests/test_crawl_equivalence.py).
+  transport swapped in (tests/test_fetch_operator.py).
 - ``HttpTransport`` — a REAL socket fetch (stdlib urllib; no third-party
   deps), with timeout and status mapping. Exercised in tests against a
   local ``http.server`` serving the same JSON bodies, so the operator is
   real code, not prose — a deployment points it at real hosts and the
   wave loop, politeness, retries and parsing are unchanged.
 
+The crawl engine runs this operator exactly when a transport is passed
+(``CrawlEngine(..., transport=...)``); without one it fetches with the
+sandbox equi-join.
+
 Partitioning note: the batch arrives range-partitioned by global fetch
 order (dense_index), which interleaves hosts across tasks; for
-connection-pool affinity a deployment inserts ``salted_repartition``
-(operators/frontier.py) on (host, salt) before this stage.
+connection-pool affinity a deployment repartitions on
+(host, url_hash mod salt) before this stage.
 """
 
 from __future__ import annotations

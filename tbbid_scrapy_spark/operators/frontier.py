@@ -1,19 +1,23 @@
-"""Frontier operators: dedup, robots enforcement, politeness budgeting,
-priority-ranked wave selection, skew salting.
+"""Frontier operators: robots enforcement, politeness budgeting,
+priority-ranked wave selection with host-skew salting.
 
 Maps the reference's implicit Scrapy scheduler semantics
 (/root/reference/xizang/settings.py:23-30 concurrency + delay;
 SURVEY.md §2.11) onto declarative DataFrame ops:
 
-- seen-dedup       → left_anti join (exact) / bloom prefilter (scale)
 - robots           → broadcast anti-join on (host, path_prefix, allow)
 - politeness       → window rank per host, keep rank ≤ budget_per_wave
 - priority queue   → the same window's ORDER BY (priority desc, then
                      discovery order) — Scrapy's priority queue semantics
                      as a rank expression, fully shuffle-parallel
-- host skew        → salted repartition before the parse stage so one hot
-                     host (≥80% of URLs in the fixture) spreads over all
+- host skew        → the rank first cuts a local top-budget per
+                     (host, url_hash mod salt) bucket, so one hot host
+                     (≥80% of URLs in the fixture) spreads over all
                      executor cores instead of one task
+
+Seen-set dedup lives in the crawl wave (plans/crawl.py): a left_anti
+join against the exact seen table, or the sharded filters in
+operators/bloom.py and operators/cuckoo.py.
 """
 
 from __future__ import annotations
@@ -36,25 +40,6 @@ from pyspark.sql import functions as F
 # releases its cache entry with it.
 _ROBOTS_PER_HOST: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
 _POLITENESS_BUDGETS: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
-
-
-def dedup_exact(candidates: DataFrame, seen: DataFrame,
-                hash_col: str = "url_hash") -> DataFrame:
-    """candidates − seen via left_anti on the 64-bit hash, after in-batch
-    dropDuplicates (a URL discovered twice in one wave enters once —
-    matching the reference dupefilter, which fingerprints at enqueue time).
-    In-batch ties resolve to the FIRST discovery (min seq), matching the
-    single-threaded reference: first enqueue wins."""
-    order_col = "seq" if "seq" in candidates.columns else hash_col
-    payload = [c for c in candidates.columns if c not in (hash_col, order_col)]
-    # groupBy+min(struct) instead of a window: map-side partial combine,
-    # no per-group sort — first enqueue (min order_col) wins
-    in_batch = (
-        candidates.groupBy(hash_col)
-        .agg(F.min(F.struct(F.col(order_col), *[F.col(c) for c in payload])).alias("_f"))
-        .select(hash_col, "_f.*")
-    )
-    return in_batch.join(seen.select(hash_col), on=hash_col, how="left_anti")
 
 
 def apply_robots_joined(frontier: DataFrame, robots: DataFrame) -> DataFrame:
@@ -186,15 +171,3 @@ def _rank_cols(salt_buckets: int):
     local_w = Window.partitionBy("host", "_salt").orderBy(*order)
     global_w = Window.partitionBy("host").orderBy(*order)
     return salt, F.row_number().over(local_w), F.row_number().over(global_w)
-
-
-def salted_repartition(df: DataFrame, n_partitions: int, salt_buckets: int = 64,
-                       host_col: str = "host", hash_col: str = "url_hash") -> DataFrame:
-    """Spread a skewed host across ``salt_buckets`` partitions: partition
-    key = (host, url_hash mod salt). With ≥80% of URLs on one host
-    (fixture requirement), an unsalted repartition(host) puts 80% of the
-    fetch/parse work in one task; salting bounds any host to
-    1/salt_buckets of a partition's share."""
-    return df.repartition(
-        n_partitions, F.col(host_col), F.pmod(F.col(hash_col), F.lit(salt_buckets))
-    )

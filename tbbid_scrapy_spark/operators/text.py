@@ -1,5 +1,5 @@
 """Text-analysis operators over the ``documents`` table — language ID,
-quality scoring, token counting, document fingerprinting. All pure
+quality scoring, tokenization, the corpus filter. All pure
 Catalyst expressions (regex / higher-order array functions); zero Python
 in the hot path, so they run at scan speed on 100 TB.
 """
@@ -160,14 +160,6 @@ def words_gate(col: Column, min_words: int, lang: str | None) -> Column:
     return F.exists(F.array(F.struct(words_of(col).alias("w"))), _inner)
 
 
-def token_count(col: Column) -> Column:
-    """Whitespace-word count + regex token count in one struct."""
-    return F.struct(
-        F.size(F.split(F.trim(col), f"{WS_CLASS}+")).alias("words"),
-        F.size(tokens(col)).alias("tokens"),
-    )
-
-
 def quality_features(col: Column, words: "Column | str | None" = None) -> dict[str, Column]:
     """Length / punctuation / stopword-ratio features (the standard
     pretraining-corpus quality heuristics).
@@ -267,44 +259,6 @@ def lang_id(col: Column) -> Column:
         ),
         1,
     )
-
-
-def fingerprint(col: Column, n: int = 4) -> Column:
-    """Order-sensitive 64-bit document fingerprint: xxhash64 chain over
-    word 4-gram hashes (a rolling-hash analog, built from sortable
-    array ops — min/max/first of gram hashes folded with length)."""
-    toks = F.split(F.trim(F.lower(col)), f"{WS_CLASS}+")
-    k = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0))
-    gram_hashes = F.transform(
-        F.sequence(F.lit(0), F.greatest(k - 1, F.lit(0))),
-        lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i + F.lit(1), F.lit(n))), i),
-    )
-    folded = F.aggregate(
-        gram_hashes,
-        F.lit(0).cast("long"),
-        lambda acc, h: F.xxhash64(acc, h),
-    )
-    return F.when(k > 0, folded).otherwise(F.xxhash64(F.concat_ws(" ", toks)))
-
-
-def with_text_analysis(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """All analyses over one scan, with the token array and the
-    language argmax each materialized once (words_of/lang_best — the
-    single-projection form re-tokenized per feature)."""
-    c = F.col(text_col)
-    staged = documents.withColumn("_words", words_of(c)).withColumn(
-        "_best", lang_best("_words")
-    )
-    feats = quality_features(c, words="_words")
-    return staged.withColumns(
-        {
-            **feats,
-            "quality": quality_score(c, words="_words"),
-            "lang_pred": lang_from_best(F.col("_best")),
-            "n_tokens": F.size(tokens(c)),
-            "fingerprint": fingerprint(c),
-        }
-    ).drop("_words", "_best")
 
 
 def corpus_keep(documents: DataFrame, min_words: int = 20,

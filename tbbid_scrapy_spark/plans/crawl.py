@@ -41,25 +41,15 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tbbid_scrapy_spark.fixtures.sitegen import PRIORITY_BY_KIND
 from tbbid_scrapy_spark.functions.urls import with_url_norm
 from tbbid_scrapy_spark.operators import frontier as fops
-from tbbid_scrapy_spark.operators.bloom import (
-    BloomSpec,
-    bloom_insert,
-    bloom_test_insert,
-    empty_shards,
-)
-from tbbid_scrapy_spark.operators.cuckoo import (
-    CuckooSpec,
-    cuckoo_insert,
-    cuckoo_test,
-    empty_cuckoo_shards,
-)
+from tbbid_scrapy_spark.operators.bloom import BloomSpec, bloom_test_insert
+from tbbid_scrapy_spark.operators.cuckoo import CuckooSpec, cuckoo_test
 from tbbid_scrapy_spark.plans.seq import dense_index
 from tbbid_scrapy_spark.sources.sink import Catalog, DeltaTable, SnapshotTable
 
@@ -154,6 +144,38 @@ EXTRACTED_SCHEMA = T.StructType(
 )
 
 
+# Adaptive wave parallelism: explicit repartitions (dense index, link
+# spread, shuffle width) are sized to ceil(rows / MIN_ROWS_PER_TASK),
+# capped at the cluster's defaultParallelism — the same policy AQE
+# applies to shuffle reads, extended to the repartitions AQE can't
+# touch. At 10^10-URL waves this saturates to full parallelism; at
+# trickle waves (seed ramp-up, politeness-starved hosts) it stops
+# paying ~1 s/task of scheduling+shuffle-file overhead for 100-row
+# stages (measured: 32-task stages with 74 KB of shuffle spent 20 s
+# in shuffle-write bookkeeping alone). Value from an interleaved A/B at
+# a 44k-page site, local[32]: 2048 → 865-918 URLs/s vs always full
+# width → 372-638 vs 8192 → 548 (starved).
+MIN_ROWS_PER_TASK = 2048
+
+# Canonicalizer for children links, chosen per wave: the JVM+Arrow
+# hybrid (functions/urls.with_url_norm mode='hybrid') once the pending
+# estimate clears HYBRID_CANON_MIN_ROWS — wide waves amortize the
+# hybrid's split-union recompute and drop Python from the identity hot
+# path — and the pure Arrow UDF below it (interleaved A/B: 6k-URL waves
+# 835 vs 545 URLs/s for python vs hybrid; 8M-URL wave 160k vs ~140k the
+# other way).
+HYBRID_CANON_MIN_ROWS = 100_000
+
+# seen_mode → the CrawlConfig field holding its approximate-structure
+# spec (None: the exact seen table alone)
+_SPEC_FIELD = {
+    "exact": None,
+    "bloom": "bloom_spec",
+    "hybrid": "bloom_spec",
+    "cuckoo": "cuckoo_spec",
+}
+
+
 @dataclass
 class CrawlConfig:
     max_waves: int = 100
@@ -165,13 +187,6 @@ class CrawlConfig:
     bloom_spec: BloomSpec | None = None
     cuckoo_spec: CuckooSpec | None = None
     checkpoint_dir: str | None = None
-    salt_buckets: int = 64
-    num_partitions: int | None = None
-    # fetch_mode 'join': sandbox fetch = equi-join against the synthetic
-    # site table. 'mapinpandas': the batch-transport operator
-    # (operators/fetch.py) — identical row contract; parity-tested with
-    # the synthetic transport, deployable with HttpTransport.
-    fetch_mode: str = "join"
     # seq_mode 'packed': children enqueue keys are computed per-row as
     # (wave+1)<<47 | parent_pos<<17 | (eff_pos + 2^16) — order-isomorphic
     # to the simulator's dense counter (scheduling only ever compares seq,
@@ -179,27 +194,6 @@ class CrawlConfig:
     # ≤32766 waves, <2^30 fetches/wave, <2^16 spans/page — beyond them use
     # 'dense' (two-pass distributed dense index).
     seq_mode: str = "packed"
-    # Adaptive wave parallelism: explicit repartitions (dense index, link
-    # spread, shuffle width) are sized to ceil(rows / min_rows_per_task),
-    # capped at num_partitions/cluster parallelism — the same policy AQE
-    # applies to shuffle reads, extended to the repartitions AQE can't
-    # touch. At 10^10-URL waves this saturates to full parallelism; at
-    # trickle waves (seed ramp-up, politeness-starved hosts) it stops
-    # paying ~1 s/task of scheduling+shuffle-file overhead for 100-row
-    # stages (measured: 32-task stages with 74 KB of shuffle spent 20 s
-    # in shuffle-write bookkeeping alone). 0 disables (always full width).
-    # Default from an interleaved A/B at a 44k-page site, local[32]:
-    # 2048 → 865-918 URLs/s vs 0 → 372-638 vs 8192 → 548 (starved).
-    min_rows_per_task: int = 2048
-    # Canonicalizer for children links: 'adaptive' uses the JVM+Arrow
-    # hybrid (functions/urls.with_url_norm mode='hybrid') once the
-    # pending estimate clears hybrid_canon_min_rows — wide waves amortize
-    # the hybrid's split-union recompute and drop Python from the
-    # identity hot path — and the pure Arrow UDF below it (interleaved
-    # A/B: 6k-URL waves 835 vs 545 URLs/s for python vs hybrid; 8M-URL
-    # wave 160k vs ~140k the other way). 'hybrid'/'python' pin one mode.
-    canonicalizer: str = "adaptive"
-    hybrid_canon_min_rows: int = 100_000
 
 
 @_functools.lru_cache(maxsize=None)
@@ -243,6 +237,24 @@ def _union(parts: list[DataFrame]) -> DataFrame:
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
+
+
+def _seen_spec(cfg: CrawlConfig) -> BloomSpec | CuckooSpec | None:
+    """The approximate seen structure's spec, decided once per engine:
+    None for exact, the bloom spec for bloom and hybrid, the cuckoo spec
+    for cuckoo. A bad config raises here, before any wave runs, not
+    mid-wave on a missing spec. Reads only seen_mode and the specs —
+    never ``max_waves``, whose reads mark wave boundaries for
+    instrumented configs."""
+    if cfg.seen_mode not in _SPEC_FIELD:
+        raise ValueError(
+            f"unknown seen_mode {cfg.seen_mode!r}; expected one of {list(_SPEC_FIELD)}"
+        )
+    name = _SPEC_FIELD[cfg.seen_mode]
+    spec = None if name is None else getattr(cfg, name)
+    if name is not None and spec is None:
+        raise ValueError(f"seen_mode={cfg.seen_mode!r} needs CrawlConfig.{name}")
+    return spec
 
 
 @dataclass
@@ -306,7 +318,10 @@ class CrawlState:
 
 class CrawlEngine:
     """Drives waves over a synthetic site table (schemas.DOCUMENTS +
-    fail_first int)."""
+    fail_first int). With ``transport=`` (operators/fetch.py — e.g.
+    HttpTransport, or SyntheticTransport over the fixture site) the
+    fetch step is the batch-transport mapInPandas operator instead of
+    the sandbox equi-join; both share one row contract."""
 
     def __init__(
         self,
@@ -324,7 +339,12 @@ class CrawlEngine:
         self.seeds = seeds
         self.politeness = politeness
         self.robots = robots
-        self._transport_obj = transport
+        self.transport = transport
+        self.seen_spec = _seen_spec(self.config)
+        if self.config.seq_mode not in ("packed", "dense"):
+            raise ValueError(
+                f"unknown seq_mode {self.config.seq_mode!r}; expected 'packed' or 'dense'"
+            )
         self._snapshots: dict[str, SnapshotTable] = {}
         self._deltas: dict[str, DeltaTable] = {}
         self._catalog: Catalog | None = None
@@ -337,28 +357,10 @@ class CrawlEngine:
                 self._deltas[name] = DeltaTable(spark, f"{ck}/{name}")
 
     def _sized_parts(self, rows: int) -> int:
-        """Partition count for ~``rows`` rows: ceil(rows/min_rows_per_task)
-        clamped to [1, configured parallelism]."""
-        cfg_n = self.config.num_partitions or self.spark.sparkContext.defaultParallelism
-        if not self.config.min_rows_per_task:
-            return cfg_n
-        return max(1, min(cfg_n, 1 + (max(rows, 1) - 1) // self.config.min_rows_per_task))
-
-    def _transport(self):
-        """Transport for fetch_mode='mapinpandas'. Defaults to the
-        synthetic transport over the fixture site (fixture-scale only —
-        the page map rides the task closure); pass transport= (e.g.
-        HttpTransport) for real fetching."""
-        if self._transport_obj is None:
-            from tbbid_scrapy_spark.operators.fetch import (
-                SyntheticTransport,
-                site_to_transport_pages,
-            )
-
-            self._transport_obj = SyntheticTransport(
-                site_to_transport_pages(self.site.collect())
-            )
-        return self._transport_obj
+        """Partition count for ~``rows`` rows: ceil(rows/MIN_ROWS_PER_TASK)
+        clamped to [1, defaultParallelism]."""
+        width = self.spark.sparkContext.defaultParallelism
+        return max(1, min(width, 1 + (max(rows, 1) - 1) // MIN_ROWS_PER_TASK))
 
     # -- state bootstrap ---------------------------------------------------
 
@@ -398,19 +400,7 @@ class CrawlEngine:
             "seq",
         )
         seen0 = f0.select("url_hash", "url_norm")
-        shards0 = None
-        if self.config.seen_mode in ("bloom", "hybrid"):
-            shards0 = bloom_insert(
-                f0.select("url_hash"),
-                empty_shards(spark, self.config.bloom_spec),
-                self.config.bloom_spec,
-            )
-        elif self.config.seen_mode == "cuckoo":
-            shards0 = cuckoo_insert(
-                f0.select("url_hash"),
-                empty_cuckoo_shards(spark, self.config.cuckoo_spec),
-                self.config.cuckoo_spec,
-            )
+        shards0 = None if self.seen_spec is None else self._rebuild_shards(seen0)
         done0 = spark.createDataFrame([], f0.schema)
         log0 = spark.createDataFrame([], FETCH_LOG_SCHEMA)
         ex0 = spark.createDataFrame([], EXTRACTED_SCHEMA)
@@ -438,30 +428,17 @@ class CrawlEngine:
         change OR a pre-stamp manifest — means the persisted bitsets would
         return silent false negatives, so the shards are rebuilt from the
         seen table instead of read back."""
-        if self.config.seen_mode in ("bloom", "hybrid"):
-            return self.config.bloom_spec.format_tag()
-        if self.config.seen_mode == "cuckoo":
-            return self.config.cuckoo_spec.format_tag()
-        return None
+        return None if self.seen_spec is None else self.seen_spec.format_tag()
 
     def _rebuild_shards(self, seen: DataFrame) -> DataFrame:
-        """Reconstruct the approximate seen structure from the exact seen
-        table (the format-independent source of truth): every committed
-        url_hash is re-inserted into fresh shards under the CURRENT
-        format. O(|seen|) once at resume; the next commit persists the
-        rebuilt shards under the new tag."""
-        spark = self.spark
-        if self.config.seen_mode == "cuckoo":
-            return cuckoo_insert(
-                seen.select("url_hash"),
-                empty_cuckoo_shards(spark, self.config.cuckoo_spec),
-                self.config.cuckoo_spec,
-            )
-        return bloom_insert(
-            seen.select("url_hash"),
-            empty_shards(spark, self.config.bloom_spec),
-            self.config.bloom_spec,
-        )
+        """Build the approximate seen structure from an exact seen table
+        (the format-independent source of truth): every url_hash is
+        inserted into fresh shards under the CURRENT format. Builds the
+        seed state's shards, and rebuilds at resume on a format mismatch
+        — O(|seen|) once; the next commit persists the rebuilt shards
+        under the new tag."""
+        spec = self.seen_spec
+        return spec.insert(seen.select("url_hash"), spec.empty(self.spark))
 
     def _delta_parts(self, st: CrawlState) -> dict[str, list[DataFrame]]:
         return {
@@ -544,8 +521,7 @@ class CrawlEngine:
         n = (
             self._sized_parts(st.pending_est)
             if st.pending_est is not None
-            else self.config.num_partitions
-            or self.spark.sparkContext.defaultParallelism
+            else self.spark.sparkContext.defaultParallelism
         )
 
         def _ckpt_last(parts: list[DataFrame], nparts: int) -> list[DataFrame]:
@@ -637,46 +613,27 @@ class CrawlEngine:
 
     # -- one wave ------------------------------------------------------------
 
-    def _ticker(self, w):
-        """CRAWL_DEBUG=1 per-step wave timing printer (no-op otherwise)."""
-        import os as _os
-
-        _dbg = _os.environ.get("CRAWL_DEBUG")
-        _t = [time.monotonic()]
-
-        def _tick(label):
-            if _dbg:
-                now = time.monotonic()
-                print(f"# wave {w} {label}: {now - _t[0]:.2f}s", flush=True)
-                _t[0] = now
-
-        return _tick
-
     def _run_wave(self, st: CrawlState) -> tuple[CrawlState, int]:
         cfg = self.config
         w = st.wave
         t0 = time.monotonic()
 
-        _tick = self._ticker(w)
-        # adaptive wave parallelism (see CrawlConfig.min_rows_per_task):
-        # batch-side ops sized to the pending estimate, link-side ops get
-        # 4x headroom for fan-out; shuffle width follows the wave size so
+        # adaptive wave parallelism (see MIN_ROWS_PER_TASK): batch-side
+        # ops sized to the pending estimate, link-side ops get 4x
+        # headroom for fan-out; shuffle width follows the wave size so
         # AQE's read-side coalescing is matched by the write side too
-        cfg_n = cfg.num_partitions or self.spark.sparkContext.defaultParallelism
-        if cfg.min_rows_per_task and st.pending_est is not None:
+        width = self.spark.sparkContext.defaultParallelism
+        if st.pending_est is not None:
             wave_parts = self._sized_parts(st.pending_est)
-            links_parts = min(cfg_n, wave_parts * 4)
+            links_parts = min(width, wave_parts * 4)
             self.spark.conf.set("spark.sql.shuffle.partitions", str(links_parts))
         else:
-            wave_parts = links_parts = cfg_n
+            wave_parts = links_parts = width
 
         # st.pending IS the live frontier — no state filter, no settled rows
         # in any wave join
         pending = st.pending
-        ranked = fops.politeness_rank(
-            pending, self.politeness, cfg.default_budget,
-            salt_buckets=cfg.salt_buckets,
-        )
+        ranked = fops.politeness_rank(pending, self.politeness, cfg.default_budget)
         # global fetch order; distributed dense index (no single-task window)
         batch, n_batch, h_batch = dense_index(
             ranked,
@@ -685,7 +642,6 @@ class CrawlEngine:
             0,
             wave_parts,
         )
-        _tick("dense_index(batch)")
         if n_batch == 0:
             if h_batch is not None:
                 h_batch.unpersist()
@@ -709,14 +665,13 @@ class CrawlEngine:
 
     def _run_wave_body(self, st, w, t0, cfg, batch, n_batch, links_parts,
                        scratch):
-        _tick = self._ticker(w)
         # NOTE: no extra repartition here — dense_index range-partitioned
         # the batch by global fetch order, which interleaves hosts evenly,
         # so the hot host is already spread across all tasks for the
-        # fetch/parse stage (salted_repartition remains available for
-        # host-affine stages like real connection-pooled HTTP fetching).
+        # fetch/parse stage (a host-affine stage, like connection-pooled
+        # HTTP fetching, would repartition on (host, url_hash mod salt)).
 
-        if cfg.fetch_mode == "mapinpandas":
+        if self.transport is not None:
             # batch-transport fetch (operators/fetch.py): one transport
             # attempt per row in Arrow batches, JVM-side body parse —
             # the same (status, _doc_kind, spans) contract as the join
@@ -726,7 +681,7 @@ class CrawlEngine:
             )
 
             fetched = parse_fetched_body(
-                fetch_map_in_pandas(batch, self._transport())
+                fetch_map_in_pandas(batch, self.transport)
             ).persist()
             scratch.append(fetched)
         else:
@@ -837,16 +792,11 @@ class CrawlEngine:
                 "child_url", "/corp/persondetail", "/corp/listpersonperformance"
             ),
         )
-        # canonicalization mode per CrawlConfig.canonicalizer: wide waves
-        # take the JVM+Arrow hybrid, trickle waves the straight Arrow UDF
-        if cfg.canonicalizer == "adaptive":
-            canon_mode = (
-                "hybrid"
-                if (st.pending_est or 0) >= cfg.hybrid_canon_min_rows
-                else "python"
-            )
-        else:
-            canon_mode = cfg.canonicalizer
+        # canonicalization mode per wave (see HYBRID_CANON_MIN_ROWS): wide
+        # waves take the JVM+Arrow hybrid, trickle waves the Arrow UDF
+        canon_mode = (
+            "hybrid" if (st.pending_est or 0) >= HYBRID_CANON_MIN_ROWS else "python"
+        )
         children = with_url_norm(
             links, "child_url", base_col="parent", mode=canon_mode
         ).filter(F.col("url_norm").isNotNull())
@@ -879,22 +829,21 @@ class CrawlEngine:
         # test-then-insert-novel exactly (fused == split pinned in
         # tests/test_bloom.py); the split pipeline paid a second
         # shuffle+Arrow pass per wave for the same result.
+        spec = self.seen_spec
         fused_seen = None
         if cfg.seen_mode == "exact":
             children = children.join(
                 st.seen.select("url_hash"), "url_hash", "left_anti"
             )
         elif cfg.seen_mode == "cuckoo":
-            verdicts = cuckoo_test(
-                children.select("url_hash"), st.shards, cfg.cuckoo_spec
-            )
+            verdicts = cuckoo_test(children.select("url_hash"), st.shards, spec)
             children = children.join(
                 verdicts.filter(~F.col("maybe_seen")).select("url_hash"),
                 "url_hash", "left_semi",
             )
         else:  # bloom / hybrid
             fused_seen = bloom_test_insert(
-                children.select("url_hash"), st.shards, cfg.bloom_spec
+                children.select("url_hash"), st.shards, spec
             ).persist()
             scratch.append(fused_seen)
             verdicts = fused_seen.filter(F.col("row_kind") == "v").select(
@@ -956,22 +905,17 @@ class CrawlEngine:
             )
             if h_children is not None:
                 scratch.append(h_children)
-        _tick("children seq")
-        new_shards = st.shards
-        if st.shards is not None:
-            if cfg.seen_mode == "cuckoo":
-                new_shards = cuckoo_insert(
-                    children.select("url_hash"), st.shards, cfg.cuckoo_spec
-                )
-            else:
-                # bloom / hybrid: bits were already set in the fused
-                # test+insert pass above — shards exist only for the three
-                # seen modes, and the non-cuckoo ones always assign
-                # fused_seen, so there is no separate-insert path
-                assert fused_seen is not None, "bloom/hybrid wave without fused pass"
-                new_shards = fused_seen.filter(F.col("row_kind") == "s").select(
-                    "shard_id", "bitset", "n_inserted"
-                )
+        if fused_seen is not None:
+            # bloom / hybrid: bits were already set in the fused
+            # test+insert pass above
+            new_shards = fused_seen.filter(F.col("row_kind") == "s").select(
+                "shard_id", "bitset", "n_inserted"
+            )
+        elif spec is not None:
+            # cuckoo: insert the deduped children
+            new_shards = spec.insert(children.select("url_hash"), st.shards)
+        else:
+            new_shards = None
 
         f_add = children.withColumn("page_kind", _kind_expr("url_norm")).select(
             F.col("child_url").alias("url"),
@@ -1034,7 +978,6 @@ class CrawlEngine:
                 pending_est=pending_est,
             )
         )
-        _tick("commit")
         committed.metrics.append(
             {
                 "wave": w,

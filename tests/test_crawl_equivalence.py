@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from tbbid_scrapy_spark.fixtures import sitegen
 from tbbid_scrapy_spark.fixtures.simulator import simulate_crawl
 from tbbid_scrapy_spark.operators.bloom import BloomSpec
+from tbbid_scrapy_spark.plans import crawl
 from tbbid_scrapy_spark.plans.crawl import CrawlConfig, CrawlEngine
 
 
@@ -86,16 +87,58 @@ def test_bloom_and_hybrid_modes_match_exact(
     spark, site_df, politeness_df, robots_df, sim
 ):
     """At fixture scale the bloom is oversized ⇒ zero FPs expected, so
-    bloom/hybrid runs must equal the exact run (and the simulator)."""
+    bloom/hybrid runs must equal the exact run (and the simulator). The
+    last config takes seq_mode='dense' — the distributed dense index,
+    the only path past the packed-key bounds."""
     spec = BloomSpec.for_capacity(expected_n=10_000, fp_rate=1e-6, n_shards=8)
-    for mode in ("bloom", "hybrid"):
+    configs = [
+        CrawlConfig(max_waves=50, seen_mode="bloom", bloom_spec=spec),
+        CrawlConfig(max_waves=50, seen_mode="hybrid", bloom_spec=spec),
+        CrawlConfig(max_waves=50, seq_mode="dense"),
+    ]
+    for cfg in configs:
         eng = CrawlEngine(
-            spark, site_df, sitegen.default_seeds(), politeness_df, robots_df,
-            CrawlConfig(max_waves=50, seen_mode=mode, bloom_spec=spec),
+            spark, site_df, sitegen.default_seeds(), politeness_df, robots_df, cfg,
         )
         st = eng.run()
-        assert _engine_order(st) == sim.fetch_log, mode
-        assert {r.url_norm for r in st.seen.collect()} == sim.seen, mode
+        label = (cfg.seen_mode, cfg.seq_mode)
+        assert _engine_order(st) == sim.fetch_log, label
+        assert {r.url_norm for r in st.seen.collect()} == sim.seen, label
+
+
+@pytest.mark.parametrize(
+    "kw, message",
+    [
+        ({"seen_mode": "blom"}, "unknown seen_mode"),
+        ({"seen_mode": "bloom"}, "needs CrawlConfig.bloom_spec"),
+        ({"seen_mode": "hybrid"}, "needs CrawlConfig.bloom_spec"),
+        ({"seen_mode": "cuckoo"}, "needs CrawlConfig.cuckoo_spec"),
+        # a bloom spec does not stand in for the cuckoo one
+        ({"seen_mode": "cuckoo",
+          "bloom_spec": BloomSpec.for_capacity(10_000, 1e-6, 8)},
+         "needs CrawlConfig.cuckoo_spec"),
+        ({"seq_mode": "pakced"}, "unknown seq_mode"),
+    ],
+)
+def test_bad_config_fails_fast(spark, site_df, politeness_df, robots_df, kw, message):
+    """A bad config raises at construction, before any Spark job — and
+    without reading max_waves, whose reads instrumented configs count
+    as wave boundaries."""
+
+    class NoWaves(CrawlConfig):
+        @property
+        def max_waves(self):
+            raise AssertionError("config check read max_waves")
+
+        @max_waves.setter
+        def max_waves(self, value):
+            pass
+
+    with pytest.raises(ValueError, match=message):
+        CrawlEngine(
+            spark, site_df, sitegen.default_seeds(), politeness_df, robots_df,
+            NoWaves(**kw),
+        )
 
 
 def test_retry_semantics(spark, politeness_df, robots_df):
@@ -198,16 +241,17 @@ def test_simulated_clock_uses_per_host_budget(spark):
 
 
 def test_hybrid_canonicalizer_crawl_parity(
-    spark, sim, site_df, politeness_df, robots_df
+    spark, sim, site_df, politeness_df, robots_df, monkeypatch
 ):
-    """The JVM+Arrow hybrid canonicalizer (the wide-wave path the adaptive
-    default only engages past hybrid_canon_min_rows) must reproduce the
+    """The JVM+Arrow hybrid canonicalizer (the wide-wave path the engine
+    only takes past HYBRID_CANON_MIN_ROWS) must reproduce the
     simulator's ordering and seen set exactly when FORCED on the parity
     fixture — byte-equality of the identity function is what makes the
-    adaptive switch safe."""
+    per-wave switch safe."""
+    monkeypatch.setattr(crawl, "HYBRID_CANON_MIN_ROWS", 0)
     eng = CrawlEngine(
         spark, site_df, sitegen.default_seeds(), politeness_df, robots_df,
-        CrawlConfig(max_waves=50, seen_mode="exact", canonicalizer="hybrid"),
+        CrawlConfig(max_waves=50, seen_mode="exact"),
     )
     st = eng.run()
     assert _engine_order(st) == sim.fetch_log

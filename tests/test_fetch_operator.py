@@ -38,9 +38,10 @@ def test_crawl_parity_with_mapinpandas_fetch(spark, site, site_df, politeness_df
                                              robots_df):
     """The ordering/seen/retry oracle must hold with the fetch stage
     swapped from equi-join to the batch-transport operator."""
+    transport = SyntheticTransport(site_to_transport_pages(site_df.collect()))
     st = CrawlEngine(
         spark, site_df, sitegen.default_seeds(), politeness_df, robots_df,
-        CrawlConfig(max_waves=50, fetch_mode="mapinpandas"),
+        CrawlConfig(max_waves=50), transport=transport,
     ).run()
     sim = _sim(site, sitegen.default_seeds(), politeness_df, sitegen.default_robots())
     eng_order = [
@@ -231,8 +232,7 @@ def test_non_retryable_status_fails_permanently(spark, site_df, politeness_df,
 
     st = CrawlEngine(
         spark, site_df, sitegen.default_seeds(), politeness_df, robots_df,
-        CrawlConfig(max_waves=50, fetch_mode="mapinpandas"),
-        transport=transport,
+        CrawlConfig(max_waves=50), transport=transport,
     ).run()
     front = {r.url_norm: (r.state, r.last_status, r.attempts)
              for r in st.frontier.collect()}

@@ -191,9 +191,9 @@ def test_jvm_canonicalizer_byte_equal_on_plain(spark):
     import random
 
     from tbbid_scrapy_spark.functions.urls import (
-        canonicalize_url_jvm,
         canonicalize_url_py,
         is_plain_url,
+        with_canonical_jvm,
     )
 
     rnd = random.Random(7)
@@ -245,17 +245,13 @@ def test_jvm_canonicalizer_byte_equal_on_plain(spark):
         "https://h.org/p#f\n",            # terminator after fragment
     ]
     df = spark.createDataFrame([(u,) for u in urls + non_plain], "url string")
-    rows = df.select(
-        "url",
-        is_plain_url(F.col("url")).alias("plain"),
-        canonicalize_url_jvm(F.col("url")).alias("jvm"),
-    ).collect()
-    n_plain = 0
-    for r in rows:
-        if r.plain:
-            n_plain += 1
-            assert r.jvm == canonicalize_url_py(r.url), (r.url, r.jvm)
-    assert n_plain >= len(urls) * 0.95          # the fast path really is the common path
+    # the production fast path: the staged canonicalizer on the rows the
+    # plain predicate admits (with_url_norm's hybrid split)
+    jvm_rows = with_canonical_jvm(df.filter(is_plain_url(F.col("url"))), "url").collect()
+    for r in jvm_rows:
+        assert r.url_norm == canonicalize_url_py(r.url), (r.url, r.url_norm)
+    assert len(jvm_rows) >= len(urls) * 0.95    # the fast path really is the common path
+    rows = df.select("url", is_plain_url(F.col("url")).alias("plain")).collect()
     by_url = {r.url: r.plain for r in rows}
     for u in non_plain:
         assert not by_url[u], f"non-plain URL admitted to JVM path: {u}"
