@@ -657,7 +657,8 @@ def simhash_rotated_band_candidates(sh: DataFrame, width: int = 8,
     so the screen kills ~all of them for the cost of one XOR, leaving the
     dedup shuffle and downstream exact verify at true-candidate volume
     (measured 5k docs / 32 bands: ~500k colliding pairs → ~4k screened)."""
-    assert 64 % width == 0
+    if width <= 0 or 64 % width:
+        raise ValueError(f"width must divide 64, got {width}")
     mask = (1 << width) - 1
     # the 32-struct window array parses as ONE SQL expression (same
     # rotate/shift/mask trees as the Column build, which cost ~300 py4j

@@ -18,7 +18,8 @@ a driver-side loop over declarative DataFrame waves:
                     REVERSE span order — bid_info.py:90) become children
       6. children = resolve+canonicalize (Arrow UDF) → robots filter →
                     in-batch first-discovery dedup → seen-set dedup
-                    (exact | bloom | hybrid | cuckoo) → dense seq →
+                    (exact | bloom | hybrid | cuckoo) → enqueue seq
+                    (packed key; the dense index past its bounds) →
                     append pending
       7. commit   = per-wave DELTAS (settled rows, new seen, log,
                     extracted, metrics) + live-pending snapshot, made
@@ -38,7 +39,7 @@ from __future__ import annotations
 import functools as _functools
 import time
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -166,6 +167,20 @@ MIN_ROWS_PER_TASK = 2048
 # other way).
 HYBRID_CANON_MIN_ROWS = 100_000
 
+# Children's enqueue key, computed per row with zero sort/collect:
+#   seq = (wave+1) << _WAVE_SHIFT | parent_pos << _POS_SHIFT | (eff_pos + _OFF_BIAS)
+# Within one discovery wave this orders rows exactly as the simulator's
+# dense counter does, and scheduling compares seq only after the wave
+# column, so a wave may also take dense seqs (next_seq …) instead. Each
+# field fits its bit slot only below its bound; a wave past any bound
+# takes the distributed dense index (plans/seq.py). A silent overflow
+# would corrupt enqueue order and politeness with no error. The bounds
+# are read at call time.
+_WAVE_SHIFT, _POS_SHIFT, _OFF_BIAS = 47, 17, 1 << 16
+PACKED_MAX_WAVE = 32766  # wave+1 ≤ this keeps the key below 2^62
+PACKED_MAX_BATCH = 1 << 30  # fetches/wave (parent_pos) < this
+PACKED_MAX_OFFSET = 1 << 16  # max |eff_pos| < this (spans per page)
+
 # seen_mode → the CrawlConfig field holding its approximate-structure
 # spec (None: the exact seen table alone)
 _SPEC_FIELD = {
@@ -187,13 +202,6 @@ class CrawlConfig:
     bloom_spec: BloomSpec | None = None
     cuckoo_spec: CuckooSpec | None = None
     checkpoint_dir: str | None = None
-    # seq_mode 'packed': children enqueue keys are computed per-row as
-    # (wave+1)<<47 | parent_pos<<17 | (eff_pos + 2^16) — order-isomorphic
-    # to the simulator's dense counter (scheduling only ever compares seq,
-    # never assumes density), with zero sort/collect per wave. Bounds:
-    # ≤32766 waves, <2^30 fetches/wave, <2^16 spans/page — beyond them use
-    # 'dense' (two-pass distributed dense index).
-    seq_mode: str = "packed"
 
 
 @_functools.lru_cache(maxsize=None)
@@ -239,6 +247,17 @@ def _union(parts: list[DataFrame]) -> DataFrame:
     return out
 
 
+def _fan_out(jobs: dict[str, Callable[[], object]]) -> dict[str, object]:
+    """Run a commit's independent jobs concurrently, one thread each, and
+    return their results by name. Spark schedules concurrent jobs fine
+    (local-mode cores are shared); serial submission would put ~7 job
+    round-trips of pure scheduling latency on every wave's critical
+    path."""
+    with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
+        futures = {k: ex.submit(fn) for k, fn in jobs.items()}
+        return {k: f.result() for k, f in futures.items()}
+
+
 def _seen_spec(cfg: CrawlConfig) -> BloomSpec | CuckooSpec | None:
     """The approximate seen structure's spec, decided once per engine:
     None for exact, the bloom spec for bloom and hybrid, the cuckoo spec
@@ -261,26 +280,22 @@ def _seen_spec(cfg: CrawlConfig) -> BloomSpec | CuckooSpec | None:
 class CrawlState:
     """Frontier state partitioned for O(wave) commits at a 10^10-URL scale.
 
-    - ``pending``    : the LIVE frontier (state == 'pending' only) — the
+    - ``pending`` : the LIVE frontier (state == 'pending' only) — the
       single table a wave rewrites. Settled rows never ride through
       another wave's join or commit.
-    - ``done_parts`` : APPEND-ONLY settled rows (fetched/failed), one
-      delta per wave — wave w commits |batch| rows, not |history|.
-    - ``seen_parts`` : APPEND-ONLY (url_hash, url_norm), one delta per
-      wave (the r1 design committed the full union every wave —
-      O(waves × total_state); the VERDICT's top scale-killer).
-    - fetch_log / extracted / metrics: append-only deltas as before.
+    - ``parts``   : per APPEND-ONLY table in ``_DELTA_TABLES``, one delta
+      per wave — ``done`` (settled fetched/failed rows: wave w commits
+      |batch| rows, not |history|), ``seen`` (url_hash, url_norm; the r1
+      design committed the full union every wave — O(waves ×
+      total_state), the VERDICT's top scale-killer), ``fetch_log``,
+      ``extracted`` and ``metrics``.
     - ``committed_parts``: per delta table, the part names already in the
       checkpoint — a commit writes only parts beyond this list.
     """
 
     pending: DataFrame
-    done_parts: list[DataFrame]
-    seen_parts: list[DataFrame]
+    parts: dict[str, list[DataFrame]]
     shards: DataFrame | None
-    fetch_log_parts: list[DataFrame]
-    extracted_parts: list[DataFrame]
-    metrics_parts: list[DataFrame] = field(default_factory=list)
     metrics: list[dict] = field(default_factory=list)
     wave: int = 0
     next_seq: int = 0  # driver-tracked global enqueue counter
@@ -294,26 +309,26 @@ class CrawlState:
     def frontier(self) -> DataFrame:
         """Full frontier view (live ∪ settled) — read-side compatibility;
         the engine itself never joins against this union."""
-        return _union([self.pending, *self.done_parts])
+        return _union([self.pending, *self.parts["done"]])
 
     @property
     def seen(self) -> DataFrame:
-        return _union(self.seen_parts)
+        return _union(self.parts["seen"])
 
     @property
     def fetch_log(self) -> DataFrame:
-        return _union(self.fetch_log_parts)
+        return _union(self.parts["fetch_log"])
 
     @property
     def extracted(self) -> DataFrame:
-        return _union(self.extracted_parts)
+        return _union(self.parts["extracted"])
 
     @property
     def metrics_table(self) -> DataFrame:
         """Per-(wave, partition, host) fetch/parse metrics — the
         north-star's per-partition lineage companion (row-level lineage
         itself is the frontier's parent_id chain)."""
-        return _union(self.metrics_parts)
+        return _union(self.parts["metrics"])
 
 
 class CrawlEngine:
@@ -341,10 +356,6 @@ class CrawlEngine:
         self.robots = robots
         self.transport = transport
         self.seen_spec = _seen_spec(self.config)
-        if self.config.seq_mode not in ("packed", "dense"):
-            raise ValueError(
-                f"unknown seq_mode {self.config.seq_mode!r}; expected 'packed' or 'dense'"
-            )
         self._snapshots: dict[str, SnapshotTable] = {}
         self._deltas: dict[str, DeltaTable] = {}
         self._catalog: Catalog | None = None
@@ -401,18 +412,17 @@ class CrawlEngine:
         )
         seen0 = f0.select("url_hash", "url_norm")
         shards0 = None if self.seen_spec is None else self._rebuild_shards(seen0)
-        done0 = spark.createDataFrame([], f0.schema)
-        log0 = spark.createDataFrame([], FETCH_LOG_SCHEMA)
-        ex0 = spark.createDataFrame([], EXTRACTED_SCHEMA)
-        m0 = spark.createDataFrame([], METRICS_SCHEMA)
+        parts = {
+            "done": [spark.createDataFrame([], f0.schema)],
+            "seen": [seen0],
+            "fetch_log": [spark.createDataFrame([], FETCH_LOG_SCHEMA)],
+            "extracted": [spark.createDataFrame([], EXTRACTED_SCHEMA)],
+            "metrics": [spark.createDataFrame([], METRICS_SCHEMA)],
+        }
         return CrawlState(
             pending=f0,
-            done_parts=[done0],
-            seen_parts=[seen0],
+            parts=parts,
             shards=shards0,
-            fetch_log_parts=[log0],
-            extracted_parts=[ex0],
-            metrics_parts=[m0],
             metrics=[],
             wave=0,
             next_seq=n_seeds,
@@ -440,15 +450,6 @@ class CrawlEngine:
         spec = self.seen_spec
         return spec.insert(seen.select("url_hash"), spec.empty(self.spark))
 
-    def _delta_parts(self, st: CrawlState) -> dict[str, list[DataFrame]]:
-        return {
-            "done": st.done_parts,
-            "seen": st.seen_parts,
-            "fetch_log": st.fetch_log_parts,
-            "extracted": st.extracted_parts,
-            "metrics": st.metrics_parts,
-        }
-
     def _commit(self, st: CrawlState) -> CrawlState:
         """Materialize the wave (truncates lineage); with a checkpoint dir
         configured, write the wave's DELTAS plus the live-pending snapshot
@@ -462,11 +463,8 @@ class CrawlEngine:
         as the resume point (no per-table pointer skew)."""
         if self._catalog:
             # every write below targets its own immutable directory, so the
-            # whole commit fans out across one thread per table (Spark
-            # schedules concurrent jobs fine; local-mode cores are shared).
-            # Serializing them would put ~7 job round-trips of pure
-            # scheduling latency on every wave's critical path. Only the
-            # manifest flip is ordered — strictly after all writes land.
+            # whole commit fans out; only the manifest flip is ordered —
+            # strictly after all writes land.
             jobs: dict[str, Callable[[], object]] = {
                 "pending": lambda: self._snapshots["pending"].write_version(st.pending)
             }
@@ -474,30 +472,27 @@ class CrawlEngine:
                 jobs["shards"] = lambda: self._snapshots["shards"].write_version(
                     st.shards
                 )
-            parts_by_name = self._delta_parts(st)
-            new_by_name: dict[str, list[DataFrame]] = {}
-            for name in _DELTA_TABLES:
-                parts = parts_by_name[name]
-                # once anything is committed, parts[0] is the read-back of
-                # all committed parts; everything after it is new deltas.
-                # On the very first commit every part is new.
-                new_by_name[name] = parts[1:] if st.committed_parts.get(name) else parts
-                for i, p in enumerate(new_by_name[name]):
+            # once anything is committed, parts[0] is the read-back of all
+            # committed parts; everything after it is new deltas. On the
+            # very first commit every part is new.
+            new_by_name = {
+                name: st.parts[name][1:] if st.committed_parts.get(name)
+                else st.parts[name]
+                for name in _DELTA_TABLES
+            }
+            for name, new in new_by_name.items():
+                for i, p in enumerate(new):
                     jobs[f"{name}/{i}"] = (
                         lambda d=self._deltas[name], p=p, i=i: d.write_part(
                             p, f"{st.wave:06d}-{i}"
                         )
                     )
-            with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
-                results = {k: f.result() for k, f in
-                           {k: ex.submit(fn) for k, fn in jobs.items()}.items()}
-            snaps = {"pending": results["pending"]}
-            if st.shards is not None:
-                snaps["shards"] = results["shards"]
+            results = _fan_out(jobs)
+            snaps = {k: results[k] for k in ("pending", "shards") if k in results}
             deltas = {
                 name: list(st.committed_parts.get(name, []))
-                + [results[f"{name}/{i}"] for i in range(len(new_by_name[name]))]
-                for name in _DELTA_TABLES
+                + [results[f"{name}/{i}"] for i in range(len(new))]
+                for name, new in new_by_name.items()
             }
             self._catalog.commit(
                 {
@@ -515,9 +510,7 @@ class CrawlEngine:
         # linearly in wave count. Only the NEWEST delta of each append-only
         # table needs materializing; older parts were checkpointed already.
         # All 7 checkpoints are independent scans of already-persisted wave
-        # blocks — submit them concurrently (each eager localCheckpoint is
-        # a full job; serial submission costs ~7 scheduler round-trips of
-        # per-wave fixed latency).
+        # blocks, so they fan out like the parquet writes above.
         n = (
             self._sized_parts(st.pending_est)
             if st.pending_est is not None
@@ -530,39 +523,32 @@ class CrawlEngine:
                 out[-1] = out[-1].coalesce(nparts).localCheckpoint()
             return out
 
-        jobs: dict[str, Callable[[], object]] = {
-            "pending": lambda: st.pending.coalesce(n).localCheckpoint(),
-            "done": lambda: _ckpt_last(st.done_parts, n),
-            "seen": lambda: _ckpt_last(st.seen_parts, n),
-            "fetch_log": lambda: _ckpt_last(st.fetch_log_parts, n),
-            "extracted": lambda: _ckpt_last(st.extracted_parts, n),
-            "metrics": lambda: _ckpt_last(st.metrics_parts, 1),
-        }
+        jobs = {"pending": lambda: st.pending.coalesce(n).localCheckpoint()}
+        for name in _DELTA_TABLES:
+            # the per-(partition, host) metrics delta is a handful of rows
+            nparts = 1 if name == "metrics" else n
+            jobs[name] = lambda name=name, nparts=nparts: _ckpt_last(
+                st.parts[name], nparts
+            )
         if st.shards is not None:
             jobs["shards"] = lambda: st.shards.localCheckpoint()
-        with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
-            res = {k: f.result() for k, f in
-                   {k: ex.submit(fn) for k, fn in jobs.items()}.items()}
-
-        return CrawlState(
+        res = _fan_out(jobs)
+        return replace(
+            st,
             pending=res["pending"],
-            done_parts=res["done"],
-            seen_parts=res["seen"],
+            parts={name: res[name] for name in _DELTA_TABLES},
             shards=res.get("shards"),
-            fetch_log_parts=res["fetch_log"],
-            extracted_parts=res["extracted"],
-            metrics_parts=res["metrics"],
-            metrics=st.metrics,
-            wave=st.wave,
-            next_seq=st.next_seq,
-            pending_est=st.pending_est,
         )
 
     def _load(self, metrics: list[dict] | None = None) -> CrawlState:
         """State from the current manifest: every delta table becomes ONE
         multi-path scan over its committed parts."""
         manifest = self._catalog.read()
-        assert manifest is not None, "no committed manifest to load"
+        if manifest is None:
+            raise ValueError(
+                f"no committed manifest in {self._catalog.root} to resume; "
+                "run with resume=False to start a crawl there"
+            )
         snaps, deltas = manifest["snapshots"], manifest["deltas"]
         parts = {
             name: [self._deltas[name].read(deltas[name])] for name in _DELTA_TABLES
@@ -593,12 +579,8 @@ class CrawlEngine:
             shards = self._rebuild_shards(parts["seen"][0]).localCheckpoint()
         return CrawlState(
             pending=self._snapshots["pending"].read_version(snaps["pending"]),
-            done_parts=parts["done"],
-            seen_parts=parts["seen"],
+            parts=parts,
             shards=shards,
-            fetch_log_parts=parts["fetch_log"],
-            extracted_parts=parts["extracted"],
-            metrics_parts=parts["metrics"],
             metrics=metrics or [],
             wave=manifest["wave"],
             next_seq=manifest["next_seq"],
@@ -608,7 +590,8 @@ class CrawlEngine:
 
     def resume(self) -> CrawlState:
         """Rebuild state from the latest committed manifest."""
-        assert self._catalog, "resume requires a checkpoint_dir"
+        if self._catalog is None:
+            raise ValueError("resume requires CrawlConfig.checkpoint_dir")
         return self._load()
 
     # -- one wave ------------------------------------------------------------
@@ -647,10 +630,9 @@ class CrawlEngine:
                 h_batch.unpersist()
             return st, 0
         # Every wave-scratch persist is registered in `scratch` and
-        # released in the finally — an exception mid-wave (e.g. a
-        # packed-seq OverflowError a caller catches before retrying with
-        # seq_mode='dense' on the SAME session) must not leave cached
-        # blocks pinned for the session's lifetime.
+        # released in the finally — an exception mid-wave (e.g. a failed
+        # job a caller catches before retrying on the SAME session) must
+        # not leave cached blocks pinned for the session's lifetime.
         scratch: list = [] if h_batch is None else [h_batch]
         try:
             return self._run_wave_body(
@@ -861,41 +843,27 @@ class CrawlEngine:
             children = children.join(keep_keys, "url_hash", "left_semi")
 
         # enqueue keys over the deduped children; the frame is persisted so
-        # shards/frontier/seen below reuse one materialization
-        if cfg.seq_mode == "packed":
-            # documented packed-key bounds are ENFORCED, not assumed: a
-            # silent overflow would corrupt enqueue order and politeness
-            # scheduling with no error (ADVICE r1). n_batch bounds
-            # parent_pos; the span-offset bound rides the same count job.
-            if w + 1 > 32766:
-                raise OverflowError(
-                    f"seq_mode='packed' supports ≤32766 waves (at wave {w + 1}); "
-                    "use seq_mode='dense'"
-                )
-            if n_batch >= 1 << 30:
-                raise OverflowError(
-                    f"seq_mode='packed' supports <2^30 fetches/wave (got {n_batch}); "
-                    "use seq_mode='dense'"
-                )
+        # shards/frontier/seen below reuse one materialization. Packed keys
+        # while their bounds hold (see PACKED_MAX_*): the wave and batch
+        # bounds are known here, the span-offset bound rides the count job
+        # the packed path runs anyway. Past any bound, the dense index.
+        n_new = None
+        if w + 1 <= PACKED_MAX_WAVE and n_batch < PACKED_MAX_BATCH:
             children = children.withColumn(
                 "seq",
-                (F.lit(w + 1).cast("long") * F.lit(1 << 47).cast("long"))
-                + (F.col("parent_pos").cast("long") * F.lit(1 << 17).cast("long"))
-                + (F.col("eff_pos").cast("long") + F.lit(1 << 16).cast("long")),
+                (F.lit(w + 1).cast("long") * F.lit(1 << _WAVE_SHIFT).cast("long"))
+                + (F.col("parent_pos").cast("long") * F.lit(1 << _POS_SHIFT).cast("long"))
+                + (F.col("eff_pos").cast("long") + F.lit(_OFF_BIAS).cast("long")),
             ).persist()
-            # registered BEFORE the overflow checks below: a raised
-            # OverflowError must not leak this persisted frame
             scratch.append(children)
             stats = children.agg(
                 F.count("*").alias("n"), F.max(F.abs("eff_pos")).alias("max_off")
             ).collect()[0]
-            n_new = stats["n"]
-            if stats["max_off"] is not None and stats["max_off"] >= 1 << 16:
-                raise OverflowError(
-                    f"seq_mode='packed' supports <2^16 spans/page (got offset "
-                    f"{stats['max_off']}); use seq_mode='dense'"
-                )
-        else:
+            if stats["max_off"] is None or stats["max_off"] < PACKED_MAX_OFFSET:
+                n_new = stats["n"]
+            else:
+                children = children.drop("seq")
+        if n_new is None:
             children, n_new, h_children = dense_index(
                 children,
                 [F.col("parent_pos"), F.col("eff_pos")],
@@ -962,19 +930,16 @@ class CrawlEngine:
             if st.pending_est is not None
             else None
         )
+        adds = {"done": done_add, "seen": seen_add, "fetch_log": log_add,
+                "extracted": ex_add, "metrics": m_add}
         committed = self._commit(
-            CrawlState(
+            replace(
+                st,
                 pending=new_pending,
-                done_parts=st.done_parts + [done_add],
-                seen_parts=st.seen_parts + [seen_add],
+                parts={name: st.parts[name] + [adds[name]] for name in _DELTA_TABLES},
                 shards=new_shards,
-                fetch_log_parts=st.fetch_log_parts + [log_add],
-                extracted_parts=st.extracted_parts + [ex_add],
-                metrics_parts=st.metrics_parts + [m_add],
-                metrics=st.metrics,
                 wave=w + 1,
                 next_seq=st.next_seq + n_new,
-                committed_parts=st.committed_parts,
                 pending_est=pending_est,
             )
         )
@@ -992,7 +957,7 @@ class CrawlEngine:
         # superseded old-state blocks are dropped here, success-path
         # only: state tables live in the fresh localCheckpoint/snapshot,
         # so nothing downstream needs them
-        for old in (st.pending, *st.seen_parts, st.shards):
+        for old in (st.pending, *st.parts["seen"], st.shards):
             if old is not None:
                 try:
                     old.unpersist()

@@ -1,4 +1,4 @@
-"""Snapshot tables + MERGE-upsert emulation on plain parquet.
+"""Versioned tables + MERGE-upsert emulation on plain parquet.
 
 The reference upserts row-at-a-time into Postgres with natural keys and
 a query-before-write existence check (/root/reference/xizang/pipelines/
@@ -6,15 +6,18 @@ bidSaver.py:37-395, CompanyEmployee.py:28-188, winner_bid.py:20-67).
 The engine's sink is set-oriented: one MERGE per table per wave.
 
 Iceberg jars are not available in this sandbox (SURVEY.md §7 plan B), so
-``SnapshotTable`` provides the same two properties we need from Iceberg —
-atomic commits and versioned snapshots for resume — on plain parquet:
+this module provides the same two properties we need from Iceberg —
+atomic commits and versioned snapshots for resume — on plain parquet,
+with ONE commit protocol:
 
-- every commit writes a brand-new version directory ``v{n:08d}``;
-- a tiny ``_LATEST`` pointer file is swapped atomically (os.replace);
-- readers resolve the pointer then read that immutable directory;
-- resume = read whatever ``_LATEST`` points at (a half-written version
-  directory is unreachable because the pointer flips only after the
-  parquet write completes).
+- every write lands in a brand-new immutable directory: a
+  ``SnapshotTable`` version ``v{n:08d}`` or a ``DeltaTable`` part
+  ``part-<label>``, fsynced before anything references it;
+- a ``Catalog`` manifest names the version / part list of EVERY table
+  plus the scalar crawl state, and is swapped atomically (os.replace);
+- resume = read whatever the manifest names (a half-written directory
+  is unreachable because the manifest flips only after every write of
+  the commit completes).
 
 On a real cluster the identical call sites would target Iceberg
 ``MERGE INTO`` — the interface (merge keys per table, column-level
@@ -35,8 +38,8 @@ def _durable_replace(root: str, final: str, content: str) -> None:
     """Atomically (and DURABLY) replace ``final`` with ``content``:
     fsync the temp file before the rename and fsync the directory after,
     so a power loss cannot leave the rename durable while the bytes are
-    not (ext4/xfs delayed allocation) — an empty pointer/manifest after
-    a crash would destroy the only resume point the old file held."""
+    not (ext4/xfs delayed allocation) — an empty manifest after a crash
+    would destroy the only resume point the old file held."""
     fd, tmp = tempfile.mkstemp(dir=root, prefix=os.path.basename(final) + "_tmp")
     try:
         with os.fdopen(fd, "w") as f:
@@ -62,13 +65,13 @@ def _fsync_tree(path: str) -> None:
     the parent directory entry.
 
     Spark's local-FS parquet writes land in the page cache; close() does
-    NOT sync them. Flipping a durably-fsynced pointer/manifest at a
+    NOT sync them. Flipping a durably-fsynced manifest at a
     version directory whose data files are still volatile would INVERT
-    the durability guarantee: after a power loss the pointer survives
+    the durability guarantee: after a power loss the manifest survives
     but the data it references doesn't, and the old consistent version
     is unreachable — the exact outcome _durable_replace exists to
     prevent. Called on every written version/part directory BEFORE the
-    pointer or manifest that references it flips. Cost is O(files in
+    manifest that references it flips. Cost is O(files in
     this wave's delta) — the commits are already O(wave). On HDFS/S3
     the store's own commit protocol provides durability; these roots
     are plain local paths by construction (SURVEY §7 plan B)."""
@@ -102,59 +105,16 @@ def _fsync_tree(path: str) -> None:
 
 
 class SnapshotTable:
-    """Versioned parquet table with atomic pointer swap."""
+    """Versioned parquet table: every write is a new immutable version
+    directory; which version is live is the Catalog manifest's job."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)
 
-    @property
-    def _pointer(self) -> str:
-        return os.path.join(self.root, "_LATEST")
-
-    def current_version(self) -> int | None:
-        try:
-            with open(self._pointer) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return None
-
     def _version_dir(self, v: int) -> str:
         return os.path.join(self.root, f"v{v:08d}")
-
-    def exists(self) -> bool:
-        return self.current_version() is not None
-
-    def read(self) -> DataFrame:
-        v = self.current_version()
-        if v is None:
-            raise FileNotFoundError(f"no committed version in {self.root}")
-        return self.spark.read.parquet(self._version_dir(v))
-
-    def commit(self, df: DataFrame) -> int:
-        """Write df as the next version; flip the pointer only after the
-        write fully succeeds (crash between write and flip leaves the old
-        version live — lossless resume). The next version consults BOTH
-        the pointer and the directory listing: write_version (manifest
-        mode, pointer never flipped) shares this namespace, and deriving
-        from the pointer alone would overwrite a manifest-referenced
-        version directory."""
-        v = max(self.current_version() or 0, self._max_version()) + 1
-        out = self._version_dir(v)
-        df.write.mode("overwrite").parquet(out)
-        _fsync_tree(out)  # data must be durable BEFORE the pointer is
-        _durable_replace(self.root, self._pointer, str(v))
-        return v
-
-    def rollback_to(self, v: int) -> None:
-        _durable_replace(self.root, self._pointer, str(v))
-
-    # -- manifest-coordinated mode (multi-table atomic commits) -------------
-    # write_version/read_version do NOT touch the _LATEST pointer: a
-    # higher-level Catalog manifest records which version of EVERY table
-    # belongs to a consistent snapshot and flips once (ADVICE: per-table
-    # pointer flips let a crash leave e.g. new-frontier + old-seen live).
 
     def _max_version(self) -> int:
         vs = [
@@ -164,10 +124,10 @@ class SnapshotTable:
         return max(vs, default=0)
 
     def write_version(self, df: DataFrame) -> int:
-        """Write df as a new immutable version directory WITHOUT flipping
-        the pointer; returns the version for a Catalog manifest. Orphan
-        versions from a crash before the manifest flip are unreferenced
-        and harmless."""
+        """Write df as a new immutable version directory, numbered past
+        every version already on disk; returns the version for a Catalog
+        manifest. Orphan versions from a crash before the manifest flip
+        are unreferenced and harmless."""
         v = self._max_version() + 1
         out = self._version_dir(v)
         df.write.mode("overwrite").parquet(out)
@@ -251,8 +211,8 @@ def to_merge_sql(
     interface the north-star names (reference upsert semantics:
     bidSaver.py:37-395, models/models.py:51-90). On a cluster with a v2
     catalog the call site is ``spark.sql(to_merge_sql(...))`` against a
-    temp view ``source``; in this sandbox SnapshotTable executes the same
-    semantics and this generator is syntax-pinned in tests via Spark's
+    temp view ``source``; on plain parquet ``merge_upsert`` executes the
+    same semantics and this generator is syntax-pinned in tests via Spark's
     SQL parser.
 
     ``on_matched_sql`` gives per-column UPDATE expressions over aliases

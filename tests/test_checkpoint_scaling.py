@@ -92,6 +92,11 @@ def test_manifest_flip_is_atomic_against_partial_commits(spark, checkpointed):
 
 
 def test_packed_seq_bounds_enforced(spark, site_df, politeness_df, robots_df):
+    """A wave past the packed key's wave bound must not overflow it: the
+    wave falls back to the dense index, so its children carry the dense
+    seqs next_seq … next_seq + n_new - 1 and next_seq advances by n_new."""
+    from pyspark.sql import functions as F
+
     from tbbid_scrapy_spark.plans import crawl as crawl_mod
 
     eng = CrawlEngine(
@@ -100,9 +105,15 @@ def test_packed_seq_bounds_enforced(spark, site_df, politeness_df, robots_df):
     )
     st = eng._initial_state()
     st = eng._commit(st)
-    st.wave = 32766  # next wave would overflow the packed key
-    with pytest.raises(OverflowError, match="32766 waves"):
-        eng._run_wave(st)
+    st.wave = crawl_mod.PACKED_MAX_WAVE  # wave+1 would overflow the packed key
+    next_seq = st.next_seq
+    after, n_fetched = eng._run_wave(st)
+    n_new = after.metrics[-1]["urls_new"]
+    assert n_fetched > 0 and n_new > 0
+    new_rows = after.pending.filter(F.col("wave") == crawl_mod.PACKED_MAX_WAVE + 1)
+    seqs = sorted(r.seq for r in new_rows.select("seq").collect())
+    assert seqs == list(range(next_seq, next_seq + n_new))
+    assert after.next_seq == next_seq + n_new
 
 
 def test_seed_robots_and_dedup_at_enqueue(spark, site_df, politeness_df):

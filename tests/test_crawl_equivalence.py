@@ -84,26 +84,41 @@ def test_politeness_budget_respected(engine_state, politeness_df):
 
 
 def test_bloom_and_hybrid_modes_match_exact(
-    spark, site_df, politeness_df, robots_df, sim
+    spark, site_df, politeness_df, robots_df, sim, monkeypatch
 ):
     """At fixture scale the bloom is oversized ⇒ zero FPs expected, so
     bloom/hybrid runs must equal the exact run (and the simulator). The
-    last config takes seq_mode='dense' — the distributed dense index,
-    the only path past the packed-key bounds."""
+    last run is exact with the packed key's span-offset bound shrunk to
+    4: waves whose new children include listing links (offsets up to 7)
+    fall back to the distributed dense index, while waves whose children
+    come from stage pages (link offsets ≤ 3) keep packed keys — so one
+    crawl checks mixed packed/dense ordering against the simulator."""
     spec = BloomSpec.for_capacity(expected_n=10_000, fp_rate=1e-6, n_shards=8)
-    configs = [
-        CrawlConfig(max_waves=50, seen_mode="bloom", bloom_spec=spec),
-        CrawlConfig(max_waves=50, seen_mode="hybrid", bloom_spec=spec),
-        CrawlConfig(max_waves=50, seq_mode="dense"),
-    ]
-    for cfg in configs:
-        eng = CrawlEngine(
+
+    def run_and_check(cfg, label):
+        st = CrawlEngine(
             spark, site_df, sitegen.default_seeds(), politeness_df, robots_df, cfg,
-        )
-        st = eng.run()
-        label = (cfg.seen_mode, cfg.seq_mode)
+        ).run()
         assert _engine_order(st) == sim.fetch_log, label
         assert {r.url_norm for r in st.seen.collect()} == sim.seen, label
+        return st
+
+    for mode in ("bloom", "hybrid"):
+        run_and_check(CrawlConfig(max_waves=50, seen_mode=mode, bloom_spec=spec), mode)
+
+    monkeypatch.setattr(crawl, "PACKED_MAX_OFFSET", 4)
+    dense_fallbacks = []
+    real = crawl.dense_index
+
+    def recording(df, order_cols, out_col="seq", start=0, num_partitions=None):
+        if out_col == "seq" and start > 0:  # children, not the seeds
+            dense_fallbacks.append(start)
+        return real(df, order_cols, out_col, start, num_partitions)
+
+    monkeypatch.setattr(crawl, "dense_index", recording)
+    st = run_and_check(CrawlConfig(max_waves=50), "mixed packed/dense")
+    enqueuing = [m["wave"] for m in st.metrics if m["urls_new"]]
+    assert 0 < len(dense_fallbacks) < len(enqueuing), (dense_fallbacks, enqueuing)
 
 
 @pytest.mark.parametrize(
@@ -117,7 +132,6 @@ def test_bloom_and_hybrid_modes_match_exact(
         ({"seen_mode": "cuckoo",
           "bloom_spec": BloomSpec.for_capacity(10_000, 1e-6, 8)},
          "needs CrawlConfig.cuckoo_spec"),
-        ({"seq_mode": "pakced"}, "unknown seq_mode"),
     ],
 )
 def test_bad_config_fails_fast(spark, site_df, politeness_df, robots_df, kw, message):

@@ -3,6 +3,8 @@ uninterrupted run (SURVEY.md §5d; north-star C7)."""
 
 from __future__ import annotations
 
+import pytest
+
 from tbbid_scrapy_spark.fixtures import sitegen
 from tbbid_scrapy_spark.plans.crawl import CrawlConfig, CrawlEngine
 
@@ -174,27 +176,12 @@ def test_resume_reuses_shards_on_matching_format(
     assert st.shards is not None and st.shards.count() == spec.n_shards
 
 
-def test_snapshot_table_atomicity(spark, tmp_path):
-    from tbbid_scrapy_spark.sources.sink import SnapshotTable
-
-    t = SnapshotTable(spark, str(tmp_path / "tbl"))
-    df1 = spark.range(5)
-    v1 = t.commit(df1)
-    assert t.read().count() == 5
-    v2 = t.commit(spark.range(10))
-    assert v2 == v1 + 1 and t.read().count() == 10
-    t.rollback_to(v1)
-    assert t.read().count() == 5
-
-
 def test_fresh_run_refuses_committed_checkpoint_dir(spark, site_df, politeness_df,
                                                     robots_df, tmp_path):
     """run(resume=False) into a dir holding a committed manifest must
     refuse: delta part names are deterministic per wave, so starting over
     would overwrite parquet the live manifest still references (a crash
     mid-first-commit would then corrupt the only resume point)."""
-    import pytest
-
     seeds = sitegen.default_seeds()
     ck = str(tmp_path / "ck")
     CrawlEngine(
@@ -212,22 +199,54 @@ def test_fresh_run_refuses_committed_checkpoint_dir(spark, site_df, politeness_d
     assert st.wave >= 2
 
 
+@pytest.mark.parametrize(
+    "case, message",
+    [
+        ("resume_without_checkpoint_dir", "requires CrawlConfig.checkpoint_dir"),
+        ("resume_empty_checkpoint_dir", "no committed manifest"),
+        ("simhash_band_width", "width must divide 64"),
+    ],
+)
+def test_bad_caller_input_raises_value_error(
+    spark, site_df, politeness_df, robots_df, tmp_path, case, message
+):
+    """Caller input is checked with raises, not asserts: under
+    ``python -O`` an assert vanishes and each case failed later with an
+    unrelated error (AttributeError on a None catalog, TypeError on a
+    missing manifest, a silently wrong band split)."""
+    from tbbid_scrapy_spark.operators import dedup
+
+    def crawl(checkpoint_dir):
+        return CrawlEngine(
+            spark, site_df, sitegen.default_seeds(), politeness_df, robots_df,
+            CrawlConfig(max_waves=1, checkpoint_dir=checkpoint_dir),
+        ).run(resume=True)
+
+    calls = {
+        "resume_without_checkpoint_dir": lambda: crawl(None),
+        "resume_empty_checkpoint_dir": lambda: crawl(str(tmp_path / "ck")),
+        "simhash_band_width": lambda: dedup.simhash_rotated_band_candidates(
+            spark.createDataFrame([("d", 1)], "doc_id string, simhash long"),
+            width=7,
+        ),
+    }
+    with pytest.raises(ValueError, match=message):
+        calls[case]()
+
+
 def test_snapshot_commit_respects_manifest_versions(spark, tmp_path):
-    """SnapshotTable.commit and write_version share one v-directory
-    namespace: commit() must allocate past directory versions written in
-    manifest mode (pointer never flipped), not overwrite them."""
+    """write_version numbers each version past every version directory
+    already on disk — also one written through another handle on the
+    same root, as a resumed engine's is — so it never overwrites a
+    version a manifest may reference; read_version reads each back."""
     from tbbid_scrapy_spark.sources.sink import SnapshotTable
 
-    t = SnapshotTable(spark, str(tmp_path / "tbl"))
-    df1 = spark.range(3)
-    v1 = t.write_version(df1)          # manifest mode — no pointer
-    v2 = t.write_version(spark.range(5))
-    assert (v1, v2) == (1, 2)
-    v3 = t.commit(spark.range(7))      # legacy pointer mode
-    assert v3 == 3                     # NOT 1 — v1/v2 stay intact
-    assert t.read_version(v1).count() == 3
-    assert t.read_version(v2).count() == 5
-    assert t.read().count() == 7
+    root = str(tmp_path / "tbl")
+    t = SnapshotTable(spark, root)
+    assert [t.write_version(spark.range(n)) for n in (3, 5)] == [1, 2]
+    again = SnapshotTable(spark, root)
+    assert again.write_version(spark.range(7)) == 3
+    assert [again.read_version(v).count() for v in (1, 2, 3)] == [3, 5, 7]
 
 
 def test_durable_replace_atomic_and_clean(tmp_path):
