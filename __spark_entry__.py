@@ -94,23 +94,24 @@ _TESTDATA_SCHEMAS: dict[str, "T.StructType"] = {
     ]),
 }
 
-# Whether the declared schemas match the generator's files — decided
-# ONCE per process by inferring the first-read table and comparing
-# (every sf dir comes from the same deterministic generator, so one
-# probe covers them all; the bench warmup at sf0.001 then absorbs the
-# probe cost and the timed sf0.1 queries read schema-free). None =
-# not yet probed; False = generator drift detected, infer everything.
-_SCHEMA_TRUSTED: bool | None = None
+# Whether a data directory's files match the declared schemas — decided
+# ONCE per sf_dir by inferring the first table read from it and
+# comparing (bench.py probes its timed directory before timing). Keyed
+# by directory: one directory's files never vouch for another's. A
+# directory absent here is not yet probed; False = drift detected
+# there, so every table from it is read with inference.
+_SCHEMA_TRUSTED: dict[str, bool] = {}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    global _SCHEMA_TRUSTED
     path = f"{sf_dir}/{name}.parquet"
     declared = _TESTDATA_SCHEMAS.get(name)
     if declared is not None:
-        if _SCHEMA_TRUSTED is None:
-            _SCHEMA_TRUSTED = spark.read.parquet(path).schema == declared
-        if _SCHEMA_TRUSTED:
+        trusted = _SCHEMA_TRUSTED.get(sf_dir)
+        if trusted is None:
+            trusted = spark.read.parquet(path).schema == declared
+            _SCHEMA_TRUSTED[sf_dir] = trusted
+        if trusted:
             return spark.read.schema(declared).parquet(path)
     return spark.read.parquet(path)
 
@@ -511,7 +512,9 @@ def q_frontier_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Reference scheduler semantics: settings.py:23-30.)"""
     from tbbid_scrapy_spark.operators.frontier import (
         apply_robots_joined,
+        host_budgets,
         politeness_rank,
+        robots_rules,
     )
 
     o = _t(spark, sf_dir, "orders")
@@ -543,8 +546,8 @@ def q_frontier_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(f"h{i}.example.org", 3 + i % 4) for i in range(97)],
         "host string, budget_per_wave int",
     )
-    allowed = apply_robots_joined(pending, robots)
-    selected = politeness_rank(allowed, politeness, default_budget=4,
+    allowed = apply_robots_joined(pending, robots_rules(robots))
+    selected = politeness_rank(allowed, host_budgets(politeness), default_budget=4,
                                salt_buckets=8)
     return selected.select("host", "seq", "priority", "url_norm").orderBy(
         "host", "seq"

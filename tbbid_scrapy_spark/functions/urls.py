@@ -290,33 +290,33 @@ def _url_norm_cols(url_col: str, base_col: str | None) -> tuple:
     )
 
 
-def with_url_norm(df: DataFrame, url_col: str = "url", base_col: str | None = None,
-                  mode: str = "hybrid") -> DataFrame:
+def with_url_norm(df: DataFrame, url_col: str = "url",
+                  base_col: str | None = None) -> DataFrame:
     """Attach url_norm / url_hash / host to a DataFrame of raw URLs.
 
-    mode='hybrid': rows whose URL is plain (is_plain_url — the
+    JVM first: rows whose URL is plain (is_plain_url — the
     ~all-of-the-web fast path; an absolute http(s) URL ignores its base,
     urljoin is the identity there) take the Catalyst expression; the rest
     round-trip through the Arrow UDF. Split-union instead of a when():
     Spark evaluates an extracted Python UDF on every row regardless of
     the branch it feeds, so a conditional expression would still pay the
-    full Python cost. The split-union recomputes the upstream plan once
-    per branch — a win only when the input is wide (interleaved A/B:
-    8M-URL wave 160k vs ~140k URLs/s, but 6k-URL crawl waves 545 vs
-    835 URLs/s), so narrow callers pass mode='python' (the crawl loop
-    picks per wave off its pending estimate).
-
-    mode='python': the Arrow UDF for every row — one branch, no union."""
+    full Python cost. Every partition of the fallback branch still
+    starts a Python task, rows or not, but on an all-plain narrow crawl
+    wave AQE coalesces that branch to one partition: one Python task per
+    wave instead of one per partition of the all-Arrow form (5 on the
+    perfbench crawl), at ~0.2 s of CPU each whatever the row count.
+    Wide waves were already faster on this path (8M-URL wave 160k vs
+    ~140k URLs/s against the all-Arrow form). The all-Arrow
+    canonicalizer stays available as ``canonicalize_url_pd`` /
+    ``resolve_and_canonicalize_pd`` (the byte-equality tests compare the
+    two paths with them)."""
     plain, slow_norm, hash_c, host_c = _url_norm_cols(url_col, base_col)
-    if mode == "hybrid":
-        # staged frame-level canonicalizer (shared components evaluated
-        # once per row — see with_canonical_jvm)
-        fast = with_canonical_jvm(df.filter(plain), url_col)
-        slow = df.filter(~plain).withColumn("url_norm", slow_norm)
-        out = fast.unionByName(slow)
-    else:
-        out = df.withColumn("url_norm", slow_norm)
+    # staged frame-level canonicalizer (shared components evaluated
+    # once per row — see with_canonical_jvm)
+    fast = with_canonical_jvm(df.filter(plain), url_col)
+    slow = df.filter(~plain).withColumn("url_norm", slow_norm)
     return (
-        out.withColumn("url_hash", hash_c)
+        fast.unionByName(slow)
+        .withColumn("url_hash", hash_c)
         .withColumn("host", host_c)
     )

@@ -23,67 +23,70 @@ operators/bloom.py and operators/cuckoo.py.
 from __future__ import annotations
 
 import functools as _functools
-import weakref as _weakref
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# Derived-frame caches keyed WEAKLY on the input DataFrame object: the
-# robots/politeness tables are fixed per crawl engine, but every wave
-# re-built the same per-host aggregation plan Column by Column — ~100
-# py4j round-trips of pure driver latency per call inside the per-wave
-# wall (guide §1.2 step 2; measured with cProfile: apply_robots_joined
-# 68 ms/call, the whole children-pipeline construction ~0.9 s/wave).
-# DataFrames are immutable, so reusing the derived frame is semantically
-# identical to rebuilding it — same logical plan, and Spark's exchange
-# reuse can now also recognize repeats. WeakKey so a dropped input frame
-# releases its cache entry with it.
-_ROBOTS_PER_HOST: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
-_POLITENESS_BUDGETS: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
+# Per-host tables: the robots rules and the politeness budgets are fixed
+# for a whole crawl, so their one-row-per-host derivations are split out
+# of the per-wave operators. A caller builds them once (robots_rules,
+# host_budgets) — the crawl engine persists them at the start of a run —
+# and every wave's join reads that table instead of re-aggregating (and
+# re-scanning) the caller's frame.
 
 
-def apply_robots_joined(frontier: DataFrame, robots: DataFrame) -> DataFrame:
-    """Scalable robots enforcement: rules pre-aggregated to ONE row per
-    host (prefixes sorted longest-first), broadcast, equi-joined on host —
-    an O(1) hash probe per row followed by a filter over that host's few
-    prefixes. Longest-prefix-wins; identical-prefix ties resolve
-    allow-wins (the struct sort puts allow=true first after the reverse —
-    the least-restrictive-rule tie convention); hosts without rules
-    default to allow.
+def robots_rules(robots: DataFrame) -> DataFrame:
+    """Robots rules (host, path_prefix, allow) pre-aggregated to ONE row
+    per host: ``_rules`` holds the host's prefixes sorted longest-first,
+    identical-prefix ties allow-first (the struct sort puts allow=true
+    first after the reverse — the least-restrictive-rule tie
+    convention). The table apply_robots_joined joins against."""
+    return robots.groupBy("host").agg(
+        F.reverse(
+            F.array_sort(
+                F.collect_list(
+                    F.struct(
+                        F.length("path_prefix").alias("len"),
+                        F.col("path_prefix").alias("prefix"),
+                        F.col("allow").alias("allow"),
+                    )
+                )
+            )
+        ).alias("_rules")
+    )
+
+
+def host_budgets(politeness: DataFrame) -> DataFrame:
+    """Politeness table (host, budget_per_wave, …) reduced to one budget
+    row per host (the minimum, defensively: duplicate rule rows would
+    otherwise multiply frontier rows through the join). The table
+    politeness_rank joins against."""
+    return politeness.groupBy("host").agg(
+        F.min("budget_per_wave").alias("budget_per_wave")
+    )
+
+
+def apply_robots_joined(frontier: DataFrame, rules: DataFrame) -> DataFrame:
+    """Scalable robots enforcement over ``rules = robots_rules(robots)``:
+    the one-row-per-host rules table is broadcast and equi-joined on host
+    — an O(1) hash probe per row followed by a filter over that host's
+    few prefixes. Longest-prefix-wins; identical-prefix ties resolve
+    allow-wins; hosts without rules default to allow.
 
     This is the engine's robots operator. (An earlier literal-map
     expression variant was removed: Spark evaluates map literals by
     LINEAR scan per lookup — at ~1000 rules that is ~4000 string
     compares per row; the broadcast join stays O(1) — and it had no
-    callers.)
-
-    The per-host aggregation (keyed weakly on the rules frame — fixed
-    per engine, rebuilt every wave before) and the constant allow
-    expression are cached; the join itself is per-call."""
-    per_host = _ROBOTS_PER_HOST.get(robots)
-    if per_host is None:
-        per_host = robots.groupBy("host").agg(
-            F.reverse(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.length("path_prefix").alias("len"),
-                            F.col("path_prefix").alias("prefix"),
-                            F.col("allow").alias("allow"),
-                        )
-                    )
-                )
-            ).alias("_rules")
-        )
-        _ROBOTS_PER_HOST[robots] = per_host
-    joined = frontier.join(F.broadcast(per_host), "host", "left")
+    callers.) The constant allow expression is cached; the join itself
+    is per-call."""
+    joined = frontier.join(F.broadcast(rules), "host", "left")
     return joined.filter(_robots_allow_col()).drop("_rules")
 
 
 @_functools.lru_cache(maxsize=1)
 def _robots_allow_col():
     """The longest-prefix-wins allow predicate over the joined `_rules`
-    array — constant expression, built once (see module-cache note)."""
+    array — constant expression, built once."""
     path = F.parse_url(F.col("url_norm"), F.lit("PATH"))
     matched = F.filter(F.col("_rules"), lambda r: path.startswith(r["prefix"]))
     return F.when(
@@ -91,11 +94,12 @@ def _robots_allow_col():
     ).otherwise(F.element_at(matched, 1)["allow"])
 
 
-def politeness_rank(pending: DataFrame, politeness: DataFrame,
+def politeness_rank(pending: DataFrame, budgets: DataFrame,
                     default_budget: int = 4, salt_buckets: int = 64) -> DataFrame:
     """Select this wave's fetch batch: per-host rank by (priority desc,
-    discovery wave, seq, url_hash), keep rank ≤ host budget. Budget table
-    is broadcast (one row per host).
+    discovery wave, seq, url_hash), keep rank ≤ host budget. ``budgets``
+    is ``host_budgets(politeness)`` (one row per host); hosts without a
+    row take ``default_budget``.
 
     default_budget=4 mirrors CONCURRENT_REQUESTS_PER_DOMAIN
     (/root/reference/xizang/settings.py:29). The deterministic tiebreak
@@ -120,24 +124,21 @@ def politeness_rank(pending: DataFrame, politeness: DataFrame,
     local cut; pass-through hosts are unaffected. Selection is therefore
     identical to the naive window (pinned by the ordering parity tests).
     """
-    # defensive: one budget row per host (duplicate rule rows would
-    # multiply frontier rows through the join). Budget and count tables
-    # are one row per host — NOT hint-forced broadcasts: below ~10^6
-    # hosts the optimizer broadcasts them anyway (fixture plans pinned in
-    # test_plan_quality), and at extreme host cardinality it degrades to
-    # a shuffle join on `host` instead of OOMing the driver.
-    budgets = _POLITENESS_BUDGETS.get(politeness)
-    if budgets is None:
-        budgets = politeness.groupBy("host").agg(
-            F.min("budget_per_wave").alias("budget_per_wave")
+    # One (host, _pending, _budget) row per pending host, joined back
+    # once — the budgets table is read once per call, so a persisted
+    # table stays one scan and one broadcast. NOT hint-forced broadcasts:
+    # below ~10^6 hosts the optimizer broadcasts them anyway (fixture
+    # plans pinned in test_plan_quality), and at extreme host cardinality
+    # it degrades to a shuffle join on `host` instead of OOMing the driver.
+    per_host = (
+        pending.groupBy("host").agg(F.count("*").alias("_pending"))
+        .join(budgets, on="host", how="left")
+        .select(
+            "host", "_pending",
+            F.coalesce(F.col("budget_per_wave"), F.lit(default_budget)).alias("_budget"),
         )
-        _POLITENESS_BUDGETS[politeness] = budgets
-    with_budget = pending.join(budgets, on="host", how="left").withColumn(
-        "_budget", F.coalesce(F.col("budget_per_wave"), F.lit(default_budget))
-    ).drop("budget_per_wave")
-
-    counts = with_budget.groupBy("host").agg(F.count("*").alias("_pending"))
-    with_counts = with_budget.join(counts, "host")
+    )
+    with_counts = pending.join(per_host, "host")
 
     under = with_counts.filter(F.col("_pending") <= F.col("_budget")).drop(
         "_budget", "_pending"
@@ -165,7 +166,7 @@ def _rank_cols(salt_buckets: int):
     """politeness_rank's constant (salt, local row_number, global
     row_number) Columns per salt width — the order list and the two
     window specs reference fixed column names only, so the trees build
-    once instead of every wave (see module-cache note)."""
+    once instead of every wave."""
     order = [F.col("priority").desc(), F.col("wave"), F.col("seq"), F.col("url_hash")]
     salt = F.pmod(F.col("url_hash"), F.lit(salt_buckets))
     local_w = Window.partitionBy("host", "_salt").orderBy(*order)

@@ -16,7 +16,8 @@ a driver-side loop over declarative DataFrame waves:
                     retries — settings.py:77-79 semantics)
       5. parse    = explode spans of 200-pages; links (listing pages in
                     REVERSE span order — bid_info.py:90) become children
-      6. children = resolve+canonicalize (Arrow UDF) → robots filter →
+      6. children = resolve+canonicalize (JVM first; only non-plain links
+                    cross to the Arrow UDF) → robots filter →
                     in-batch first-discovery dedup → seen-set dedup
                     (exact | bloom | hybrid | cuckoo) → enqueue seq
                     (packed key; the dense index past its bounds) →
@@ -31,7 +32,10 @@ Performance discipline: each wave materializes exactly two intermediates
 downstream branches), tracks the global sequence counter on the driver
 (an int, not an agg job), and takes row counts from the dense-index pass
 that already ran — so a wave is a fixed small number of jobs regardless
-of frontier size, and every job is shuffle-parallel.
+of frontier size, and every job is shuffle-parallel. The inputs that
+never change during a crawl — the per-host robots rules and politeness
+budgets, and the site's fetch projection — are persisted once per run,
+so no wave re-scans the caller's frames.
 """
 
 from __future__ import annotations
@@ -61,6 +65,13 @@ RETRY_LIMIT = 3
 # so RETRY_TIMES=3 allows 4 total fetches before the URL settles failed.
 MAX_ATTEMPTS = RETRY_LIMIT + 1
 RETRYABLE = [403, 500, 502, 503, 504, 522, 524, 408, 429]
+# RETRYABLE, MAX_ATTEMPTS and fixtures.sitegen.PRIORITY_BY_KIND are
+# FROZEN at first use: _retry_settle_default, _kind_expr and
+# _priority_expr lru_cache Column trees that bake them in as literals,
+# so rebinding or mutating them after the first wave of the process has
+# no effect on later crawls (clear those caches if they ever become
+# configurable). tests/test_crawl_equivalence.py pins that each cached
+# tree still matches a fresh build.
 
 
 def retry_settle_exprs(
@@ -157,15 +168,6 @@ EXTRACTED_SCHEMA = T.StructType(
 # a 44k-page site, local[32]: 2048 → 865-918 URLs/s vs always full
 # width → 372-638 vs 8192 → 548 (starved).
 MIN_ROWS_PER_TASK = 2048
-
-# Canonicalizer for children links, chosen per wave: the JVM+Arrow
-# hybrid (functions/urls.with_url_norm mode='hybrid') once the pending
-# estimate clears HYBRID_CANON_MIN_ROWS — wide waves amortize the
-# hybrid's split-union recompute and drop Python from the identity hot
-# path — and the pure Arrow UDF below it (interleaved A/B: 6k-URL waves
-# 835 vs 545 URLs/s for python vs hybrid; 8M-URL wave 160k vs ~140k the
-# other way).
-HYBRID_CANON_MIN_ROWS = 100_000
 
 # Children's enqueue key, computed per row with zero sort/collect:
 #   seq = (wave+1) << _WAVE_SHIFT | parent_pos << _POS_SHIFT | (eff_pos + _OFF_BIAS)
@@ -350,11 +352,19 @@ class CrawlEngine:
     ):
         self.spark = spark
         self.config = config or CrawlConfig()
-        self.site = site
         self.seeds = seeds
-        self.politeness = politeness
-        self.robots = robots
         self.transport = transport
+        # the crawl's static inputs, reduced once: one robots-rules row
+        # and one budget row per host, and the four site columns the
+        # sandbox fetch joins. run() persists them for its duration.
+        self._rules = fops.robots_rules(robots)
+        self._budgets = fops.host_budgets(politeness)
+        self._site_cols = None if transport is not None else site.select(
+            F.col("doc_id"),
+            F.col("page_kind").alias("_doc_kind"),
+            F.col("spans"),
+            F.col("fail_first"),
+        )
         self.seen_spec = _seen_spec(self.config)
         self._snapshots: dict[str, SnapshotTable] = {}
         self._deltas: dict[str, DeltaTable] = {}
@@ -380,12 +390,11 @@ class CrawlEngine:
         order = spark.createDataFrame(
             [(u, i) for i, u in enumerate(self.seeds)], "url string, _ord int"
         )
-        # seed lists are tiny — never worth the hybrid's split-union
-        seeds_norm = with_url_norm(order, mode="python")
+        seeds_norm = with_url_norm(order)
         # seeds go through the SAME enqueue-time checks as children
         # (simulator enqueue: robots then seen/url_hash dedup, first
         # occurrence wins; a disallowed seed never enters frontier or seen)
-        seeds_norm = fops.apply_robots_joined(seeds_norm, self.robots)
+        seeds_norm = fops.apply_robots_joined(seeds_norm, self._rules)
         payload = [c for c in seeds_norm.columns if c not in ("url_hash", "_ord")]
         seeds_norm = (
             seeds_norm.groupBy("url_hash")
@@ -616,7 +625,7 @@ class CrawlEngine:
         # st.pending IS the live frontier — no state filter, no settled rows
         # in any wave join
         pending = st.pending
-        ranked = fops.politeness_rank(pending, self.politeness, cfg.default_budget)
+        ranked = fops.politeness_rank(pending, self._budgets, cfg.default_budget)
         # global fetch order; distributed dense index (no single-task window)
         batch, n_batch, h_batch = dense_index(
             ranked,
@@ -669,12 +678,7 @@ class CrawlEngine:
         else:
             # sandbox fetch = equi-join on canonical URL (site side:
             # doc_id IS canonical)
-            site = self.site.select(
-                F.col("doc_id"),
-                F.col("page_kind").alias("_doc_kind"),
-                F.col("spans"),
-                F.col("fail_first"),
-            )
+            site = self._site_cols
             fetched = (
                 batch.join(site, batch.url_norm == site.doc_id, "left")
                 .withColumn(
@@ -774,15 +778,10 @@ class CrawlEngine:
                 "child_url", "/corp/persondetail", "/corp/listpersonperformance"
             ),
         )
-        # canonicalization mode per wave (see HYBRID_CANON_MIN_ROWS): wide
-        # waves take the JVM+Arrow hybrid, trickle waves the Arrow UDF
-        canon_mode = (
-            "hybrid" if (st.pending_est or 0) >= HYBRID_CANON_MIN_ROWS else "python"
-        )
         children = with_url_norm(
-            links, "child_url", base_col="parent", mode=canon_mode
+            links, "child_url", base_col="parent"
         ).filter(F.col("url_norm").isNotNull())
-        children = fops.apply_robots_joined(children, self.robots)
+        children = fops.apply_robots_joined(children, self._rules)
         # in-batch first-discovery wins (simulator enqueues in fetch
         # order). min(struct(order..., payload...)) per url_hash instead of
         # a row_number window: hash aggregation gets map-side partial
@@ -984,7 +983,15 @@ class CrawlEngine:
                 f"({self._catalog.root}); pass resume=True to continue it, "
                 "or point checkpoint_dir at a fresh directory"
             )
+        # Static inputs are read ONCE per run: persisted and materialized
+        # here, so every wave's politeness, robots and fetch joins read
+        # cached blocks. Caller frames built with createDataFrame(list)
+        # are Python-RDD scans — each re-read cost one Python task (~0.2 s
+        # of CPU whatever its row count) per partition per wave.
+        statics = [t for t in (self._rules, self._budgets, self._site_cols)
+                   if t is not None]
         try:
+            _fan_out({str(i): t.persist().count for i, t in enumerate(statics)})
             st = self.resume() if resume else self._initial_state()
             if not resume:
                 st = self._commit(st)
@@ -995,3 +1002,5 @@ class CrawlEngine:
             return st
         finally:
             self.spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+            for t in statics:
+                t.unpersist()

@@ -21,6 +21,18 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# Generated-class cache (spark.sql.codegen.cache.maxEntries: a static
+# conf, one LRU per JVM; Spark's default is 100). A working set larger
+# than the cache thrashes it and every unit of work recompiles. Measured
+# on a 4-CPU host, local[4], with perfbench's workloads (Janino compiles
+# from CodegenMetrics; crawl: warm crawl_polite waves, corpus: warm
+# passes of the 16 headline queries):
+#   entries      100      200   400    1000   2000
+#   crawl/wave   124-133  30    30     26-32  30
+#   corpus/pass  372      296   10-12  6-14   6
+# 400 is the smallest size on the plateau for both.
+CODEGEN_CACHE_ENTRIES = 400
+
 
 def _scratch_local_dir() -> str | None:
     """Spark scratch (shuffle files, spills) directory.
@@ -167,6 +179,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # ANSI off: the reference's float()/None coercions (SURVEY.md §2.8
         # F3) rely on permissive casts; try_* functions are used where the
         # distinction matters.

@@ -13,9 +13,18 @@ SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
+# The suite's JVM heap cap. At get_spark's 24 GB default, G1 kept
+# growing the heap instead of collecting: on a 16 GB host the test JVM
+# passed 13 GB RSS mid-suite and the kernel OOM-killed it. Repeated
+# fixture crawls in one JVM keep under 3 GB live after a full GC; with
+# this cap the whole suite peaks near 6 GB RSS.
+TEST_DRIVER_MEM = "6g"
+
+
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", cpus=8, shuffle_partitions=8)
+    s = get_spark(app_name="tests", cpus=8, shuffle_partitions=8,
+                  extra_conf={"spark.driver.memory": TEST_DRIVER_MEM})
     yield s
 
 

@@ -254,22 +254,68 @@ def test_simulated_clock_uses_per_host_budget(spark):
     assert rows[0].fetches == 20
 
 
-def test_hybrid_canonicalizer_crawl_parity(
-    spark, sim, site_df, politeness_df, robots_df, monkeypatch
-):
-    """The JVM+Arrow hybrid canonicalizer (the wide-wave path the engine
-    only takes past HYBRID_CANON_MIN_ROWS) must reproduce the
-    simulator's ordering and seen set exactly when FORCED on the parity
-    fixture — byte-equality of the identity function is what makes the
-    per-wave switch safe."""
-    monkeypatch.setattr(crawl, "HYBRID_CANON_MIN_ROWS", 0)
-    eng = CrawlEngine(
+def test_hybrid_canonicalizer_crawl_parity(spark, politeness_df, robots_df):
+    """Children whose URL is not plain take with_url_norm's Arrow
+    fallback inside a crawl. Sitegen's own links are all plain, so two
+    stage pages get extra links: a percent-escaped query that resolves
+    to an existing listing page, a '+' in a query value, a relative
+    link (resolved against its parent), and an out-of-range port
+    (invalid: never enqueued). The crawl must still match the simulator
+    in fetch order and seen set."""
+    from tbbid_scrapy_spark.fixtures.sitegen_spark import SITE_SCHEMA
+
+    site = sitegen.build_site(n_listing_pages=3, projects_per_listing=4, seed=42)
+    stages = sorted(u for u, p in site.items() if p.page_kind == "stage")[:2]
+    for url in stages:
+        page = site[url]
+        pid = url.rsplit("/", 1)[1]
+        hot = sitegen.HOT_HOST
+        page.add("link", "escaped", f"https://{hot}/listing?province=%35%34%30000&page=%33")
+        page.add("link", "plus", f"https://{page.host}/notice/{pid}?q=a+b")
+        page.add("link", "relative", f"../bids/{pid}?from=stage")
+        page.add("link", "bad port", f"https://{page.host}:70000/bids/{pid}")
+    site_df = spark.createDataFrame(sitegen.site_to_rows(site), SITE_SCHEMA)
+    sim = simulate_crawl(
+        site, sitegen.default_seeds(), sitegen.default_politeness(),
+        sitegen.default_robots(), max_waves=50,
+    )
+    # the extra links really changed the crawl: new URLs were discovered
+    assert any("q=a+b" in u for u in sim.seen)
+    assert any("from=stage" in u for u in sim.seen)
+    st = CrawlEngine(
         spark, site_df, sitegen.default_seeds(), politeness_df, robots_df,
         CrawlConfig(max_waves=50, seen_mode="exact"),
-    )
-    st = eng.run()
+    ).run()
     assert _engine_order(st) == sim.fetch_log
     assert {r.url_norm for r in st.seen.collect()} == sim.seen
+
+
+def test_cached_policy_trees_match_fresh_build(spark, monkeypatch):
+    """_kind_expr, _priority_expr and the default retry_settle_exprs()
+    are lru_cached Column trees that bake in PRIORITY_BY_KIND, RETRYABLE
+    and MAX_ATTEMPTS at first use. Each cached tree must plan to the
+    same semantics as a fresh uncached build; after a policy change a
+    fresh build differs while the cached tree does not follow it (the
+    frozen-at-first-call behaviour documented next to the constants)."""
+    df = spark.createDataFrame(
+        [("https://h.org/notice/1", "notice", 503, 1)],
+        "url_norm string, page_kind string, status int, attempts int",
+    )
+
+    def same(a, b):
+        return df.select(a.alias("x")).sameSemantics(df.select(b.alias("x")))
+
+    cached = [crawl._kind_expr("url_norm"), crawl._priority_expr("page_kind"),
+              *crawl.retry_settle_exprs()]
+    fresh = [crawl._kind_expr.__wrapped__("url_norm"),
+             crawl._priority_expr.__wrapped__("page_kind"),
+             *crawl.retry_settle_exprs(F.col("status"), F.col("attempts"))]
+    for c, f in zip(cached, fresh):
+        assert same(c, f)
+
+    monkeypatch.setattr(crawl, "MAX_ATTEMPTS", crawl.MAX_ATTEMPTS + 1)
+    changed, _ = crawl.retry_settle_exprs(F.col("status"), F.col("attempts"))
+    assert not same(crawl.retry_settle_exprs()[0], changed)
 
 
 def test_retry_settle_exprs_literal_precedence(spark):

@@ -259,17 +259,20 @@ def test_jvm_canonicalizer_byte_equal_on_plain(spark):
 
 def test_trailing_newline_url_same_in_both_modes(spark):
     """A URL with a trailing line terminator must canonicalize identically
-    in hybrid and python modes. Java's $ matches before a FINAL \\n, so a
+    through with_url_norm's JVM-first split and the all-Arrow UDF. Java's $ matches before a FINAL \\n, so a
     '$'-anchored plain-predicate would route 'http://a/b\\n' to the JVM
     path where parse_url (java.net.URI) NULLs it — collapsing every such
     URL onto one xxhash64 identity; \\z anchoring keeps them on the
     Python path, which strips the terminator (urlsplit semantics)."""
-    from tbbid_scrapy_spark.functions.urls import with_url_norm
+    from tbbid_scrapy_spark.functions.urls import canonicalize_url_pd, with_url_norm
 
     urls = ["http://h.org/a\n", "https://h.org/b\r\n", "https://h.org/c"]
     df = spark.createDataFrame([(u,) for u in urls], "url string")
-    hybrid = {r.url: r.url_norm for r in with_url_norm(df, mode="hybrid").collect()}
-    python = {r.url: r.url_norm for r in with_url_norm(df, mode="python").collect()}
+    hybrid = {r.url: r.url_norm for r in with_url_norm(df).collect()}
+    python = {
+        r.url: r.url_norm
+        for r in df.withColumn("url_norm", canonicalize_url_pd("url")).collect()
+    }
     assert hybrid == python
     assert hybrid["http://h.org/a\n"] == "http://h.org/a"
     assert hybrid["https://h.org/b\r\n"] == "https://h.org/b"

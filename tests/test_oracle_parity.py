@@ -67,3 +67,28 @@ def test_entry_smoke(spark):
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
 def test_rows_only_queries_run(spark, name):
     assert QUERIES[name](spark, SF_DIR).count() >= 0
+
+
+def test_schema_trust_is_per_data_directory(spark, tmp_path, monkeypatch):
+    """A directory whose files match the declared schemas must not vouch
+    for another: a second directory with a drifted column type (here
+    r_regionkey written as a string) falls back to schema inference."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    monkeypatch.setattr(entrymod, "_SCHEMA_TRUSTED", {})
+    good = entrymod._t(spark, SF_DIR, "region")
+    assert good.schema == entrymod._TESTDATA_SCHEMAS["region"]
+    assert entrymod._SCHEMA_TRUSTED == {SF_DIR: True}
+
+    drifted = tmp_path / "drifted"
+    drifted.mkdir()
+    pq.write_table(
+        pa.table({"r_regionkey": ["0", "1"], "r_name": ["AFRICA", "AMERICA"]}),
+        str(drifted / "region.parquet"),
+    )
+    df = entrymod._t(spark, str(drifted), "region")
+    assert df.schema["r_regionkey"].dataType == T.StringType()
+    assert sorted(r.r_regionkey for r in df.collect()) == ["0", "1"]
+    assert entrymod._SCHEMA_TRUSTED[str(drifted)] is False

@@ -94,9 +94,9 @@ def _pending_fixture(spark, n=1000):
 def test_politeness_no_unpartitioned_window(spark, politeness_df):
     """The two-phase rank must never funnel a host through an
     unpartitioned window; every Window in the plan is keyed."""
-    from tbbid_scrapy_spark.operators.frontier import politeness_rank
+    from tbbid_scrapy_spark.operators.frontier import host_budgets, politeness_rank
 
-    df = politeness_rank(_pending_fixture(spark), politeness_df)
+    df = politeness_rank(_pending_fixture(spark), host_budgets(politeness_df))
     plan = _explain(df, "simple")  # one line per operator
     assert "BroadcastHashJoin" in plan  # budget + count joins broadcast
     # over-budget path: local (host,salt) window + tiny global (host) window
@@ -108,12 +108,13 @@ def test_politeness_under_budget_skips_window(spark):
     """Hosts with pending ≤ budget bypass ranking entirely — the lifted-
     budget throughput bench must contain NO Window operator at all."""
     from tbbid_scrapy_spark import schemas
-    from tbbid_scrapy_spark.operators.frontier import politeness_rank
+    from tbbid_scrapy_spark.operators.frontier import host_budgets, politeness_rank
 
     lifted = spark.createDataFrame(
         [("host0", 10**6, 0.0), ("host1", 10**6, 0.0), ("host2", 10**6, 0.0)],
         schemas.POLITENESS,
     )
+    lifted = host_budgets(lifted)
     df = politeness_rank(_pending_fixture(spark), lifted)
     assert df.count() == 1000  # everything selected
     # the over-budget branch exists in the plan but receives zero rows;
@@ -130,7 +131,7 @@ def test_apply_robots_keeps_duplicate_url_hash_rows(spark):
     expression and the per-row-window join — for having no production
     callers; this pin moved to the joined operator, which is a pure
     join+filter and therefore per-row by construction.)"""
-    from tbbid_scrapy_spark.operators.frontier import apply_robots_joined
+    from tbbid_scrapy_spark.operators.frontier import apply_robots_joined, robots_rules
 
     frontier = spark.createDataFrame(
         [
@@ -144,7 +145,7 @@ def test_apply_robots_keeps_duplicate_url_hash_rows(spark):
         [("h.example.org", "/", True), ("h.example.org", "/blocked", False)],
         "host string, path_prefix string, allow boolean",
     )
-    out = apply_robots_joined(frontier, robots).collect()
+    out = apply_robots_joined(frontier, robots_rules(robots)).collect()
     assert sorted((r.url_hash, r.parent) for r in out) == [(11, "p1"), (11, "p2")]
 
 

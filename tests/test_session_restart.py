@@ -1,8 +1,8 @@
-"""SparkSession restart in one process: the lru_cache'd Column trees and
-the weakly cached robots/politeness aggregations are built under the
-first session, so a second session (``spark.stop()`` then a new
-``get_spark()``) must still give identical results from URL
-canonicalization, robots filtering, a crawl and simhash dedup.
+"""SparkSession restart in one process: the lru_cache'd Column trees are
+built under the first session, so a second session (``spark.stop()``
+then a new ``get_spark()``) must still give identical results from URL
+canonicalization (the JVM-first path and the all-Arrow UDF), robots
+filtering, a crawl and simhash dedup.
 
 Runs in a subprocess, like test_spark_submit.py: stopping the session
 in-process would take the suite's shared session fixture down with it.
@@ -20,12 +20,14 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 JOB = """
 import json
 
+from pyspark.sql import functions as F
+
 from tbbid_scrapy_spark import schemas
 from tbbid_scrapy_spark.fixtures import sitegen
 from tbbid_scrapy_spark.fixtures.sitegen_spark import SITE_SCHEMA
-from tbbid_scrapy_spark.functions.urls import with_url_norm
+from tbbid_scrapy_spark.functions.urls import canonicalize_url_pd, url_hash_col, with_url_norm
 from tbbid_scrapy_spark.operators import dedup
-from tbbid_scrapy_spark.operators.frontier import apply_robots_joined
+from tbbid_scrapy_spark.operators.frontier import apply_robots_joined, robots_rules
 from tbbid_scrapy_spark.plans.crawl import CrawlConfig, CrawlEngine
 from tbbid_scrapy_spark.session import get_spark
 
@@ -49,12 +51,17 @@ def probe():
     spark = get_spark(app_name="restart", cpus=2, shuffle_partitions=2)
     robots = spark.createDataFrame(sitegen.default_robots(), schemas.ROBOTS)
     urls = spark.createDataFrame([(u,) for u in URLS], "url string")
+    arrow = urls.withColumn("url_norm", canonicalize_url_pd("url")).select(
+        "url", "url_norm",
+        url_hash_col(F.col("url_norm")).alias("url_hash"),
+        F.lower(F.parse_url("url_norm", F.lit("HOST"))).alias("host"),
+    )
     norm = {
         mode: sorted(
             (r.url, r.url_norm, r.url_hash, r.host)
-            for r in apply_robots_joined(with_url_norm(urls, mode=mode), robots).collect()
+            for r in apply_robots_joined(df, robots_rules(robots)).collect()
         )
-        for mode in ("python", "hybrid")
+        for mode, df in (("python", arrow), ("hybrid", with_url_norm(urls)))
     }
     site = sitegen.build_site(n_listing_pages=2, projects_per_listing=5, seed=42)
     site_df = spark.createDataFrame(sitegen.site_to_rows(site), SITE_SCHEMA)
