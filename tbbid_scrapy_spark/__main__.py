@@ -88,9 +88,9 @@ def main(argv: list[str] | None = None) -> int:
         "fetched": st.fetch_log.count(),
         "seen": st.seen.count(),
         "extracted_spans": st.extracted.count(),
-        # st.metrics is the THIS-process wave log (empty right after a
-        # resume that ran no waves); the durable per-(wave, partition,
-        # host) lineage lives in the metrics delta table
+        # st.metrics is the THIS-process per-wave list (empty right after
+        # a resume that ran no waves); the durable per-(wave, partition,
+        # host) lineage is metrics_table, a view over the wave log
         "metrics": st.metrics,
         "metric_rows_total": st.metrics_table.count(),
     }

@@ -22,20 +22,26 @@ a driver-side loop over declarative DataFrame waves:
                     (exact | bloom | hybrid | cuckoo) → enqueue seq
                     (packed key; the dense index past its bounds) →
                     append pending
-      7. commit   = per-wave DELTAS (settled rows, new seen, log,
-                    extracted, metrics) + live-pending snapshot, made
-                    visible by ONE atomic manifest flip → lossless resume
-                    point whose I/O is O(wave), not O(total state)
+      7. commit   = two per-wave DELTAS — the new seen URLs and the wave
+                    LOG (the fetched batch after the settle expressions,
+                    with fetch position, status, spans and partition id)
+                    — + live-pending snapshot, made visible by ONE atomic
+                    manifest flip → lossless resume point whose I/O is
+                    O(wave), not O(total state)
 
 Performance discipline: each wave materializes exactly two intermediates
 (the fetched batch and the new children — both needed by several
 downstream branches), tracks the global sequence counter on the driver
 (an int, not an agg job), and takes row counts from the dense-index pass
 that already ran — so a wave is a fixed small number of jobs regardless
-of frontier size, and every job is shuffle-parallel. The inputs that
-never change during a crawl — the per-host robots rules and politeness
-budgets, and the site's fetch projection — are persisted once per run,
-so no wave re-scans the caller's frames.
+of frontier size, and every job is shuffle-parallel. A wave commits only
+what the next wave reads (pending, seen, shards) plus its one log part;
+the settled frontier rows, fetch log, extracted spans and
+per-(partition, host) metrics are views over the log, computed when a
+caller reads them, so no wave pays a job or an aggregation for them. The
+inputs that never change during a crawl — the per-host robots rules and
+politeness budgets, and the site's fetch projection — are persisted once
+per run, so no wave re-scans the caller's frames.
 """
 
 from __future__ import annotations
@@ -56,9 +62,10 @@ from tbbid_scrapy_spark.operators import frontier as fops
 from tbbid_scrapy_spark.operators.bloom import BloomSpec, bloom_test_insert
 from tbbid_scrapy_spark.operators.cuckoo import CuckooSpec, cuckoo_test
 from tbbid_scrapy_spark.plans.seq import dense_index
+from tbbid_scrapy_spark.schemas import SPAN
 from tbbid_scrapy_spark.sources.sink import Catalog, DeltaTable, SnapshotTable
 
-_DELTA_TABLES = ("done", "seen", "fetch_log", "extracted", "metrics")
+_DELTA_TABLES = ("seen", "log")
 
 RETRY_LIMIT = 3
 # Scrapy's RETRY_TIMES counts retries IN ADDITION to the first attempt,
@@ -122,28 +129,18 @@ def retry_settle_exprs(
 def _retry_settle_default() -> tuple["F.Column", "F.Column"]:
     return retry_settle_exprs(F.col("status"), F.col("attempts"))
 
-FETCH_LOG_SCHEMA = T.StructType(
-    [
-        T.StructField("wave", T.IntegerType(), False),
-        T.StructField("fetch_pos", T.LongType(), False),
-        T.StructField("url_norm", T.StringType(), False),
-        T.StructField("status", T.IntegerType(), False),
-    ]
-)
+# The wave log's columns after the frontier's own: the wave that fetched
+# the row, its global fetch position, the fetch status, the parsed spans
+# and the Spark partition the row was fetched in.
+LOG_FIELDS = [
+    T.StructField("fetch_wave", T.IntegerType(), False),
+    T.StructField("fetch_pos", T.LongType(), False),
+    T.StructField("status", T.IntegerType(), False),
+    T.StructField("spans", T.ArrayType(SPAN), True),
+    T.StructField("partition_id", T.IntegerType(), False),
+]
 
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("wave", T.IntegerType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("host", T.StringType(), False),
-        T.StructField("urls_scheduled", T.LongType(), False),
-        T.StructField("fetched_ok", T.LongType(), False),
-        T.StructField("failed_404", T.LongType(), False),
-        T.StructField("retried_5xx", T.LongType(), False),
-        T.StructField("spans_extracted", T.LongType(), False),
-    ]
-)
-
+# the schema of CrawlState.extracted
 EXTRACTED_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),
@@ -252,9 +249,9 @@ def _union(parts: list[DataFrame]) -> DataFrame:
 def _fan_out(jobs: dict[str, Callable[[], object]]) -> dict[str, object]:
     """Run a commit's independent jobs concurrently, one thread each, and
     return their results by name. Spark schedules concurrent jobs fine
-    (local-mode cores are shared); serial submission would put ~7 job
-    round-trips of pure scheduling latency on every wave's critical
-    path."""
+    (local-mode cores are shared); serial submission would put one job
+    round-trip per table of pure scheduling latency on every wave's
+    critical path."""
     with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
         futures = {k: ex.submit(fn) for k, fn in jobs.items()}
         return {k: f.result() for k, f in futures.items()}
@@ -286,13 +283,19 @@ class CrawlState:
       single table a wave rewrites. Settled rows never ride through
       another wave's join or commit.
     - ``parts``   : per APPEND-ONLY table in ``_DELTA_TABLES``, one delta
-      per wave — ``done`` (settled fetched/failed rows: wave w commits
-      |batch| rows, not |history|), ``seen`` (url_hash, url_norm; the r1
+      per wave — ``seen`` (url_hash, url_norm of the URLs the wave
+      discovered; the exact anti-join reads it every wave, and the r1
       design committed the full union every wave — O(waves ×
-      total_state), the VERDICT's top scale-killer), ``fetch_log``,
-      ``extracted`` and ``metrics``.
+      total_state), the VERDICT's top scale-killer) and ``log`` (the
+      wave's fetched batch after the settle expressions: every frontier
+      column plus ``LOG_FIELDS`` — wave w commits |batch| rows, not
+      |history|).
     - ``committed_parts``: per delta table, the part names already in the
       checkpoint — a commit writes only parts beyond this list.
+
+    ``frontier``'s settled rows, ``fetch_log``, ``extracted`` and
+    ``metrics_table`` are views over the log, built when read; no wave
+    reads them.
     """
 
     pending: DataFrame
@@ -304,14 +307,19 @@ class CrawlState:
     committed_parts: dict[str, list[str]] = field(default_factory=dict)
     # driver-tracked size ESTIMATE of `pending` (exact batch/new counts,
     # retries ignored) — sizes the next wave's partitioning without a
-    # count job; None → full configured parallelism
-    pending_est: int | None = None
+    # count job
+    pending_est: int = 1
+
+    @property
+    def log(self) -> DataFrame:
+        return _union(self.parts["log"])
 
     @property
     def frontier(self) -> DataFrame:
         """Full frontier view (live ∪ settled) — read-side compatibility;
         the engine itself never joins against this union."""
-        return _union([self.pending, *self.parts["done"]])
+        settled = self.log.filter(F.col("state") != "pending")
+        return self.pending.unionByName(settled.select(*self.pending.columns))
 
     @property
     def seen(self) -> DataFrame:
@@ -319,18 +327,45 @@ class CrawlState:
 
     @property
     def fetch_log(self) -> DataFrame:
-        return _union(self.parts["fetch_log"])
+        return self.log.select(
+            F.col("fetch_wave").alias("wave"), "fetch_pos", "url_norm", "status"
+        )
 
     @property
     def extracted(self) -> DataFrame:
-        return _union(self.parts["extracted"])
+        return (
+            self.log.filter(F.col("status") == 200)
+            .select(
+                F.col("url_norm").alias("doc_id"),
+                F.explode("spans").alias("s"),
+                F.col("fetch_wave").alias("wave"),
+            )
+            .select("doc_id", "s.kind", "s.text", "s.media_ref", "s.offset", "wave")
+        )
 
     @property
     def metrics_table(self) -> DataFrame:
         """Per-(wave, partition, host) fetch/parse metrics — the
         north-star's per-partition lineage companion (row-level lineage
         itself is the frontier's parent_id chain)."""
-        return _union(self.parts["metrics"])
+        status = F.col("status")
+        return self.log.groupBy(
+            F.col("fetch_wave").alias("wave"), "partition_id", "host"
+        ).agg(
+            F.count("*").alias("urls_scheduled"),
+            F.sum((status == 200).cast("long")).alias("fetched_ok"),
+            # permanent failures = 404 plus any non-retryable error
+            # status (the state machine fails those immediately);
+            # retried = the full RETRYABLE set, not literal 503 only —
+            # real HttpTransport runs see 500/502/429/… too
+            F.sum(((status != 200) & ~status.isin(RETRYABLE)).cast("long")).alias(
+                "failed_404"
+            ),
+            F.sum(status.isin(RETRYABLE).cast("long")).alias("retried_5xx"),
+            F.sum(F.when(status == 200, F.size("spans")).otherwise(0)).alias(
+                "spans_extracted"
+            ),
+        )
 
 
 class CrawlEngine:
@@ -421,16 +456,10 @@ class CrawlEngine:
         )
         seen0 = f0.select("url_hash", "url_norm")
         shards0 = None if self.seen_spec is None else self._rebuild_shards(seen0)
-        parts = {
-            "done": [spark.createDataFrame([], f0.schema)],
-            "seen": [seen0],
-            "fetch_log": [spark.createDataFrame([], FETCH_LOG_SCHEMA)],
-            "extracted": [spark.createDataFrame([], EXTRACTED_SCHEMA)],
-            "metrics": [spark.createDataFrame([], METRICS_SCHEMA)],
-        }
+        log0 = spark.createDataFrame([], T.StructType(f0.schema.fields + LOG_FIELDS))
         return CrawlState(
             pending=f0,
-            parts=parts,
+            parts={"seen": [seen0], "log": [log0]},
             shards=shards0,
             metrics=[],
             wave=0,
@@ -518,27 +547,17 @@ class CrawlEngine:
         # first — per-wave unions would otherwise accumulate partitions
         # linearly in wave count. Only the NEWEST delta of each append-only
         # table needs materializing; older parts were checkpointed already.
-        # All 7 checkpoints are independent scans of already-persisted wave
-        # blocks, so they fan out like the parquet writes above.
-        n = (
-            self._sized_parts(st.pending_est)
-            if st.pending_est is not None
-            else self.spark.sparkContext.defaultParallelism
-        )
+        # The checkpoints (pending, seen, log, shards) are independent scans
+        # of already-persisted wave blocks, so they fan out like the parquet
+        # writes above.
+        n = self._sized_parts(st.pending_est)
 
-        def _ckpt_last(parts: list[DataFrame], nparts: int) -> list[DataFrame]:
-            out = list(parts)
-            if out:
-                out[-1] = out[-1].coalesce(nparts).localCheckpoint()
-            return out
+        def _ckpt_last(parts: list[DataFrame]) -> list[DataFrame]:
+            return [*parts[:-1], parts[-1].coalesce(n).localCheckpoint()]
 
         jobs = {"pending": lambda: st.pending.coalesce(n).localCheckpoint()}
         for name in _DELTA_TABLES:
-            # the per-(partition, host) metrics delta is a handful of rows
-            nparts = 1 if name == "metrics" else n
-            jobs[name] = lambda name=name, nparts=nparts: _ckpt_last(
-                st.parts[name], nparts
-            )
+            jobs[name] = lambda name=name: _ckpt_last(st.parts[name])
         if st.shards is not None:
             jobs["shards"] = lambda: st.shards.localCheckpoint()
         res = _fan_out(jobs)
@@ -559,6 +578,12 @@ class CrawlEngine:
                 "run with resume=False to start a crawl there"
             )
         snaps, deltas = manifest["snapshots"], manifest["deltas"]
+        if "log" not in deltas:
+            raise ValueError(
+                f"{self._catalog.root} holds a checkpoint in the old five-table "
+                f"layout (deltas {sorted(deltas)}), which this engine cannot "
+                "resume; start the crawl in a fresh checkpoint_dir"
+            )
         parts = {
             name: [self._deltas[name].read(deltas[name])] for name in _DELTA_TABLES
         }
@@ -594,7 +619,7 @@ class CrawlEngine:
             wave=manifest["wave"],
             next_seq=manifest["next_seq"],
             committed_parts={k: list(v) for k, v in deltas.items()},
-            pending_est=manifest.get("pending_est"),
+            pending_est=manifest["pending_est"],
         )
 
     def resume(self) -> CrawlState:
@@ -615,12 +640,9 @@ class CrawlEngine:
         # headroom for fan-out; shuffle width follows the wave size so
         # AQE's read-side coalescing is matched by the write side too
         width = self.spark.sparkContext.defaultParallelism
-        if st.pending_est is not None:
-            wave_parts = self._sized_parts(st.pending_est)
-            links_parts = min(width, wave_parts * 4)
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(links_parts))
-        else:
-            wave_parts = links_parts = width
+        wave_parts = self._sized_parts(st.pending_est)
+        links_parts = min(width, wave_parts * 4)
+        self.spark.conf.set("spark.sql.shuffle.partitions", str(links_parts))
 
         # st.pending IS the live frontier — no state filter, no settled rows
         # in any wave join
@@ -691,53 +713,7 @@ class CrawlEngine:
             )
             scratch.append(fetched)
 
-        log_add = fetched.select(
-            F.lit(w).alias("wave"), "fetch_pos", "url_norm", "status"
-        )
-        # per-(partition, host) fetch/parse metrics — computed on the
-        # already-persisted batch, one narrow aggregation per wave
-        m_add = (
-            fetched.groupBy(
-                F.spark_partition_id().alias("partition_id"), F.col("host")
-            )
-            .agg(
-                F.count("*").alias("urls_scheduled"),
-                F.sum((F.col("status") == 200).cast("long")).alias("fetched_ok"),
-                # permanent failures = 404 plus any non-retryable error
-                # status (the state machine fails those immediately);
-                # retried = the full RETRYABLE set, not literal 503 only —
-                # real HttpTransport runs see 500/502/429/… too
-                F.sum(
-                    (
-                        (F.col("status") != 200)
-                        & ~F.col("status").isin(RETRYABLE)
-                    ).cast("long")
-                ).alias("failed_404"),
-                F.sum(F.col("status").isin(RETRYABLE).cast("long")).alias(
-                    "retried_5xx"
-                ),
-                F.sum(
-                    F.when(F.col("status") == 200, F.size("spans")).otherwise(0)
-                ).alias("spans_extracted"),
-            )
-            .select(
-                F.lit(w).alias("wave"), "partition_id", "host", "urls_scheduled",
-                "fetched_ok", "failed_404", "retried_5xx", "spans_extracted",
-            )
-        )
-
         ok = fetched.filter(F.col("status") == 200)
-        ex_add = ok.select(
-            F.col("url_norm").alias("doc_id"),
-            F.explode("spans").alias("s"),
-        ).select(
-            "doc_id",
-            F.col("s.kind").alias("kind"),
-            F.col("s.text").alias("text"),
-            F.col("s.media_ref").alias("media_ref"),
-            F.col("s.offset").alias("offset"),
-            F.lit(w).alias("wave"),
-        )
 
         # ---- children: links, listing pages reversed ----
         links = ok.select(
@@ -901,36 +877,33 @@ class CrawlEngine:
         )
 
         # ---- frontier state transitions: ONLY the fetched batch moves ----
-        # The batch rows (already carrying every frontier column) fork into
-        # a settled delta (append-only) and retry rows that re-enter the
-        # live set; untouched pending rows pass through one anti-join on
-        # the (small) batch keys. No join ever sees settled history — this
-        # is what makes wave cost O(live + batch), not O(everything ever).
+        # The batch rows (already carrying every frontier column) settle in
+        # ONE projection, the wave's append-only log part; its retry rows
+        # re-enter the live set; untouched pending rows pass through one
+        # anti-join on the (small) batch keys. No join ever sees settled
+        # history — this is what makes wave cost O(live + batch), not
+        # O(everything ever). partition_id is read in this projection over
+        # the persisted batch, so metrics_table sees the fetch partitions.
         front_cols = st.pending.columns
         state_expr, attempts_expr = retry_settle_exprs()
-        batch_after = fetched.select(
-            *[c for c in front_cols if c not in ("state", "attempts", "last_status")],
-            state_expr.alias("state"),
-            attempts_expr.alias("attempts"),
-            F.col("status").alias("last_status"),
-        ).select(*front_cols)
-        done_add = batch_after.filter(F.col("state") != "pending")
-        retries = batch_after.filter(F.col("state") == "pending")
+        settled = {"state": state_expr, "attempts": attempts_expr,
+                   "last_status": F.col("status")}
+        log_add = fetched.select(
+            *[settled.get(c, F.col(c)).alias(c) for c in front_cols],
+            F.lit(w).alias("fetch_wave"),
+            "fetch_pos",
+            "status",
+            "spans",
+            F.spark_partition_id().alias("partition_id"),
+        )
+        retries = log_add.filter(F.col("state") == "pending").select(*front_cols)
         new_pending = (
             st.pending.join(batch.select("url_hash"), "url_hash", "left_anti")
             .select(*front_cols)
             .unionByName(retries)
             .unionByName(f_add.select(*front_cols))
         )
-        seen_add = children.select("url_hash", "url_norm")
-
-        pending_est = (
-            max(1, st.pending_est - n_batch + n_new)
-            if st.pending_est is not None
-            else None
-        )
-        adds = {"done": done_add, "seen": seen_add, "fetch_log": log_add,
-                "extracted": ex_add, "metrics": m_add}
+        adds = {"seen": children.select("url_hash", "url_norm"), "log": log_add}
         committed = self._commit(
             replace(
                 st,
@@ -939,7 +912,7 @@ class CrawlEngine:
                 shards=new_shards,
                 wave=w + 1,
                 next_seq=st.next_seq + n_new,
-                pending_est=pending_est,
+                pending_est=max(1, st.pending_est - n_batch + n_new),
             )
         )
         committed.metrics.append(

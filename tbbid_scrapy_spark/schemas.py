@@ -86,10 +86,10 @@ SEEDS = T.StructType(
     ]
 )
 
-# The engine's per-wave metrics schema lives where it is produced:
-# plans/crawl.py METRICS_SCHEMA (wave, host, fetched_ok, failed_404,
-# retried_5xx, spans_extracted). An earlier divergent METRICS struct
-# here had zero consumers and could only mislead — removed.
+# The engine's per-wave metrics live where they are produced:
+# plans/crawl.py CrawlState.metrics_table (wave, partition_id, host,
+# urls_scheduled, fetched_ok, failed_404, retried_5xx, spans_extracted),
+# a view over the wave log.
 
 # ---------------------------------------------------------------------------
 # Relational target tables (mirror /root/reference/xizang/models/models.py)

@@ -32,17 +32,22 @@ def checkpointed(spark, site_df, politeness_df, robots_df, tmp_path_factory):
 
 def test_commit_writes_wave_deltas_not_history(spark, checkpointed):
     """Every committed part of an append-only table holds ONE wave's rows;
-    cumulative history is never rewritten. fetch_log part rows must equal
+    cumulative history is never rewritten. Wave-log part rows must equal
     the per-wave batch sizes the engine itself reported."""
     ck, eng, st = checkpointed
     manifest = Catalog(ck).read()
     per_wave = {m["wave"]: m["urls_fetched"] for m in st.metrics}
-    log_parts = manifest["deltas"]["fetch_log"]
+    log_parts = [
+        spark.read.parquet(os.path.join(ck, "log", n))
+        for n in manifest["deltas"]["log"]
+    ]
     # part 0 is the initial empty frame; part for wave w holds wave w's log
-    sizes = [_parquet_rows(spark, os.path.join(ck, "fetch_log", n)) for n in log_parts]
+    sizes = [p.count() for p in log_parts]
     assert sizes[0] == 0
     for i, n_rows in enumerate(sizes[1:]):
         assert n_rows == per_wave[i], f"wave {i} delta {n_rows} != batch {per_wave[i]}"
+        waves = {r.fetch_wave for r in log_parts[i + 1].select("fetch_wave").collect()}
+        assert waves == {i}
     # seen parts: wave w's part holds only that wave's newly seen URLs —
     # total across parts equals the final seen count (no row ever rewritten)
     seen_sizes = [
@@ -53,14 +58,11 @@ def test_commit_writes_wave_deltas_not_history(spark, checkpointed):
     new_by_wave = {m["wave"]: m["urls_new"] for m in st.metrics}
     for i, n_rows in enumerate(seen_sizes[1:]):
         assert n_rows == new_by_wave[i]
-    # done parts: wave w's settled rows ≤ batch size, sum = settled total
-    done_sizes = [
-        _parquet_rows(spark, os.path.join(ck, "done", n))
-        for n in manifest["deltas"]["done"]
-    ]
+    # settled log rows: wave w's settled rows ≤ batch size, sum = settled total
+    settled_sizes = [p.filter("state != 'pending'").count() for p in log_parts]
     settled = st.frontier.filter("state != 'pending'").count()
-    assert sum(done_sizes) == settled
-    for i, n_rows in enumerate(done_sizes[1:]):
+    assert sum(settled_sizes) == settled
+    for i, n_rows in enumerate(settled_sizes[1:]):
         assert n_rows <= per_wave[i]
 
 

@@ -213,6 +213,49 @@ def test_retry_exhaustion_boundary_is_scrapy_semantics(spark, politeness_df, rob
     assert _engine_order(st) == sim.fetch_log
 
 
+def test_metrics_table_sums_to_fetch_log_and_extracted(spark, politeness_df, robots_df):
+    """metrics_table's per-(wave, partition, host) counters add up, wave
+    by wave, to the fetch log and the extracted spans of that wave. The
+    site is the suite's, with every third stage page 503ing once
+    (``fail_every``; the suite's own site has no retries) and one notice
+    page missing, so retries and 404s both occur."""
+    from collections import Counter
+
+    from tests.conftest import SITE_SCHEMA
+
+    site = sitegen.build_site(
+        n_listing_pages=3, projects_per_listing=4, seed=42, fail_every=3
+    )
+    del site[min(u for u, p in site.items() if p.page_kind == "notice")]
+    site_df = spark.createDataFrame(sitegen.site_to_rows(site), SITE_SCHEMA)
+    st = CrawlEngine(
+        spark, site_df, sitegen.default_seeds(), politeness_df, robots_df,
+        CrawlConfig(max_waves=50),
+    ).run()
+
+    metrics = st.metrics_table.collect()
+    keys = [(r.wave, r.partition_id, r.host) for r in metrics]
+    assert len(keys) == len(set(keys))
+    for r in metrics:
+        assert r.fetched_ok + r.failed_404 + r.retried_5xx == r.urls_scheduled, r
+    assert any(r.retried_5xx > 0 for r in metrics)
+    assert any(r.failed_404 > 0 for r in metrics)
+
+    log = st.fetch_log.collect()
+    scheduled = Counter(r.wave for r in log)
+    ok = Counter(r.wave for r in log if r.status == 200)
+    spans = Counter(r.wave for r in st.extracted.select("wave").collect())
+    by_wave = {}
+    for r in metrics:
+        got = by_wave.setdefault(r.wave, [0, 0, 0])
+        got[0] += r.urls_scheduled
+        got[1] += r.fetched_ok
+        got[2] += r.spans_extracted
+    assert set(by_wave) == set(scheduled)
+    for w, got in by_wave.items():
+        assert got == [scheduled[w], ok[w], spans[w]], f"wave {w}"
+
+
 def test_simulated_politeness_clock(engine_state, politeness_df):
     """The derived politeness timeline respects the reference's rate
     ceiling: per wave, a host with budget 4 and 2s delay contributes

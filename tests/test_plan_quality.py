@@ -177,3 +177,49 @@ def test_dense_index_has_no_hash_exchange(spark):
     finally:
         if handle is not None:
             handle.unpersist()
+
+
+def _spread_scan(spark, tmp_path, name: str, files: int):
+    """A parquet scan of ``files`` one-file partitions of ids 0..999."""
+    path = str(tmp_path / name)
+    spark.range(0, 1000).repartition(files).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_spread_narrow_scan_gets_repartition_and_pushdown_barrier(spark, tmp_path):
+    """A scan with fewer than half of defaultParallelism partitions is
+    repartitioned to full width, with the always-true nondeterministic
+    filter above the repartition: a caller's deterministic filter then
+    runs after the exchange, in parallel, instead of being pushed into
+    the single scan task."""
+    from tbbid_scrapy_spark.operators.dedup import _spread
+
+    width = spark.sparkContext.defaultParallelism
+    narrow = _spread_scan(spark, tmp_path, "narrow", 1)
+    assert narrow.rdd.getNumPartitions() * 2 <= width
+    out = _spread(narrow).filter(F.col("id") > 5)
+    logical = out._jdf.queryExecution().optimizedPlan().toString()
+    assert f"Repartition {width}, true" in logical, logical
+    assert "(monotonically_increasing_id() >= 0)" in logical, logical
+    plan = _explain(out)
+    # the scan gets no pushed filter; the caller's filter is evaluated
+    # after the round-robin exchange (formatted details run scan-first)
+    assert "PushedFilters" not in plan, plan
+    assert plan.index("RoundRobinPartitioning") < plan.index("(id#"), plan
+    assert out.count() == 994
+
+
+def test_spread_wide_input_passes_through(spark, tmp_path):
+    """A scan with at least half of defaultParallelism partitions is
+    returned untouched: no Repartition, no barrier, and a caller's
+    deterministic filter still reaches the parquet scan."""
+    from tbbid_scrapy_spark.operators.dedup import _spread
+
+    width = spark.sparkContext.defaultParallelism
+    wide = _spread_scan(spark, tmp_path, "wide", width)
+    assert wide.rdd.getNumPartitions() * 2 > width
+    out = _spread(wide).filter(F.col("id") > 5)
+    logical = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "Repartition" not in logical, logical
+    assert "monotonically_increasing_id" not in logical, logical
+    assert "PushedFilters: [IsNotNull(id), GreaterThan(id,5)]" in _explain(out)

@@ -204,6 +204,7 @@ def test_fresh_run_refuses_committed_checkpoint_dir(spark, site_df, politeness_d
     [
         ("resume_without_checkpoint_dir", "requires CrawlConfig.checkpoint_dir"),
         ("resume_empty_checkpoint_dir", "no committed manifest"),
+        ("resume_five_table_checkpoint", "five-table.*fresh checkpoint_dir"),
         ("simhash_band_width", "width must divide 64"),
     ],
 )
@@ -213,8 +214,12 @@ def test_bad_caller_input_raises_value_error(
     """Caller input is checked with raises, not asserts: under
     ``python -O`` an assert vanishes and each case failed later with an
     unrelated error (AttributeError on a None catalog, TypeError on a
-    missing manifest, a silently wrong band split)."""
+    missing manifest, a silently wrong band split). A checkpoint in the
+    older layout — five per-wave delta tables (done, seen, fetch_log,
+    extracted, metrics), no wave log — names that layout and asks for a
+    fresh checkpoint_dir instead of failing on a bare KeyError."""
     from tbbid_scrapy_spark.operators import dedup
+    from tbbid_scrapy_spark.sources.sink import Catalog
 
     def crawl(checkpoint_dir):
         return CrawlEngine(
@@ -222,9 +227,20 @@ def test_bad_caller_input_raises_value_error(
             CrawlConfig(max_waves=1, checkpoint_dir=checkpoint_dir),
         ).run(resume=True)
 
+    def five_table_dir():
+        ck = str(tmp_path / "ck5")
+        tables = ("done", "seen", "fetch_log", "extracted", "metrics")
+        Catalog(ck).commit({
+            "wave": 3, "next_seq": 40, "pending_est": 12, "seen_format": None,
+            "snapshots": {"pending": 4},
+            "deltas": {t: [f"part-{w:06d}-0" for w in range(4)] for t in tables},
+        })
+        return ck
+
     calls = {
         "resume_without_checkpoint_dir": lambda: crawl(None),
         "resume_empty_checkpoint_dir": lambda: crawl(str(tmp_path / "ck")),
+        "resume_five_table_checkpoint": lambda: crawl(five_table_dir()),
         "simhash_band_width": lambda: dedup.simhash_rotated_band_candidates(
             spark.createDataFrame([("d", 1)], "doc_id string, simhash long"),
             width=7,
