@@ -49,22 +49,17 @@ def main(argv: list[str] | None = None) -> int:
         bench.main()
         return 0
 
-    from pyspark.sql import types as T
-
     from tbbid_scrapy_spark import schemas
     from tbbid_scrapy_spark.fixtures import sitegen
+    from tbbid_scrapy_spark.fixtures.sitegen_spark import SITE_SCHEMA
     from tbbid_scrapy_spark.operators.bloom import BloomSpec
     from tbbid_scrapy_spark.operators.cuckoo import CuckooSpec
     from tbbid_scrapy_spark.plans.crawl import CrawlConfig, CrawlEngine
     from tbbid_scrapy_spark.session import get_spark
 
     spark = get_spark(app_name=f"tbbid_{args.cmd}", cpus=args.cpus)
-    site_schema = T.StructType(
-        list(schemas.DOCUMENTS.fields)
-        + [T.StructField("fail_first", T.IntegerType(), False)]
-    )
     site = sitegen.build_site(args.listings, args.projects, seed=42)
-    site_df = spark.createDataFrame(sitegen.site_to_rows(site), site_schema)
+    site_df = spark.createDataFrame(sitegen.site_to_rows(site), SITE_SCHEMA)
     pol = spark.createDataFrame(
         sitegen.default_politeness(args.budget, args.budget), schemas.POLITENESS
     )

@@ -20,9 +20,10 @@ Design
 - Probes: k positions derived from the single 64-bit hash by the
   Kirsch-Mitzenmacher double-hashing scheme (h_lo + i*h_hi mod m) —
   standard result: no extra hash functions needed.
-- Test/insert run as the shard layer's cogrouped ``applyInPandas``: one
-  Arrow batch per shard, the numpy bit ops below inside — no per-row
-  Python. This module keeps only the spec and those kernels.
+- Test+insert is ONE pass of the shard layer's cogroup
+  (``sharded.probe_update``): one Arrow batch per shard, the numpy bit
+  ops below inside — no per-row Python. This module keeps only the spec,
+  those kernels and that one Spark operation, ``bloom_test_insert``.
 
 False-positive caveat: a bloom FP silently drops a never-seen URL. The
 crawl loop therefore supports four modes (plans/crawl.py): 'exact'
@@ -31,7 +32,9 @@ crawl loop therefore supports four modes (plans/crawl.py): 'exact'
 on survivors only — at scale the prefilter removes ~all duplicates so the
 exact join touches a tiny remainder; zero false drops), and 'cuckoo'
 (operators/cuckoo.py — same sharded interface and FP-only guarantees,
-plus DELETION for retry re-admission, which a bloom cannot do).
+plus DELETION for retry re-admission, which a bloom cannot do). The
+three approximate modes share one fused test+insert pass per wave; the
+hybrid exact-confirm runs on its verdicts.
 """
 
 from __future__ import annotations
@@ -89,7 +92,10 @@ class BloomSpec:
         return empty_shards(spark, self)
 
     def insert(self, keys: DataFrame, shards: DataFrame) -> DataFrame:
-        return bloom_insert(keys, shards, self)
+        """The shard table with every key's bits set: the shard rows of
+        the test+insert (from empty shards, every key tests not-seen, so
+        ``n_inserted`` counts every key)."""
+        return sharded.shard_rows(bloom_test_insert(keys, shards, self))
 
 
 # Version of the probe-derivation math below (_splitmix64 remix + lo/hi
@@ -153,53 +159,23 @@ def empty_shards(spark: SparkSession, spec: BloomSpec) -> DataFrame:
     )
 
 
-def bloom_test(candidates: DataFrame, shards: DataFrame, spec: BloomSpec,
-               hash_col: str = "url_hash") -> DataFrame:
-    """Candidates + ``maybe_seen`` boolean; candidate rows pass through
-    untouched."""
-
-    def test(payload: bytes, hashes: np.ndarray) -> np.ndarray:
-        bitset = np.frombuffer(payload, dtype=np.uint8)
-        return _test_bits(bitset, _positions(hashes, spec))
-
-    return sharded.probe(
-        candidates, shards, schemas.SEEN_SHARDS, spec.n_shards, test, hash_col
-    )
-
-
-def bloom_insert(candidates: DataFrame, shards: DataFrame, spec: BloomSpec,
-                 hash_col: str = "url_hash") -> DataFrame:
-    """New shard table with all candidate hashes inserted."""
-
-    def insert(payload: bytes, hashes: np.ndarray, shard_id: int, n: int):
-        bitset = np.frombuffer(payload, dtype=np.uint8).copy()
-        _set_bits(bitset, _positions(hashes, spec))
-        return bitset.tobytes(), n + len(hashes)
-
-    return sharded.update(
-        candidates, shards, schemas.SEEN_SHARDS, spec.n_shards, insert, hash_col
-    )
-
-
 def bloom_test_insert(candidates: DataFrame, shards: DataFrame, spec: BloomSpec,
                       hash_col: str = "url_hash") -> DataFrame:
     """Fused membership test + insert (``sharded.probe_update``): ONE
-    cogrouped pass per wave where the split ops take two. The
-    ``row_kind='v'`` rows are tested against the PRE-batch bitset
-    (identical to ``bloom_test``); the ``row_kind='s'`` rows carry every
-    candidate's bits set. Setting bits for a maybe-seen candidate is
-    bitwise idempotent, so the resulting bitset equals
-    test-then-insert-novel exactly; ``n_inserted`` counts bloom-fresh
-    candidates (in hybrid mode the split pipeline counted fresh +
-    FP-confirmed-novel — a ≤FP-rate difference in the METADATA counter
-    only, never in membership)."""
+    cogrouped pass. The ``row_kind='v'`` rows are tested against the
+    PRE-batch bitset; the ``row_kind='s'`` rows carry every candidate's
+    bits set. Setting bits for a maybe-seen candidate is bitwise
+    idempotent, so the resulting bitset equals test-then-insert-novel
+    exactly; ``n_inserted`` counts bloom-fresh candidates (in hybrid mode
+    an FP-confirmed-novel URL is enqueued but not counted — a ≤FP-rate
+    difference in the METADATA counter only, never in membership)."""
 
-    def test_insert(payload: bytes, hashes: np.ndarray) -> tuple[np.ndarray, bytes]:
+    def test_insert(payload: bytes, hashes: np.ndarray):
         bitset = np.frombuffer(payload, dtype=np.uint8).copy()
         pos = _positions(hashes, spec)
         seen = _test_bits(bitset, pos)
         _set_bits(bitset, pos)
-        return seen, bitset.tobytes()
+        return seen, bitset.tobytes(), int((~seen).sum())
 
     return sharded.probe_update(
         candidates, shards, schemas.SEEN_SHARDS, spec.n_shards, test_insert, hash_col

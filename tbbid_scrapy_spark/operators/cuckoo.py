@@ -1,8 +1,9 @@
 """Sharded cuckoo-filter URL-seen set — the deletable alternative to the
 bloom filter (operators/bloom.py), behind the same DataFrame interface:
-shards are rows ``(shard_id, table binary, n_inserted)``, test/insert/
-delete run through the shared shard layer (operators/sharded.py) as
-cogrouped ``applyInPandas`` with one Arrow batch per shard.
+shards are rows ``(shard_id, table binary, n_inserted)``, and both Spark
+operations — ``cuckoo_test_insert`` and ``cuckoo_delete`` — are one pass
+of the shard layer's cogroup (``sharded.probe_update``), one Arrow batch
+per shard.
 
 Why cuckoo (BASELINE.json north-star names "bloom/cuckoo"): a bloom
 filter cannot delete — re-admitting a URL after a permanent-failure
@@ -22,9 +23,11 @@ Layout per shard: ``n_buckets`` buckets × 4 slots × uint16 fingerprint
 
 Insert walks the standard eviction loop (≤500 kicks) with a
 DETERMINISTIC victim slot (derived from the kick counter and fingerprint
-— reproducible runs, no RNG state). A full table raises rather than
-silently dropping: a seen-set false negative means a duplicate fetch,
-but a silent drop would also mean an unbounded one.
+— reproducible runs, no RNG state), and inserts a batch's keys in
+ascending hash order, so the same keys give the same table bytes
+whatever order the shuffle delivers them in. A full table raises rather
+than silently dropping: a seen-set false negative means a duplicate
+fetch, but a silent drop would also mean an unbounded one.
 """
 
 from __future__ import annotations
@@ -84,7 +87,9 @@ class CuckooSpec:
         return empty_cuckoo_shards(spark, self)
 
     def insert(self, keys: DataFrame, shards: DataFrame) -> DataFrame:
-        return cuckoo_insert(keys, shards, self)
+        """The shard table with every key inserted: the shard rows of the
+        test+insert (from empty shards, every key tests not-seen)."""
+        return sharded.shard_rows(cuckoo_test_insert(keys, shards, self))
 
 
 # Version of CUCKOO's own fingerprint/bucket derivation (_fp_and_buckets:
@@ -132,29 +137,11 @@ def empty_cuckoo_shards(spark: SparkSession, spec: CuckooSpec) -> DataFrame:
     )
 
 
-def _table_of(payload: bytes, spec: CuckooSpec, copy: bool = True) -> np.ndarray:
-    """Shard bytes → (buckets, SLOTS) uint16 view. ``copy=False`` returns
-    the read-only frombuffer view — the membership test never mutates,
-    and at the 10^10 spec (~23 MB/shard) an unconditional memcpy per
-    Arrow batch is pure waste; insert/delete MUST copy (they mutate)."""
-    view = np.frombuffer(payload, dtype=np.uint16).reshape(
+def _table_of(payload: bytes, spec: CuckooSpec) -> np.ndarray:
+    """Shard bytes → a writable (buckets, SLOTS) uint16 copy."""
+    return np.frombuffer(payload, dtype=np.uint16).reshape(
         spec.buckets_per_shard, SLOTS
-    )
-    return view.copy() if copy else view
-
-
-def cuckoo_test(candidates: DataFrame, shards: DataFrame, spec: CuckooSpec,
-                hash_col: str = "url_hash") -> DataFrame:
-    """Candidates + ``maybe_seen`` (FP possible at spec.fp_rate, no FN)."""
-
-    def test(payload: bytes, hashes: np.ndarray) -> np.ndarray:
-        table = _table_of(payload, spec, copy=False)  # read-only probe
-        fp, i1, i2 = _fp_and_buckets(hashes, spec.buckets_per_shard)
-        return (table[i1] == fp[:, None]).any(axis=1) | (
-            table[i2] == fp[:, None]
-        ).any(axis=1)
-
-    return sharded.probe(candidates, shards, SHARDS_SCHEMA, spec.n_shards, test, hash_col)
+    ).copy()
 
 
 def _insert_one(table: np.ndarray, fp: int, i1: int, i2: int,
@@ -179,47 +166,63 @@ def _insert_one(table: np.ndarray, fp: int, i1: int, i2: int,
     return False
 
 
-def cuckoo_insert(candidates: DataFrame, shards: DataFrame, spec: CuckooSpec,
-                  hash_col: str = "url_hash") -> DataFrame:
-    """New shard table with all candidate hashes inserted. Raises on a
-    full shard (size with CuckooSpec.for_capacity headroom). The eviction
-    walk is per-item Python inside the Arrow batch — the price of
-    deletability; bloom stays the insert-throughput path."""
+def _test_insert(payload: bytes, hashes: np.ndarray, spec: CuckooSpec):
+    """``sharded.probe_update`` kernel: test every hash against the
+    PRE-batch table (FP possible at spec.fp_rate, no FN), then insert
+    only the not-seen ones in ascending hash order; verdicts stay in
+    input order. Raises on a full shard (size with
+    CuckooSpec.for_capacity headroom). The eviction walk is per-item
+    Python inside the Arrow batch — the price of deletability; bloom
+    stays the insert-throughput path."""
+    table = _table_of(payload, spec)
+    fp, i1, i2 = _fp_and_buckets(hashes, spec.buckets_per_shard)
+    seen = ((table[i1] == fp[:, None]).any(axis=1)
+            | (table[i2] == fp[:, None]).any(axis=1))
+    fresh = np.flatnonzero(~seen)
+    for done, k in enumerate(fresh[np.argsort(hashes[fresh], kind="stable")]):
+        if not _insert_one(table, int(fp[k]), int(i1[k]), int(i2[k]),
+                           spec.buckets_per_shard):
+            raise RuntimeError(
+                f"cuckoo shard full after {done} of {len(fresh)} new keys — "
+                "resize with CuckooSpec.for_capacity"
+            )
+    return seen, table.tobytes(), len(fresh)
 
-    def insert(payload: bytes, hashes: np.ndarray, shard_id: int, n: int):
-        table = _table_of(payload, spec)
-        fp, i1, i2 = _fp_and_buckets(hashes, spec.buckets_per_shard)
-        for k in range(len(fp)):
-            if not _insert_one(table, int(fp[k]), int(i1[k]), int(i2[k]),
-                               spec.buckets_per_shard):
-                raise RuntimeError(
-                    f"cuckoo shard {shard_id} full at {n + k} items — "
-                    "resize with CuckooSpec.for_capacity"
-                )
-        return table.tobytes(), n + len(fp)
 
-    return sharded.update(candidates, shards, SHARDS_SCHEMA, spec.n_shards, insert, hash_col)
+def cuckoo_test_insert(candidates: DataFrame, shards: DataFrame, spec: CuckooSpec,
+                       hash_col: str = "url_hash") -> DataFrame:
+    """Fused membership test + insert (``sharded.probe_update``): ONE
+    cogrouped pass. The ``row_kind='v'`` rows carry ``maybe_seen``
+    against the PRE-batch table; the ``row_kind='s'`` rows carry every
+    not-seen candidate inserted, ``n_inserted`` grown by their count."""
+    return sharded.probe_update(
+        candidates, shards, SHARDS_SCHEMA, spec.n_shards,
+        lambda payload, hashes: _test_insert(payload, hashes, spec), hash_col,
+    )
 
 
 def cuckoo_delete(candidates: DataFrame, shards: DataFrame, spec: CuckooSpec,
                   hash_col: str = "url_hash") -> DataFrame:
-    """Remove ONE fingerprint copy per candidate (the cuckoo-over-bloom
-    capability: retry re-admission / un-seeing). Deleting a never-inserted
-    key is a no-op on the table (it can, at fp_rate, remove a colliding
-    entry — the documented cuckoo semantics: only delete what you
-    inserted)."""
+    """New shard table with ONE fingerprint copy removed per candidate
+    (the cuckoo-over-bloom capability: retry re-admission / un-seeing).
+    Deleting a never-inserted key is a no-op on the table (it can, at
+    fp_rate, remove a colliding entry — the documented cuckoo semantics:
+    only delete what you inserted)."""
 
-    def delete(payload: bytes, hashes: np.ndarray, shard_id: int, n: int):
+    def delete(payload: bytes, hashes: np.ndarray):
         table = _table_of(payload, spec)
         fp, i1, i2 = _fp_and_buckets(hashes, spec.buckets_per_shard)
-        removed = 0
+        removed = np.zeros(len(fp), dtype=bool)
         for k in range(len(fp)):
             for i in (int(i1[k]), int(i2[k])):
                 slots = np.nonzero(table[i] == fp[k])[0]
                 if slots.size:
                     table[i][slots[0]] = 0
-                    removed += 1
+                    removed[k] = True
                     break
-        return table.tobytes(), n - removed
+        return removed, table.tobytes(), -int(removed.sum())
 
-    return sharded.update(candidates, shards, SHARDS_SCHEMA, spec.n_shards, delete, hash_col)
+    return sharded.shard_rows(
+        sharded.probe_update(candidates, shards, SHARDS_SCHEMA, spec.n_shards,
+                             delete, hash_col)
+    )

@@ -10,13 +10,17 @@ filters differ only in their kernels:
 - routing: ``shard_id = pmod(url_hash, n_shards)``;
 - the all-zero table, built distributedly (``spark.range``) so that a
   4096-shard × multi-MB filter never materializes on the driver;
-- the per-shard cogroup: candidates grouped by shard_id cogrouped with
-  the shard rows, one Arrow batch per shard, the kernel called once per
-  group on whole numpy arrays — no per-row Python.
+- ONE per-shard cogroup, ``probe_update``: candidates grouped by
+  shard_id cogrouped with the shard rows, one Arrow batch per shard, the
+  kernel called once per group on whole numpy arrays — no per-row
+  Python. Every Spark-level filter operation (bloom test+insert, cuckoo
+  test+insert, cuckoo delete) is this one pass with its own kernel; each
+  cogroup is a shuffle of both sides plus an Arrow round trip, so an
+  operation never pays for two.
 
 Empty-side rules, the same for every filter and every operation: a
 shard with no candidates passes through unchanged; candidates whose
-shard row is missing test not-seen and get no shard row — shards are
+shard row is missing get a False flag and no shard row — shards are
 never invented for stray shard_ids.
 """
 
@@ -47,77 +51,19 @@ def empty_table(spark: SparkSession, n_shards: int, schema: T.StructType,
     )
 
 
-def probe(candidates: DataFrame, shards: DataFrame, schema: T.StructType,
-          n_shards: int, test: Callable[[bytes, np.ndarray], np.ndarray],
-          hash_col: str = "url_hash") -> DataFrame:
-    """Candidates + ``maybe_seen``. ``test(payload, hashes)`` returns one
-    bool per hash; candidate rows pass through untouched."""
-    cand = with_shard_id(candidates, n_shards, hash_col)
-    # StructType.add mutates in place — build a fresh copy instead
-    out_schema = T.StructType(
-        list(cand.schema.fields) + [T.StructField("maybe_seen", T.BooleanType(), False)]
-    )
-    cols = [f.name for f in cand.schema.fields]
-    payload_col = schema.names[1]
-
-    def per_shard(key, cand_pdf: pd.DataFrame, shard_pdf: pd.DataFrame) -> pd.DataFrame:
-        if cand_pdf.empty:
-            return pd.DataFrame(columns=cols + ["maybe_seen"])
-        if shard_pdf.empty:
-            return cand_pdf.assign(maybe_seen=False)
-        hits = test(shard_pdf[payload_col].iloc[0], cand_pdf[hash_col].to_numpy())
-        return cand_pdf.assign(maybe_seen=hits)
-
-    return (
-        cand.groupBy("shard_id")
-        .cogroup(shards.groupBy("shard_id"))
-        .applyInPandas(per_shard, schema=out_schema)
-        .drop("shard_id")
-    )
-
-
-def update(candidates: DataFrame, shards: DataFrame, schema: T.StructType,
-           n_shards: int,
-           apply: Callable[[bytes, np.ndarray, int, int], tuple[bytes, int]],
-           hash_col: str = "url_hash") -> DataFrame:
-    """New shard table. ``apply(payload, hashes, shard_id, n_inserted)``
-    returns the shard's new (payload, n_inserted); it runs only for
-    shards that have candidates (full outer cogroup)."""
-    cand = with_shard_id(candidates.select(hash_col), n_shards, hash_col)
-    payload_col = schema.names[1]
-
-    def per_shard(key, shard_pdf: pd.DataFrame, cand_pdf: pd.DataFrame) -> pd.DataFrame:
-        if shard_pdf.empty or cand_pdf.empty:
-            return shard_pdf[schema.names]
-        shard_id = int(key[0])
-        payload, n = apply(
-            shard_pdf[payload_col].iloc[0], cand_pdf[hash_col].to_numpy(),
-            shard_id, int(shard_pdf["n_inserted"].iloc[0]),
-        )
-        return pd.DataFrame(
-            {"shard_id": [shard_id], payload_col: [payload], "n_inserted": [n]}
-        )
-
-    return (
-        shards.groupBy("shard_id")
-        .cogroup(cand.groupBy("shard_id"))
-        .applyInPandas(per_shard, schema=schema)
-    )
-
-
 def probe_update(candidates: DataFrame, shards: DataFrame, schema: T.StructType,
                  n_shards: int,
-                 test_insert: Callable[[bytes, np.ndarray], tuple[np.ndarray, bytes]],
+                 kernel: Callable[[bytes, np.ndarray], tuple[np.ndarray, bytes, int]],
                  hash_col: str = "url_hash") -> DataFrame:
-    """``probe`` and ``update`` fused into ONE cogrouped pass (each pass
-    = shuffle both sides + an Arrow round-trip). ``test_insert(payload,
-    hashes)`` returns (maybe_seen against the PRE-batch payload, payload
-    with every hash inserted). Emits a UNION-shaped frame the caller
-    persists and filters:
+    """The shard layer's one cogrouped pass. ``kernel(payload, hashes)``
+    returns (one flag per hash, the shard's new payload, the change to
+    its ``n_inserted``); for a test+insert the flag is ``maybe_seen``
+    against the PRE-batch payload. Emits a UNION-shaped frame the caller
+    persists and splits with ``verdicts`` and ``shard_rows``:
 
     - ``row_kind='v'``: one row per candidate — (hash_col, maybe_seen);
     - ``row_kind='s'``: one row per existing shard — (shard_id, payload,
-      n_inserted), where n_inserted grows by the not-seen candidates."""
+      n_inserted)."""
     cand = with_shard_id(candidates.select(hash_col), n_shards, hash_col)
     payload_col = schema.names[1]
     out_schema = T.StructType(
@@ -167,12 +113,12 @@ def probe_update(candidates: DataFrame, shards: DataFrame, schema: T.StructType,
         if shard_pdf.empty:
             seen = np.zeros(len(hashes), dtype=bool)
         else:
-            seen, payload = test_insert(shard_pdf[payload_col].iloc[0], hashes)
+            seen, payload, n_delta = kernel(shard_pdf[payload_col].iloc[0], hashes)
             out.append(
                 shard_row(
                     int(shard_pdf["shard_id"].iloc[0]),
                     payload,
-                    int(shard_pdf["n_inserted"].iloc[0]) + int((~seen).sum()),
+                    int(shard_pdf["n_inserted"].iloc[0]) + int(n_delta),
                 )
             )
         out.append(
@@ -194,3 +140,15 @@ def probe_update(candidates: DataFrame, shards: DataFrame, schema: T.StructType,
         .cogroup(cand.groupBy("shard_id"))
         .applyInPandas(per_shard, schema=out_schema)
     )
+
+
+def verdicts(fused: DataFrame, hash_col: str = "url_hash") -> DataFrame:
+    """The ``row_kind='v'`` rows of a ``probe_update`` frame: (hash_col,
+    maybe_seen)."""
+    return fused.filter(F.col("row_kind") == "v").select(hash_col, "maybe_seen")
+
+
+def shard_rows(fused: DataFrame) -> DataFrame:
+    """The ``row_kind='s'`` rows of a ``probe_update`` frame: the new
+    shard table (shard_id, payload, n_inserted)."""
+    return fused.filter(F.col("row_kind") == "s").select(*fused.columns[1:4])

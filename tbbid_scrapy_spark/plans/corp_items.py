@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from tbbid_scrapy_spark.plans.crawl import _kind_expr
+
 QUAL_KEYWORDS = ["工程施工", "工程专业", "承包贰级", "承包壹级"]  # :115-117
 
 
@@ -37,22 +39,9 @@ def _q(doc_id, key: str):
     return F.url_decode(F.parse_url(doc_id, F.lit("QUERY"), F.lit(key)))
 
 
-def _kind(doc_id):
-    path = F.parse_url(doc_id, F.lit("PATH"))
-    return (
-        F.when(path.startswith("/corp/search"), "corp_search")
-        .when(path.startswith("/corp/detail"), "corp_detail")
-        .when(path.startswith("/corp/emps"), "emp_list")
-        .when(path.startswith("/corp/listpersonperformance"), "person_perf_list")
-        .when(path.startswith("/corp/perfdetail"), "perf_detail")
-        .when(path.startswith("/corp/security"), "security_list")
-        .otherwise("other")
-    )
-
-
 def _cells(extracted: DataFrame, kind: str) -> DataFrame:
     """Table cells of one page kind with a dense per-doc position."""
-    ex = extracted.withColumn("page_kind", _kind(F.col("doc_id")))
+    ex = extracted.withColumn("page_kind", _kind_expr("doc_id"))
     cells = ex.filter(
         (F.col("page_kind") == kind) & (F.col("kind") == "table_cell")
     )
@@ -138,7 +127,7 @@ def corp_detail_items(extracted: DataFrame) -> DataFrame:
 
 def _emp_spans(extracted: DataFrame) -> DataFrame:
     """emp_list spans minus pagination links, densely positioned."""
-    ex = extracted.withColumn("page_kind", _kind(F.col("doc_id")))
+    ex = extracted.withColumn("page_kind", _kind_expr("doc_id"))
     spans = ex.filter(
         (F.col("page_kind") == "emp_list")
         & (
@@ -190,7 +179,7 @@ def employee_rows(extracted: DataFrame) -> DataFrame:
 def person_pages(extracted: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(birth_dates, perf_stubs): birth per person; stride-3 performance
     rows with data_level and the perf-detail key."""
-    ex = extracted.withColumn("page_kind", _kind(F.col("doc_id")))
+    ex = extracted.withColumn("page_kind", _kind_expr("doc_id"))
     spans = ex.filter(F.col("page_kind") == "person_perf_list")
     w = Window.partitionBy("doc_id").orderBy("offset")
     spans = spans.withColumn("pos", F.row_number().over(w) - 1)

@@ -19,9 +19,11 @@ a driver-side loop over declarative DataFrame waves:
       6. children = resolve+canonicalize (JVM first; only non-plain links
                     cross to the Arrow UDF) → robots filter →
                     in-batch first-discovery dedup → seen-set dedup
-                    (exact | bloom | hybrid | cuckoo) → enqueue seq
-                    (packed key; the dense index past its bounds) →
-                    append pending
+                    (exact anti-join, or for bloom | hybrid | cuckoo ONE
+                    fused test+insert pass whose shard rows are the
+                    wave's new shards; hybrid exact-confirms its
+                    positives) → enqueue seq (packed key; the dense
+                    index past its bounds) → append pending
       7. commit   = two per-wave DELTAS — the new seen URLs and the wave
                     LOG (the fetched batch after the settle expressions,
                     with fetch position, status, spans and partition id)
@@ -59,8 +61,9 @@ from pyspark.sql import types as T
 from tbbid_scrapy_spark.fixtures.sitegen import PRIORITY_BY_KIND
 from tbbid_scrapy_spark.functions.urls import with_url_norm
 from tbbid_scrapy_spark.operators import frontier as fops
+from tbbid_scrapy_spark.operators import sharded
 from tbbid_scrapy_spark.operators.bloom import BloomSpec, bloom_test_insert
-from tbbid_scrapy_spark.operators.cuckoo import CuckooSpec, cuckoo_test
+from tbbid_scrapy_spark.operators.cuckoo import CuckooSpec, cuckoo_test_insert
 from tbbid_scrapy_spark.plans.seq import dense_index
 from tbbid_scrapy_spark.schemas import SPAN
 from tbbid_scrapy_spark.sources.sink import Catalog, DeltaTable, SnapshotTable
@@ -481,7 +484,8 @@ class CrawlEngine:
     def _rebuild_shards(self, seen: DataFrame) -> DataFrame:
         """Build the approximate seen structure from an exact seen table
         (the format-independent source of truth): every url_hash is
-        inserted into fresh shards under the CURRENT format. Builds the
+        inserted into fresh shards under the CURRENT format by the spec's
+        test+insert (from empty shards nothing tests seen). Builds the
         seed state's shards, and rebuilds at resume on a format mismatch
         — O(|seen|) once; the next commit persists the rebuilt shards
         under the new tag."""
@@ -606,10 +610,9 @@ class CrawlEngine:
                 file=sys.stderr,
             )
             # eager localCheckpoint: the O(|seen|) reconstruction runs
-            # ONCE here — shards feed multiple independent actions per
-            # wave (test, insert, commit), and a lazy rebuilt frame would
-            # re-scan the seen table on each (same pattern as the wave
-            # loop's shard checkpointing below)
+            # ONCE here — a lazy rebuilt frame would re-scan the seen
+            # table on every action that reads the shards (same pattern
+            # as the wave loop's shard checkpointing)
             shards = self._rebuild_shards(parts["seen"][0]).localCheckpoint()
         return CrawlState(
             pending=self._snapshots["pending"].read_version(snaps["pending"]),
@@ -773,52 +776,44 @@ class CrawlEngine:
             children.groupBy("url_hash").agg(first)
             .select("url_hash", "_first.*")
         )
-        # seen-set dedup (bloom prefilter first in hybrid: at scale it
-        # eliminates ~all dupes so the exact anti-join touches a sliver).
-        # Only the 8-byte url_hash goes through the Arrow cogroup — wide
-        # candidate payload must never round-trip through Python (measured
-        # ~8x slowdown when it does); verdicts join back on url_hash,
-        # whose hash-partitioning the preceding dedup already established.
-        # Bloom modes run the FUSED test+insert (operators/bloom.py
-        # bloom_test_insert): one cogroup pass yields both the verdicts
-        # and the updated shard table — setting bits for a maybe-seen
-        # candidate is idempotent, so the bitset equals the old
-        # test-then-insert-novel exactly (fused == split pinned in
-        # tests/test_bloom.py); the split pipeline paid a second
-        # shuffle+Arrow pass per wave for the same result.
-        spec = self.seen_spec
-        fused_seen = None
-        if cfg.seen_mode == "exact":
+        # seen-set dedup: the exact anti-join, or ONE fused test+insert
+        # pass (bloom / hybrid / cuckoo) that yields both the verdicts
+        # against the pre-wave shards and the new shard table with the
+        # not-seen keys inserted. Hybrid exact-confirms the bloom-positive
+        # sliver (at scale the prefilter eliminates ~all dupes so the
+        # anti-join touches a sliver). Only the 8-byte url_hash goes
+        # through the Arrow cogroup — wide candidate payload must never
+        # round-trip through Python (measured ~8x slowdown when it does);
+        # verdicts join back on url_hash, whose hash-partitioning the
+        # preceding dedup already established. The test+insert is looked
+        # up by module attribute at call time, so a wrapper installed on
+        # this module sees every call.
+        if self.seen_spec is None:
             children = children.join(
                 st.seen.select("url_hash"), "url_hash", "left_anti"
             )
-        elif cfg.seen_mode == "cuckoo":
-            verdicts = cuckoo_test(children.select("url_hash"), st.shards, spec)
-            children = children.join(
-                verdicts.filter(~F.col("maybe_seen")).select("url_hash"),
-                "url_hash", "left_semi",
+            new_shards = None
+        else:
+            test_insert = (
+                cuckoo_test_insert if cfg.seen_mode == "cuckoo" else bloom_test_insert
             )
-        else:  # bloom / hybrid
-            fused_seen = bloom_test_insert(
-                children.select("url_hash"), st.shards, spec
+            fused = test_insert(
+                children.select("url_hash"), st.shards, self.seen_spec
             ).persist()
-            scratch.append(fused_seen)
-            verdicts = fused_seen.filter(F.col("row_kind") == "v").select(
-                "url_hash", "maybe_seen"
-            )
-            fresh_keys = verdicts.filter(~F.col("maybe_seen")).select("url_hash")
-            if cfg.seen_mode == "bloom":
-                keep_keys = fresh_keys
-            else:  # hybrid: exact-confirm the bloom-positive sliver
-                maybe_keys = verdicts.filter(F.col("maybe_seen")).select("url_hash")
-                confirmed_keys = maybe_keys.join(
-                    st.seen.select("url_hash"), "url_hash", "left_anti"
+            scratch.append(fused)
+            verdicts = sharded.verdicts(fused)
+            keep_keys = verdicts.filter(~F.col("maybe_seen")).select("url_hash")
+            if cfg.seen_mode == "hybrid":
+                keep_keys = keep_keys.unionByName(
+                    verdicts.filter(F.col("maybe_seen"))
+                    .select("url_hash")
+                    .join(st.seen.select("url_hash"), "url_hash", "left_anti")
                 )
-                keep_keys = fresh_keys.unionByName(confirmed_keys)
             children = children.join(keep_keys, "url_hash", "left_semi")
+            new_shards = sharded.shard_rows(fused)
 
         # enqueue keys over the deduped children; the frame is persisted so
-        # shards/frontier/seen below reuse one materialization. Packed keys
+        # frontier/seen below reuse one materialization. Packed keys
         # while their bounds hold (see PACKED_MAX_*): the wave and batch
         # bounds are known here, the span-offset bound rides the count job
         # the packed path runs anyway. Past any bound, the dense index.
@@ -848,18 +843,6 @@ class CrawlEngine:
             )
             if h_children is not None:
                 scratch.append(h_children)
-        if fused_seen is not None:
-            # bloom / hybrid: bits were already set in the fused
-            # test+insert pass above
-            new_shards = fused_seen.filter(F.col("row_kind") == "s").select(
-                "shard_id", "bitset", "n_inserted"
-            )
-        elif spec is not None:
-            # cuckoo: insert the deduped children
-            new_shards = spec.insert(children.select("url_hash"), st.shards)
-        else:
-            new_shards = None
-
         f_add = children.withColumn("page_kind", _kind_expr("url_norm")).select(
             F.col("child_url").alias("url"),
             "url_norm",

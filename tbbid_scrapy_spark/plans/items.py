@@ -41,18 +41,7 @@ from tbbid_scrapy_spark.functions.extract import (
 )
 from tbbid_scrapy_spark.functions.html import remove_script_tags_pd
 from tbbid_scrapy_spark.functions.urls import resolve_and_canonicalize_pd
-
-
-def _kind(doc_id):
-    path = F.parse_url(doc_id, F.lit("PATH"))
-    return (
-        F.when(path.startswith("/candidates/"), "candidates")
-        .when(path.startswith("/bids/"), "bids")
-        .when(path.startswith("/notice/"), "notice")
-        .when(path.startswith("/project/"), "stage")
-        .when(path.startswith("/listing"), "listing")
-        .otherwise("other")
-    )
+from tbbid_scrapy_spark.plans.crawl import _kind_expr
 
 
 def _pid_from_url(doc_id, marker: str):
@@ -60,7 +49,7 @@ def _pid_from_url(doc_id, marker: str):
 
 
 def with_page_kind(extracted: DataFrame) -> DataFrame:
-    return extracted.withColumn("page_kind", _kind(F.col("doc_id")))
+    return extracted.withColumn("page_kind", _kind_expr("doc_id"))
 
 
 def listing_projects(extracted: DataFrame) -> DataFrame:

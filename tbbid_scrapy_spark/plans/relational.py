@@ -203,7 +203,8 @@ def upsert_wave(
     proj_in = items["project"].withColumn("session_size", F.lit(None).cast("int")) \
         .withColumn("stage", F.lit(None).cast("int"))
     new_project = merge_upsert(
-        current["project"], proj_in.select(*PROJECT_COLS), ["project_id"],
+        current["project"], proj_in.select(*PROJECT_COLS),
+        MERGE_SPECS["project"]["keys"],
         # notice fields may be NULL on re-sight; keep existing when source null
         on_matched={
             c: (lambda col: F.coalesce(F.col(f"s.{col}"), F.col(f"t.{col}")))
@@ -222,12 +223,11 @@ def upsert_wave(
     # 3. bid + rank merges on their natural keys (before sections: the
     #    section roll-up below reads the MERGED bid table)
     new_bid = merge_upsert(
-        current["bid"], ready["bid"].select(*BID_COLS),
-        ["project_id", "section_id", "bidder_name"],
+        current["bid"], ready["bid"].select(*BID_COLS), MERGE_SPECS["bid"]["keys"]
     )
     new_rank = merge_upsert(
         current["bid_rank"], ready["bid_rank"].select(*RANK_COLS),
-        ["project_id", "section_id", "rank"],
+        MERGE_SPECS["bid_rank"]["keys"],
     )
 
     # 4. section auto-create + merge. bid_size and status are NOT taken
@@ -243,7 +243,7 @@ def upsert_wave(
     sect_in = derive_sections(ready)
     merged_sections = merge_upsert(
         current["bid_section"], sect_in.select(*SECTION_COLS),
-        ["project_id", "section_id"],
+        MERGE_SPECS["bid_section"]["keys"],
         on_matched={
             c: (lambda col: F.coalesce(F.col(f"s.{col}"), F.col(f"t.{col}")))
             for c in SECTION_COLS[2:]
@@ -319,7 +319,7 @@ def upsert_company(current: DataFrame, incoming: DataFrame) -> DataFrame:
     # pre-aggregates to one row per corp_code (corp_items.company_frames
     # groupBy), so a duplicate here is a caller bug that must fail loud.
     return merge_upsert(
-        current, incoming, ["corp_code"], on_matched=on_matched,
+        current, incoming, MERGE_SPECS["company"]["keys"], on_matched=on_matched,
         on_duplicate="error",
     )
 
@@ -339,15 +339,15 @@ def employee_merge_key(df: DataFrame) -> DataFrame:
 def upsert_employee(current: DataFrame, incoming: DataFrame) -> DataFrame:
     cur = employee_merge_key(current) if "merge_key" not in current.columns else current
     inc = employee_merge_key(incoming) if "merge_key" not in incoming.columns else incoming
-    return merge_upsert(cur, inc, ["merge_key"])
+    return merge_upsert(cur, inc, MERGE_SPECS["employee"]["keys"])
 
 
 def upsert_person_performance(current: DataFrame, incoming: DataFrame) -> DataFrame:
     """(name, corp_code, project_name, role) natural key
     (CompanyEmployee.py:143-188)."""
-    return merge_upsert(current, incoming, ["name", "corp_code", "project_name", "role"])
+    return merge_upsert(current, incoming, MERGE_SPECS["person_performance"]["keys"])
 
 
 def upsert_winner_bid(current: DataFrame, incoming: DataFrame) -> DataFrame:
     """(corp_code, project_name) natural key (winner_bid.py:20-67)."""
-    return merge_upsert(current, incoming, ["corp_code", "project_name"])
+    return merge_upsert(current, incoming, MERGE_SPECS["winner_bid"]["keys"])

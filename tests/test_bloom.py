@@ -5,11 +5,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tbbid_scrapy_spark.operators import sharded
 from tbbid_scrapy_spark.operators.bloom import (
     BloomSpec,
     bloom_fp_rate,
-    bloom_insert,
-    bloom_test,
+    bloom_test_insert,
     empty_shards,
 )
 
@@ -29,20 +29,25 @@ def test_sizing_function_at_1e10():
     assert spec.bits_per_shard // 8 < 4 * 2**20
 
 
+def _verdicts(candidates, shards, spec):
+    return sharded.verdicts(bloom_test_insert(candidates, shards, spec))
+
+
 def test_no_false_negatives(spark):
     spec = BloomSpec.for_capacity(expected_n=5000, fp_rate=0.01, n_shards=8)
     shards = empty_shards(spark, spec)
     inserted = _hashes(spark, 0, 2000)
-    shards2 = bloom_insert(inserted, shards, spec)
-    tested = bloom_test(inserted, shards2, spec)
+    shards2 = spec.insert(inserted, shards)
+    tested = _verdicts(inserted, shards2, spec)
+    assert tested.count() == 2000
     assert tested.filter(~F.col("maybe_seen")).count() == 0
 
 
 def test_fp_rate_within_bound(spark):
     spec = BloomSpec.for_capacity(expected_n=5000, fp_rate=0.01, n_shards=8)
-    shards = bloom_insert(_hashes(spark, 0, 5000), empty_shards(spark, spec), spec)
+    shards = spec.insert(_hashes(spark, 0, 5000), empty_shards(spark, spec))
     novel = _hashes(spark, 1_000_000, 20000)
-    fp = bloom_test(novel, shards, spec).filter(F.col("maybe_seen")).count()
+    fp = _verdicts(novel, shards, spec).filter(F.col("maybe_seen")).count()
     theory = bloom_fp_rate(spec, 5000 / spec.n_shards)
     assert fp / 20000 < max(2.5 * theory, 0.03)
 
@@ -51,49 +56,54 @@ def test_insert_preserves_untouched_shards(spark):
     spec = BloomSpec.for_capacity(expected_n=1000, fp_rate=0.01, n_shards=16)
     shards = empty_shards(spark, spec)
     one = _hashes(spark, 0, 1)
-    shards2 = bloom_insert(one, shards, spec)
+    shards2 = spec.insert(one, shards)
     assert shards2.count() == 16
     assert shards2.agg(F.sum("n_inserted")).collect()[0][0] == 1
 
 
 def test_fused_test_insert_equals_split_ops(spark):
-    """bloom_test_insert must agree EXACTLY with the split pipeline:
-    verdicts == bloom_test against the pre-batch bitset, and the updated
-    shard table (bitset AND n_inserted) == bloom_insert of the bloom-
-    fresh candidates — including candidate-less shards passing through
-    and in-batch FP behavior."""
-    from tbbid_scrapy_spark.operators.bloom import bloom_test_insert
+    """bloom_test_insert must agree EXACTLY with the split numpy ops run
+    on the driver over the collected pre-batch shards: verdicts ==
+    ``_test_bits`` against the pre-batch bitset, and the updated shard
+    table (bitset AND n_inserted) == ``_set_bits`` of the bloom-fresh
+    candidates only, with every shard row present."""
+    import numpy as np
+
+    from tbbid_scrapy_spark.operators.bloom import _positions, _set_bits, _test_bits
 
     spec = BloomSpec.for_capacity(expected_n=3000, fp_rate=0.01, n_shards=8)
-    base = bloom_insert(_hashes(spark, 0, 1500), empty_shards(spark, spec), spec)
+    base = spec.insert(_hashes(spark, 0, 1500), empty_shards(spark, spec))
     base = base.persist()
-    base.count()
-    # candidates: 500 already-seen + 700 novel (some shards get nothing)
+    # candidates: 500 already-seen + 700 novel
     cand = _hashes(spark, 1000, 1200)
+
+    ref = {
+        r.shard_id: (np.frombuffer(bytes(r.bitset), dtype=np.uint8).copy(),
+                     r.n_inserted)
+        for r in base.collect()
+    }
+    hashes = np.array([r.url_hash for r in cand.collect()], dtype=np.int64)
+    v_ref = set()
+    for shard_id, (bitset, n) in ref.items():
+        h = hashes[hashes % spec.n_shards == shard_id]
+        pos = _positions(h, spec)
+        seen = _test_bits(bitset, pos)
+        v_ref |= set(zip(h.tolist(), seen.tolist()))
+        _set_bits(bitset, pos[~seen])
+        ref[shard_id] = (bitset, n + int((~seen).sum()))
+    s_ref = {k: (b.tobytes(), n) for k, (b, n) in ref.items()}
 
     fused = bloom_test_insert(cand, base, spec).persist()
     v_fused = {
-        (r.url_hash, r.maybe_seen)
-        for r in fused.filter(F.col("row_kind") == "v")
-        .select("url_hash", "maybe_seen").collect()
+        (r.url_hash, r.maybe_seen) for r in sharded.verdicts(fused).collect()
     }
-    v_split = {
-        (r.url_hash, r.maybe_seen)
-        for r in bloom_test(cand, base, spec).collect()
-    }
-    assert v_fused == v_split and len(v_fused) == 1200
-
-    fresh = bloom_test(cand, base, spec).filter(~F.col("maybe_seen")).select("url_hash")
-    s_split = {
-        r.shard_id: (bytes(r.bitset), r.n_inserted)
-        for r in bloom_insert(fresh, base, spec).collect()
-    }
+    assert v_fused == v_ref and len(v_fused) == 1200
+    assert 0 < sum(not seen for _, seen in v_ref) < 1200
     s_fused = {
         r.shard_id: (bytes(r.bitset), r.n_inserted)
-        for r in fused.filter(F.col("row_kind") == "s")
-        .select("shard_id", "bitset", "n_inserted").collect()
+        for r in sharded.shard_rows(fused).collect()
     }
-    assert s_fused == s_split
+    assert s_fused == s_ref
     assert len(s_fused) == spec.n_shards  # every shard row present
     fused.unpersist(); base.unpersist()
 

@@ -102,7 +102,7 @@ def test_resume_rebuilds_cuckoo_shards_on_format_mismatch(
     spark, site_df, politeness_df, robots_df, tmp_path
 ):
     """Cuckoo-mode twin of the bloom rebuild test: a pre-stamp manifest
-    forces _rebuild_shards down the cuckoo_insert branch (re-inserting
+    forces _rebuild_shards through the cuckoo test+insert (re-inserting
     every committed url_hash into fresh tables under the current
     FP_FORMAT); the resumed run must equal the uninterrupted one."""
     import json
