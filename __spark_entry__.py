@@ -485,7 +485,7 @@ def q_counter_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         target,
         incoming,
         ["o_custkey"],
-        on_matched={"bid_count": lambda c: F.col(f"t.{c}") + F.col(f"s.{c}")},
+        on_matched_sql={"bid_count": "t.bid_count + s.bid_count"},
     )
     return merged.orderBy("o_custkey")
 

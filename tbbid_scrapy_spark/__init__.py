@@ -8,8 +8,9 @@ Layout
 ------
 - ``session``    : SparkSession builder tuned for local[N] testing and
                    cluster-scale defaults (AQE, Arrow, shuffle partitions).
-- ``schemas``    : every StructType the engine uses (interleaved-span
-                   documents, frontier/crawl state, 8 relational tables).
+- ``schemas``    : input and crawl-state StructTypes (interleaved-span
+                   documents, seen shards, robots, politeness); the 8
+                   relational sink tables are ``plans.relational.MERGE_SPECS``.
 - ``functions``  : the scalar library (SURVEY.md §2.8) — URL
                    canonicalization, Chinese numerals, regex extraction,
                    HTML cleanup — built-ins first, Arrow UDFs only where

@@ -307,8 +307,7 @@ def stop_shingle_stats(documents: DataFrame, n: int = 3,
 
 
 def ngram_jaccard_pairs(documents: DataFrame, n: int = 3, threshold: float = 0.8,
-                        max_shingle_df: int | None = 1000,
-                        persist_index: bool = True) -> DataFrame:
+                        max_shingle_df: int | None = 1000) -> DataFrame:
     """Exact Jaccard-similar pairs, computed COUNT-based over a
     one-pass INVERTED INDEX: ONE shingle scan groups exploded
     (doc_id, xxhash64(shingle)) rows into (shingle, doc list); the df cap
@@ -331,12 +330,12 @@ def ngram_jaccard_pairs(documents: DataFrame, n: int = 3, threshold: float = 0.8
     xxhash64 keys — the same 2^-64 accepted-collision contract as
     ``exact_dedup`` and ``verify_pairs_jaccard``.
 
-    ``persist_index``: the grouped index feeds both the pair generation
-    and the set-size aggregate; persisting it (scratch-registered,
-    caller-releasable) avoids re-scanning the text for the second
-    consumer. At 100 TB materialize the index to a table instead — it
-    is one row per distinct shingle carrying a doc-id list (the
-    classic inverted index, ~total-shingle-occurrence bytes).
+    The grouped index is persisted (scratch-registered, caller-
+    releasable): it feeds both the pair generation and the set-size
+    aggregate, and the persist avoids re-scanning the text for the
+    second consumer. At 100 TB materialize the index to a table
+    instead — it is one row per distinct shingle carrying a doc-id list
+    (the classic inverted index, ~total-shingle-occurrence bytes).
 
     Semantics under the df cap: sets are the SUB-CAP shingle sets, i.e.
     Jaccard over non-boilerplate shingles — identical to the full exact
@@ -358,8 +357,7 @@ def ngram_jaccard_pairs(documents: DataFrame, n: int = 3, threshold: float = 0.8
     grp = ex.groupBy("shingle").agg(F.collect_list("doc_id").alias("docs"))
     if max_shingle_df is not None:
         grp = grp.filter(F.size("docs") <= max_shingle_df)
-    if persist_index:
-        grp = scratch.persist(grp)
+    grp = scratch.persist(grp)
     sizes = (
         grp.select(F.explode("docs").alias("doc_id"))
         .groupBy("doc_id")
@@ -489,8 +487,7 @@ def minhash_lsh_candidates(documents: DataFrame, n: int = 3, num_hashes: int = 3
 
 def minhash_lsh_pairs(documents: DataFrame, n: int = 3, num_hashes: int = 32,
                       bands: int = 8, threshold: float = 0.5,
-                      verify: str = "exact",
-                      persist_sets: bool = True) -> DataFrame:
+                      verify: str = "exact") -> DataFrame:
     """Near-dup pairs via banded minhash LSH candidates + verification.
 
     verify='exact' (default): candidates are re-scored with the TRUE
@@ -509,15 +506,12 @@ def minhash_lsh_pairs(documents: DataFrame, n: int = 3, num_hashes: int = 32,
     releasable) and shared by signatures and the exact verifier — the
     same one-materialization shape simhash_verified_pairs uses; without
     it this operator scanned + re-shingled the corpus twice more (the
-    signature explode and the verifier's set build).
-    ``persist_sets=False`` skips the in-memory persist (at 100 TB
+    signature explode and the verifier's set build). At 100 TB
     materialize the sets to a table instead — a persisted corpus-wide
-    array column would overrun the storage pool)."""
+    array column would overrun the storage pool."""
     from tbbid_scrapy_spark.operators import scratch as _scratch
 
-    sets_ = shingle_hash_sets(documents, n)
-    if persist_sets:
-        sets_ = _scratch.persist(sets_)
+    sets_ = _scratch.persist(shingle_hash_sets(documents, n))
     sigs = minhash_signatures(documents, n, num_hashes, sets_=sets_)
     cand = minhash_lsh_candidates(documents, n, num_hashes, bands, sigs=sigs)
     if verify == "exact":
@@ -698,8 +692,7 @@ def simhash_rotated_band_candidates(sh: DataFrame, width: int = 8,
 def simhash_verified_pairs(documents: DataFrame, n: int = 3,
                            threshold: float = 0.5, width: int = 8,
                            offsets: tuple[int, ...] = (0, 2, 4, 6),
-                           max_hamming: int = 20,
-                           persist_sets: bool = True) -> DataFrame:
+                           max_hamming: int = 20) -> DataFrame:
     """SimHash near-dup pairs verified by TRUE n-gram Jaccard.
 
     Pipeline: shingle-feature simhash → rotated-window band candidates
@@ -729,14 +722,12 @@ def simhash_verified_pairs(documents: DataFrame, n: int = 3,
     (``shingle_hash_sets``) and feeds both the fingerprint votes and the
     exact verify — previously each stage re-scanned the documents and
     re-ran the O(len) shingle transform (two full extra passes; the r2
-    bench's costliest headline query). ``persist_sets=False`` skips the
-    in-memory persist (at 100 TB materialize the frame to a table
-    instead — a persisted corpus-wide array column would overrun the
-    storage pool). The persist is registered with ``operators.scratch``;
-    call ``scratch.release()`` after your final action to drop it."""
-    sets_ = shingle_hash_sets(documents, n)
-    if persist_sets:
-        sets_ = scratch.persist(sets_)
+    bench's costliest headline query). At 100 TB materialize the frame
+    to a table instead — a persisted corpus-wide array column would
+    overrun the storage pool. The persist is registered with
+    ``operators.scratch``; call ``scratch.release()`` after your final
+    action to drop it."""
+    sets_ = scratch.persist(shingle_hash_sets(documents, n))
     cand = simhash_rotated_band_candidates(
         simhash_shingle(documents, n, sets_=sets_), width, offsets,
         max_hamming=max_hamming,

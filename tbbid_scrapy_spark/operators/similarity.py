@@ -405,8 +405,7 @@ def _screen_hamming_bound(threshold: float, total_planes: int) -> int:
 
 def pairs_above(corpus: DataFrame, threshold: float = 0.95,
                 n_planes: int = 16, n_bands: int = 20, seed: int = 42,
-                exact: bool = False, screen: bool = True,
-                persist_sigs: bool = True) -> DataFrame:
+                exact: bool = False, screen: bool = True) -> DataFrame:
     """Embedding near-dup pairs with cosine ≥ threshold.
 
     Default path: BANDED random-hyperplane LSH — ``n_bands`` independent
@@ -432,9 +431,9 @@ def pairs_above(corpus: DataFrame, threshold: float = 0.95,
     simhash-style hamming pre-screen (``screen``) XOR+popcounts away
     unrelated bucket mates before the O(dim) cosine; at the wide default
     the bands are selective enough on their own and the screen is
-    skipped. ``persist_sigs`` materializes the signature arrays so the
-    self-join computes the n_bands·n_planes interpreted plane dots once
-    per vector, not twice (at 10^10 vectors that persist is
+    skipped. The signature arrays are persisted so the self-join
+    computes the n_bands·n_planes interpreted plane dots once per
+    vector, not twice (at 10^10 vectors that persist is
     ~rows×(n_bands+1)×8 B, MEMORY_AND_DISK — prefer materializing to a
     table there). The persist is registered with ``operators.scratch``:
     call ``scratch.release()`` after your final action to drop it
@@ -469,8 +468,7 @@ def pairs_above(corpus: DataFrame, threshold: float = 0.95,
                 F.col("embedding")
             ).alias("sigs"),
         )
-        if persist_sigs:
-            sig_frame = scratch.persist(sig_frame)
+        sig_frame = scratch.persist(sig_frame)
         # bucket-mate pairs via grouped double-explode (shared helper with
         # the minhash/simhash band paths): ONE shuffle of the narrow band
         # rows instead of a self-join shuffling both sides

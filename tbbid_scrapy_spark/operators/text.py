@@ -89,10 +89,12 @@ def _lang_scores_sql(words_ref: str) -> str:
 
 def lang_best(words_ref: str = "_words") -> Column:
     """Winning (lang, hits) struct over a materialized token-array
-    column. Callers materialize THIS in its own projection too, then
-    read the two fields with ``lang_from_best`` — ``lang_id``'s
-    best["hits"]/best["lang"] field reads each embedded a full copy of
-    the 4-language scoring tree, so the scoring ran twice per row."""
+    column: argmax language by stopword hits, ties broken by language
+    code. Callers materialize THIS in its own projection too, then read
+    the two fields with ``lang_from_best`` — reading best["hits"] and
+    best["lang"] off an unmaterialized struct embeds a full copy of the
+    4-language scoring tree per field, so the scoring runs twice per
+    row."""
     return F.expr(
         f"element_at(array_sort({_lang_scores_sql(words_ref)}, {_CMP_SQL}), 1)"
     )
@@ -105,16 +107,17 @@ def lang_from_best(best: Column) -> Column:
 
 
 def words_gate(col: Column, min_words: int, lang: str | None) -> Column:
-    """`n_words >= min_words AND lang_id(col) == lang` as ONE
+    """`n_words >= min_words AND language(col) == lang` as ONE
     single-evaluation boolean expression over raw text.
 
     Construction rationale (guide §1.2 step 2 + §7.2): the naive
     `select(n_words, lang_pred).filter(...)` shape evaluates the
     tokenization ~7x per row — each feature embeds its own copy of the
-    split subtree, `lang_id`'s best["hits"]/best["lang"] field reads
-    each embed a full copy of the 4-language scoring tree, and
-    PushPredicateThroughProject then substitutes those trees into the
-    pushed condition while the projection still computes its outputs.
+    split subtree, the best["hits"]/best["lang"] field reads of the
+    argmax struct each embed a full copy of the 4-language scoring
+    tree, and PushPredicateThroughProject then substitutes those trees
+    into the pushed condition while the projection still computes its
+    outputs.
     Here the token array is bound ONCE as a 1-element struct array and
     every consumer reads it through the lambda variable (evaluated once
     per row by construction); the argmax struct is bound the same way
@@ -214,64 +217,17 @@ def quality_score(col: Column, words: "Column | str | None" = None) -> Column:
     return score.cast("double")
 
 
-def lang_scores(col: Column, words: Column | None = None) -> Column:
-    """Array of (lang, stopword hit count) structs. ``words``: optional
-    pre-materialized token array (defaults to tokenizing ``col``)."""
-    if words is None:
-        words = words_of(col)
-    entries = []
-    for lang, sw in STOPWORDS.items():
-        arr = F.array([F.lit(w) for w in sw])
-        entries.append(
-            F.struct(
-                F.lit(lang).alias("lang"),
-                F.size(F.filter(words, lambda w: F.array_contains(arr, w))).alias("hits"),
-            )
-        )
-    return F.array(*entries)
-
-
-def lang_id(col: Column) -> Column:
-    """argmax language by stopword hits; 'und' (undetermined) when no
-    stopword of any list appears. Ties break by language code order for
-    determinism (array_sort on (-hits, lang)).
-
-    The winning struct is bound ONCE via transform over a 1-element
-    array and read through the lambda variable: reading best["hits"] /
-    best["lang"] directly embedded a full copy of the scoring tree per
-    field, doubling the per-row cost (same values either way). Frame
-    pipelines should still prefer the staged words_of/lang_best chain,
-    which also tokenizes once."""
-    scored = lang_scores(col)
-    best = F.element_at(
-        F.array_sort(
-            scored,
-            lambda a, b: F.when(a["hits"] > b["hits"], -1)
-            .when(a["hits"] < b["hits"], 1)
-            .otherwise(F.when(a["lang"] < b["lang"], -1).when(a["lang"] > b["lang"], 1).otherwise(0)),
-        ),
-        1,
-    )
-    return F.element_at(
-        F.transform(
-            F.array(best),
-            lambda b: F.when(b["hits"] > 0, b["lang"]).otherwise(F.lit("und")),
-        ),
-        1,
-    )
-
-
 def corpus_keep(documents: DataFrame, min_words: int = 20,
                 max_punct_ratio: float = 0.2, lang: str | None = "en",
                 near_dup_threshold: float = 0.5,
-                max_shingle_df: int | None = 1000,
-                persist_survivors: bool = True) -> DataFrame:
+                max_shingle_df: int | None = 1000) -> DataFrame:
     """End-to-end pretraining-corpus filter — the composition a 100 TB
     data pipeline actually runs, each stage the already-tested operator:
 
     1. quality gate   : n_words ≥ min_words AND punct_ratio ≤ cap
                         (quality_features — scan-speed Catalyst)
-    2. language gate  : lang_id(text) == lang (skip when lang is None)
+    2. language gate  : stopword-argmax language == lang (skip when
+                        lang is None)
     3. exact dedup    : keep the smallest doc_id per normalized text
                         (one hash-shuffle, map-side combined)
     4. near-dup drop  : remove any survivor with a SMALLER near-duplicate
@@ -284,11 +240,10 @@ def corpus_keep(documents: DataFrame, min_words: int = 20,
     order is filter-first: dedup runs on the quality/lang survivors
     (cheaper at scale — the gates are scan-speed, dedup shuffles).
 
-    ``persist_survivors`` (default True) materializes the survivor set
-    once before the near-dup stage: ngram_jaccard_pairs references its
+    The survivor set is materialized once before the near-dup stage: ngram_jaccard_pairs references its
     input in four sub-plans (df cap, both self-join sides, set sizes)
     plus the final anti-join — without the persist the quality/lang/
-    exact-dedup pipeline (regex-heavy lang_id included) re-executes ~5×
+    exact-dedup pipeline (regex-heavy language gate included) re-executes ~5×
     (measured 17 s → 6.5 s at sf0.1). At 100 TB prefer materializing
     survivors to a table; the persist is MEMORY_AND_DISK either way,
     registered with ``operators.scratch`` — call ``scratch.release()``
@@ -330,18 +285,17 @@ def corpus_keep(documents: DataFrame, min_words: int = 20,
         .filter(F.col("_rn") == 1)
         .drop("_rn", "_th")
     )
-    if persist_survivors:
-        # AQE coalesces the small post-window shuffle output down to ONE
-        # partition, which would single-thread BOTH the cache-fill and
-        # the O(text-length) shingle work downstream (measured 14.5 s vs
-        # 3.6 s for the near-dup stage at sf0.1). Narrowness is decided
-        # from the INPUT scan (safe to probe — executes nothing), so a
-        # 100 TB input never pays a blind repartition: wide in ⇒ AQE
-        # keeps the survivors at the advisory partition size.
-        target = documents.sparkSession.sparkContext.defaultParallelism
-        if n_in is not None and n_in * 2 <= target:
-            survivors = survivors.repartition(target)
-        survivors = _scratch.persist(survivors)
+    # AQE coalesces the small post-window shuffle output down to ONE
+    # partition, which would single-thread BOTH the cache-fill and the
+    # O(text-length) shingle work downstream (measured 14.5 s vs 3.6 s
+    # for the near-dup stage at sf0.1). Narrowness is decided from the
+    # INPUT scan (safe to probe — executes nothing), so a 100 TB input
+    # never pays a blind repartition: wide in ⇒ AQE keeps the survivors
+    # at the advisory partition size.
+    target = documents.sparkSession.sparkContext.defaultParallelism
+    if n_in is not None and n_in * 2 <= target:
+        survivors = survivors.repartition(target)
+    survivors = _scratch.persist(survivors)
     pairs = _dedup.ngram_jaccard_pairs(
         survivors.select("doc_id", "text"),
         n=3,

@@ -54,7 +54,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field, replace
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -239,6 +239,29 @@ def _priority_expr(col_name: str):
     for kind, pri in PRIORITY_BY_KIND.items():
         expr = F.when(kind_col == kind, F.lit(pri)).otherwise(expr)
     return expr
+
+
+def _frontier_rows(df: DataFrame, url: Column | str, parent_id: Column,
+                   depth: Column, wave: int) -> DataFrame:
+    """The 13 frontier columns of newly enqueued URLs (seeds at wave 0,
+    children at wave w+1): page kind and priority from the cached policy
+    trees, state 'pending', no attempts and no status yet. ``df`` carries
+    url_norm, url_hash, host and seq."""
+    return df.withColumn("page_kind", _kind_expr("url_norm")).select(
+        url,
+        "url_norm",
+        "url_hash",
+        "host",
+        "page_kind",
+        parent_id.alias("parent_id"),
+        depth.alias("depth"),
+        _priority_expr("page_kind").alias("priority"),
+        F.lit(wave).alias("wave"),
+        F.lit("pending").alias("state"),
+        F.lit(0).alias("attempts"),
+        F.lit(None).cast("int").alias("last_status"),
+        "seq",
+    )
 
 
 def _union(parts: list[DataFrame]) -> DataFrame:
@@ -442,21 +465,7 @@ class CrawlEngine:
         f0, n_seeds, _h0 = dense_index(
             seeds_norm, [F.col("_ord")], "seq", 0, self._sized_parts(len(self.seeds))
         )
-        f0 = f0.withColumn("page_kind", _kind_expr("url_norm")).select(
-            "url",
-            "url_norm",
-            "url_hash",
-            "host",
-            "page_kind",
-            F.lit(None).cast("string").alias("parent_id"),
-            F.lit(0).alias("depth"),
-            _priority_expr("page_kind").alias("priority"),
-            F.lit(0).alias("wave"),
-            F.lit("pending").alias("state"),
-            F.lit(0).alias("attempts"),
-            F.lit(None).cast("int").alias("last_status"),
-            "seq",
-        )
+        f0 = _frontier_rows(f0, "url", F.lit(None).cast("string"), F.lit(0), 0)
         seen0 = f0.select("url_hash", "url_norm")
         shards0 = None if self.seen_spec is None else self._rebuild_shards(seen0)
         log0 = spark.createDataFrame([], T.StructType(f0.schema.fields + LOG_FIELDS))
@@ -843,20 +852,9 @@ class CrawlEngine:
             )
             if h_children is not None:
                 scratch.append(h_children)
-        f_add = children.withColumn("page_kind", _kind_expr("url_norm")).select(
-            F.col("child_url").alias("url"),
-            "url_norm",
-            "url_hash",
-            "host",
-            "page_kind",
-            F.col("parent").alias("parent_id"),
-            (F.col("parent_depth") + 1).alias("depth"),
-            _priority_expr("page_kind").alias("priority"),
-            F.lit(w + 1).alias("wave"),
-            F.lit("pending").alias("state"),
-            F.lit(0).alias("attempts"),
-            F.lit(None).cast("int").alias("last_status"),
-            "seq",
+        f_add = _frontier_rows(
+            children, F.col("child_url").alias("url"), F.col("parent"),
+            F.col("parent_depth") + 1, w + 1,
         )
 
         # ---- frontier state transitions: ONLY the fetched batch moves ----

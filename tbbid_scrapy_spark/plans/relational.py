@@ -18,136 +18,167 @@ semantics make all of that order-independent:
 - sections are auto-created from bid/rank/control-price evidence (the
   reference auto-creates a missing parent section, bidSaver.py:235-298)
 
-Company/employee/performance/winner sinks (CompanyEmployee.py:28-188,
-winner_bid.py:20-67) including the conditional employee key
-(cert_code, else (name, corp_code)) and the bid_count increment
-(:121-122) are below as well.
+The company/employee/performance/winner sinks (CompanyEmployee.py:28-188,
+winner_bid.py:20-67), with the conditional employee key (cert_code,
+else (name, corp_code)) and the bid_count increment (:121-122), are
+MERGE_SPECS entries too: all 8 tables go through the one ``upsert``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from tbbid_scrapy_spark.sources.sink import merge_upsert
+from tbbid_scrapy_spark.sources.sink import merge_upsert, to_merge_sql
 
-PROJECT_COLS = [
-    "project_id", "title", "url", "notice_content", "construction_funds",
-    "project_duration", "company_req", "person_req", "session_size", "stage",
-]
-
-SECTION_COLS = [
-    "project_id", "section_id", "bid_size", "lot_ctl_amt", "status",
-    "winning_bidder", "winning_amount",
-]
-
-BID_COLS = ["project_id", "section_id", "bidder_name", "bid_amount"]
-RANK_COLS = ["project_id", "section_id", "bidder_name", "rank", "manager_name", "win_amt"]
-
-
-# Natural keys + matched-update SQL for every sink table — the single
-# source for the Iceberg MERGE INTO surface (sources/sink.py to_merge_sql;
-# reference upsert semantics bidSaver.py:61-395, CompanyEmployee.py:28-188,
-# winner_bid.py:20-67, models/models.py:51-90). '_keep_existing' marks
-# coalesce(s.c, t.c) matched behavior (NULL on re-sight keeps the old
-# value, like the reference only writing parsed fields).
+# The ONE declaration of each of the 8 sink tables: the typed columns
+# the engine writes, the natural keys, the matched-update rules and the
+# duplicate-key policy. The Iceberg MERGE INTO surface (merge_sql_for),
+# the empty tables (empty_tables) and the parquet emulation (upsert) all
+# read it (reference upsert semantics bidSaver.py:61-395,
+# CompanyEmployee.py:28-188, winner_bid.py:20-67, models/models.py:51-90).
+# Matched-update rules are SQL over aliases t (target) / s (source);
+# unlisted columns take the source value. ``keep_existing`` makes every
+# data column coalesce(s.c, t.c): NULL on re-sight keeps the old value,
+# like the reference only writing parsed fields.
 _KEEP = "coalesce(s.{c}, t.{c})"
-COMPANY_COLS = [
-    "corp_code", "name", "corp", "corp_asset", "reg_address", "valid_date",
-    "qualifications", "others", "bid_count",
-]
-EMPLOYEE_COLS = [
-    "merge_key", "corp_code", "name", "cert_code", "role", "valid_date",
-    "major", "birth_date_raw", "id_number", "person_id",
-]
-PERF_COLS = [
-    "name", "corp_code", "corp_name", "project_name", "data_level", "role",
-    "record_id", "company_id",
-]
-WINNER_COLS = [
-    "corp_code", "project_name", "bidder_name", "area_code", "win_amt",
-    "create_time", "tender_org_name", "tos", "city_name",
-]
+
+
+def _table(ddl: str, keys: list[str], on_matched_sql: dict[str, str] | None = None,
+           *, keep_existing: bool = False, on_duplicate: str = "dedup") -> dict:
+    """One MERGE_SPECS entry. Column types are scalars or array<scalar>,
+    so every comma in ``ddl`` separates two columns."""
+    cols = [c.split()[0] for c in ddl.split(",")]
+    rules = {c: _KEEP.format(c=c) for c in cols if c not in keys} if keep_existing else {}
+    return {
+        "ddl": ddl,
+        "cols": cols,
+        "keys": keys,
+        "on_matched_sql": {**rules, **(on_matched_sql or {})},
+        "on_duplicate": on_duplicate,
+    }
+
 
 MERGE_SPECS: dict[str, dict] = {
-    "project": {
-        "keys": ["project_id"],
-        "cols": PROJECT_COLS,
-        "on_matched_sql": {
-            c: _KEEP.format(c=c) for c in PROJECT_COLS if c != "project_id"
-        },
-    },
-    "bid_section": {
-        "keys": ["project_id", "section_id"],
-        "cols": SECTION_COLS,
-        "on_matched_sql": {
-            **{c: _KEEP.format(c=c) for c in SECTION_COLS[2:]},
-            # status follows the MERGED winning evidence: the reference
-            # sets status ONLY on the rank path (bidSaver.py:367-375) — a
-            # bid/section item arriving after rank 1 must not downgrade
-            # 'completed' back to the source's wave-local 'pending'.
-            "status": (
-                "CASE WHEN coalesce(s.winning_bidder, t.winning_bidder)"
-                " IS NOT NULL THEN 'completed'"
-                " ELSE coalesce(s.status, t.status) END"
-            ),
-        },
-    },
-    "bid": {"keys": ["project_id", "section_id", "bidder_name"], "cols": BID_COLS},
-    "bid_rank": {"keys": ["project_id", "section_id", "rank"], "cols": RANK_COLS},
-    "company": {
-        "keys": ["corp_code"],
-        "cols": COMPANY_COLS,
-        "on_matched_sql": {
+    "project": _table(
+        "project_id string, title string, url string, notice_content string,"
+        " construction_funds string, project_duration string, company_req string,"
+        " person_req string, session_size int, stage int",
+        ["project_id"], keep_existing=True,
+    ),
+    "bid_section": _table(
+        "project_id string, section_id string, bid_size int, lot_ctl_amt double,"
+        " status string, winning_bidder string, winning_amount double",
+        ["project_id", "section_id"],
+        # status follows the MERGED winning evidence: the reference sets
+        # status ONLY on the rank path (bidSaver.py:367-375) — a
+        # bid/section item arriving after rank 1 must not downgrade
+        # 'completed' back to the source's wave-local 'pending'.
+        {"status": (
+            "CASE WHEN coalesce(s.winning_bidder, t.winning_bidder)"
+            " IS NOT NULL THEN 'completed'"
+            " ELSE coalesce(s.status, t.status) END"
+        )},
+        keep_existing=True,
+    ),
+    "bid": _table(
+        "project_id string, section_id string, bidder_name string, bid_amount double",
+        ["project_id", "section_id", "bidder_name"],
+    ),
+    "bid_rank": _table(
+        "project_id string, section_id string, bidder_name string, rank int,"
+        " manager_name string, win_amt double",
+        ["project_id", "section_id", "rank"],
+    ),
+    "company": _table(
+        "corp_code string, name string, corp string, corp_asset string,"
+        " reg_address string, valid_date string, qualifications array<string>,"
+        " others string, bid_count int",
+        ["corp_code"],
+        {
+            # bid_count accumulates per sighting (CompanyEmployee.py:121-122,
+            # set-wise: the incoming side carries the batch's count)
             "bid_count": "coalesce(t.bid_count, 0) + coalesce(s.bid_count, 0)",
             # the reference keeps the stored value unless the new one is
             # truthy (`if adapter.get('others')`, CompanyEmployee.py:122-123)
-            # — every other company field is overwritten unconditionally,
-            # which is merge_upsert's default.
+            # — every other company field is overwritten unconditionally.
             "others": (
                 "CASE WHEN s.others IS NOT NULL AND s.others != ''"
                 " THEN s.others ELSE t.others END"
             ),
         },
-    },
-    "employee": {"keys": ["merge_key"], "cols": EMPLOYEE_COLS},
-    "person_performance": {
-        "keys": ["name", "corp_code", "project_name", "role"],
-        "cols": PERF_COLS,
-    },
-    "winner_bid": {"keys": ["corp_code", "project_name"], "cols": WINNER_COLS},
+        # bid_count is ADDITIVE — a silent last-wins dedup of a
+        # duplicate-corp batch would drop an increment. The corp chain
+        # pre-aggregates to one row per corp_code, so a duplicate here is
+        # a caller bug that must fail loud.
+        on_duplicate="error",
+    ),
+    "employee": _table(
+        # merge_key = cert_code, else name|corp_code (employee_merge_key)
+        "merge_key string, corp_code string, name string, cert_code string,"
+        " role string, valid_date string, major array<string>,"
+        " birth_date_raw string, id_number string, person_id string",
+        ["merge_key"],
+    ),
+    "person_performance": _table(
+        "name string, corp_code string, corp_name string, project_name string,"
+        " data_level string, role string, record_id string, company_id string",
+        ["name", "corp_code", "project_name", "role"],
+    ),
+    "winner_bid": _table(
+        "corp_code string, project_name string, bidder_name string, area_code string,"
+        " win_amt double, create_time timestamp_ntz, tender_org_name string,"
+        " tos string, city_name string",
+        ["corp_code", "project_name"],
+    ),
 }
+
+
+def _cols(table: str) -> list[str]:
+    return MERGE_SPECS[table]["cols"]
 
 
 def merge_sql_for(table: str, catalog_table: str | None = None) -> str:
     """MERGE INTO statement for one of the 8 sink tables."""
-    from tbbid_scrapy_spark.sources.sink import to_merge_sql
-
     spec = MERGE_SPECS[table]
     return to_merge_sql(
-        catalog_table or table,
-        spec["keys"],
-        spec["cols"],
-        spec.get("on_matched_sql"),
+        catalog_table or table, spec["keys"], spec["cols"], spec["on_matched_sql"]
     )
 
 
 def empty_tables(spark: SparkSession) -> dict[str, DataFrame]:
-    return {
-        "project": spark.createDataFrame(
-            [], "project_id string, title string, url string, notice_content string,"
-                "construction_funds string, project_duration string, company_req string,"
-                "person_req string, session_size int, stage int"),
-        "bid_section": spark.createDataFrame(
-            [], "project_id string, section_id string, bid_size int, lot_ctl_amt double,"
-                "status string, winning_bidder string, winning_amount double"),
-        "bid": spark.createDataFrame(
-            [], "project_id string, section_id string, bidder_name string, bid_amount double"),
-        "bid_rank": spark.createDataFrame(
-            [], "project_id string, section_id string, bidder_name string, rank int,"
-                "manager_name string, win_amt double"),
-    }
+    """Every sink table, empty and typed as MERGE_SPECS declares it."""
+    return {t: spark.createDataFrame([], spec["ddl"]) for t, spec in MERGE_SPECS.items()}
+
+
+def employee_merge_key(df: DataFrame) -> DataFrame:
+    """cert_code when present, else name|corp_code — the reference's
+    conditional lookup (CompanyEmployee.py:51-103) as a computed key."""
+    return df.withColumn(
+        "merge_key",
+        F.coalesce(
+            F.when(F.col("cert_code") != "", F.col("cert_code")),
+            F.concat_ws("|", F.col("name"), F.col("corp_code")),
+        ),
+    )
+
+
+def upsert(table: str, current: DataFrame, incoming: DataFrame) -> DataFrame:
+    """MERGE ``incoming`` into ``current`` with the table's MERGE_SPECS
+    keys, matched-update rules and duplicate-key policy — the parquet
+    emulation of ``merge_sql_for(table)``. The frames may carry a subset
+    of the declared columns (rules for absent columns are skipped); an
+    employee frame without ``merge_key`` gets it computed."""
+    spec = MERGE_SPECS[table]
+    if table == "employee":
+        current, incoming = (
+            d if "merge_key" in d.columns else employee_merge_key(d)
+            for d in (current, incoming)
+        )
+    return merge_upsert(
+        current, incoming, spec["keys"],
+        on_matched_sql=spec["on_matched_sql"], on_duplicate=spec["on_duplicate"],
+    )
 
 
 def derive_sections(items: dict[str, DataFrame]) -> DataFrame:
@@ -202,15 +233,8 @@ def upsert_wave(
     #    draining pending_items on project commit, bidSaver.py:129-130)
     proj_in = items["project"].withColumn("session_size", F.lit(None).cast("int")) \
         .withColumn("stage", F.lit(None).cast("int"))
-    new_project = merge_upsert(
-        current["project"], proj_in.select(*PROJECT_COLS),
-        MERGE_SPECS["project"]["keys"],
-        # notice fields may be NULL on re-sight; keep existing when source null
-        on_matched={
-            c: (lambda col: F.coalesce(F.col(f"s.{col}"), F.col(f"t.{col}")))
-            for c in PROJECT_COLS if c != "project_id"
-        },
-    )
+    # (notice fields may be NULL on re-sight: the spec keeps existing)
+    new_project = upsert("project", current["project"], proj_in.select(*_cols("project")))
 
     # 2. split children into known-parent vs pending (J3 roll-forward)
     known = new_project.select("project_id")
@@ -222,12 +246,9 @@ def upsert_wave(
 
     # 3. bid + rank merges on their natural keys (before sections: the
     #    section roll-up below reads the MERGED bid table)
-    new_bid = merge_upsert(
-        current["bid"], ready["bid"].select(*BID_COLS), MERGE_SPECS["bid"]["keys"]
-    )
-    new_rank = merge_upsert(
-        current["bid_rank"], ready["bid_rank"].select(*RANK_COLS),
-        MERGE_SPECS["bid_rank"]["keys"],
+    new_bid = upsert("bid", current["bid"], ready["bid"].select(*_cols("bid")))
+    new_rank = upsert(
+        "bid_rank", current["bid_rank"], ready["bid_rank"].select(*_cols("bid_rank"))
     )
 
     # 4. section auto-create + merge. bid_size and status are NOT taken
@@ -241,13 +262,8 @@ def upsert_wave(
     #      bidSaver.py:367-375 — a bids-only wave must never downgrade a
     #      completed section back to 'pending').
     sect_in = derive_sections(ready)
-    merged_sections = merge_upsert(
-        current["bid_section"], sect_in.select(*SECTION_COLS),
-        MERGE_SPECS["bid_section"]["keys"],
-        on_matched={
-            c: (lambda col: F.coalesce(F.col(f"s.{col}"), F.col(f"t.{col}")))
-            for c in SECTION_COLS[2:]
-        },
+    merged_sections = upsert(
+        "bid_section", current["bid_section"], sect_in.select(*_cols("bid_section"))
     )
     bid_counts = new_bid.groupBy("project_id", "section_id").agg(
         F.count("*").cast("int").alias("_bid_size")
@@ -261,7 +277,7 @@ def upsert_wave(
             F.when(F.col("winning_bidder").isNotNull(), "completed")
             .otherwise("pending"),
         )
-        .select(*SECTION_COLS)
+        .select(*_cols("bid_section"))
     )
 
     # 5. join-derived project stage + session_size (order-independent
@@ -281,7 +297,7 @@ def upsert_wave(
             + F.when(F.col("_hr").isNotNull(), 1).otherwise(0),
         )
         .drop("_hr")
-        .select(*PROJECT_COLS)
+        .select(*_cols("project"))
     )
 
     return (
@@ -293,61 +309,3 @@ def upsert_wave(
         },
         new_pending,
     )
-
-
-# ---------------------------------------------------------------------------
-# company / employee / performance / winner sinks
-# ---------------------------------------------------------------------------
-
-def upsert_company(current: DataFrame, incoming: DataFrame) -> DataFrame:
-    """corp_code-keyed merge with bid_count accumulation on re-sight
-    (CompanyEmployee.py:105-141; increment :121-122 done set-wise: the
-    incoming side carries this batch's sighting count). ``others`` keeps
-    the stored value unless the new one is truthy (:122-123); all other
-    fields take the source value unconditionally like the reference."""
-    on_matched = {
-        "bid_count": lambda c: F.coalesce(F.col(f"t.{c}"), F.lit(0))
-        + F.coalesce(F.col(f"s.{c}"), F.lit(0)),
-    }
-    if "others" in current.columns:
-        on_matched["others"] = lambda c: F.when(
-            F.col(f"s.{c}").isNotNull() & (F.col(f"s.{c}") != ""), F.col(f"s.{c}")
-        ).otherwise(F.col(f"t.{c}"))
-    # on_duplicate='error': bid_count is ADDITIVE — a silent last-wins
-    # dedup of a duplicate-corp batch would drop an increment (the
-    # reference increments per sighting row). The corp-chain pipeline
-    # pre-aggregates to one row per corp_code (corp_items.company_frames
-    # groupBy), so a duplicate here is a caller bug that must fail loud.
-    return merge_upsert(
-        current, incoming, MERGE_SPECS["company"]["keys"], on_matched=on_matched,
-        on_duplicate="error",
-    )
-
-
-def employee_merge_key(df: DataFrame) -> DataFrame:
-    """cert_code when present, else name|corp_code — the reference's
-    conditional lookup (CompanyEmployee.py:51-103) as a computed key."""
-    return df.withColumn(
-        "merge_key",
-        F.coalesce(
-            F.when(F.col("cert_code") != "", F.col("cert_code")),
-            F.concat_ws("|", F.col("name"), F.col("corp_code")),
-        ),
-    )
-
-
-def upsert_employee(current: DataFrame, incoming: DataFrame) -> DataFrame:
-    cur = employee_merge_key(current) if "merge_key" not in current.columns else current
-    inc = employee_merge_key(incoming) if "merge_key" not in incoming.columns else incoming
-    return merge_upsert(cur, inc, MERGE_SPECS["employee"]["keys"])
-
-
-def upsert_person_performance(current: DataFrame, incoming: DataFrame) -> DataFrame:
-    """(name, corp_code, project_name, role) natural key
-    (CompanyEmployee.py:143-188)."""
-    return merge_upsert(current, incoming, MERGE_SPECS["person_performance"]["keys"])
-
-
-def upsert_winner_bid(current: DataFrame, incoming: DataFrame) -> DataFrame:
-    """(corp_code, project_name) natural key (winner_bid.py:20-67)."""
-    return merge_upsert(current, incoming, MERGE_SPECS["winner_bid"]["keys"])

@@ -28,9 +28,8 @@ from __future__ import annotations
 
 import os
 import tempfile
-from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -236,31 +235,25 @@ def to_merge_sql(
     )
 
 
-MatchedExpr = Callable[[str], Column]
-# signature: column_name -> merged Column; inside, reference t (target) and
-# s (source) sides via F.col("t." + name) / F.col("s." + name).
-
-
 def merge_upsert(
     target: DataFrame,
     source: DataFrame,
     keys: list[str],
-    on_matched: dict[str, MatchedExpr] | None = None,
-    source_order: list[str] | None = None,
+    on_matched_sql: dict[str, str] | None = None,
     on_duplicate: str = "dedup",
 ) -> DataFrame:
     """Set-oriented MERGE: WHEN MATCHED update / WHEN NOT MATCHED insert.
 
-    - ``source`` is first deduplicated on ``keys`` (last row wins by
-      ``source_order``; the default orders by ALL columns — key columns
-      cannot break ties between rows sharing that key, so a keys-only
-      order would keep a shuffle-dependent arbitrary row when the same
-      key arrives with different payloads). Callers whose source carries
-      non-orderable columns (maps) must pass ``source_order``.
+    - ``source`` is first deduplicated on ``keys``: the row kept is the
+      greatest in (keys, data columns) order. Key columns alone cannot
+      break ties between rows sharing that key, so a keys-only order
+      would keep a shuffle-dependent arbitrary row when the same key
+      arrives with different payloads. Every column must therefore be
+      orderable (no map columns).
     - ``on_duplicate``: ``"dedup"`` (default, above) or ``"error"`` —
       fail the job when the source carries duplicate keys, matching
       Iceberg ``MERGE INTO`` (which raises on multiple matching source
-      rows). ADDITIVE ``on_matched`` expressions (counter accumulation)
+      rows). ADDITIVE ``on_matched_sql`` rules (counter accumulation)
       MUST use ``"error"``: silent last-wins dedup would drop an
       increment, diverging from the reference's row-at-a-time upsert —
       such callers pre-aggregate their batch per key instead. The check
@@ -268,9 +261,12 @@ def merge_upsert(
       no extra action.
     - default matched behavior: source column replaces target column when
       source is matched (full-row update, like bidSaver.py's
-      update-else-insert); per-column overrides via ``on_matched``
+      update-else-insert); per-column overrides via ``on_matched_sql``
       express side effects like ``bid_count = t.bid_count + 1``
-      (CompanyEmployee.py:121-122).
+      (CompanyEmployee.py:121-122). They are the SQL strings
+      ``to_merge_sql`` emits, over the same ``t`` (target) / ``s``
+      (source) aliases, evaluated with ``F.expr``; a rule for a column
+      the frames lack is skipped.
     - implemented as one full_outer join on the keys → one shuffle, AQE
       handles skew; at cluster scale this call site becomes Iceberg
       MERGE INTO with identical semantics.
@@ -286,7 +282,7 @@ def merge_upsert(
       requirement and the source is shuffled once (plan: 3 Exchange →
       2 for the merge itself, measured in plans/r06/merge_upsert_*).
     """
-    on_matched = on_matched or {}
+    on_matched_sql = on_matched_sql or {}
     data_cols = [c for c in target.columns if c not in keys]
     if set(target.columns) != set(source.columns):
         # explicit raise (assert vanishes under python -O): a mismatch
@@ -325,8 +321,7 @@ def merge_upsert(
             .drop("_kc")
         )
     else:
-        order_cols = source_order or (keys + data_cols)
-        w = Window.partitionBy("_k").orderBy(*[F.col(c).desc() for c in order_cols])
+        w = Window.partitionBy("_k").orderBy(*[F.col(c).desc() for c in keys + data_cols])
         src = (
             source.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
@@ -345,10 +340,7 @@ def merge_upsert(
     for k in keys:
         out_cols.append(F.coalesce(F.col(f"s.{k}"), F.col(f"t.{k}")).alias(k))
     for c in data_cols:
-        if c in on_matched:
-            upd = on_matched[c](c)
-        else:
-            upd = F.col(f"s.{c}")
+        upd = F.expr(on_matched_sql[c]) if c in on_matched_sql else F.col(f"s.{c}")
         out_cols.append(
             F.when(s_present & t_present, upd)
             .when(s_present, F.col(f"s.{c}"))

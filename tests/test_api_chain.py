@@ -81,7 +81,7 @@ def test_winner_upsert_from_api(spark, api_world, cities_df):
     sim, st = api_world
     got = api_winner_items(st.extracted, cities_df).drop("city_name")
     cur = spark.createDataFrame([], got.schema)
-    merged = relational.upsert_winner_bid(cur, got)
+    merged = relational.upsert("winner_bid", cur, got)
     assert merged.count() == got.dropDuplicates(["corp_code", "project_name"]).count()
 
 

@@ -129,10 +129,10 @@ def test_company_employee_upserts(spark, corp_items):
     """Sink the crawled items through the company/employee/perf merges."""
     company_in = corp_items["company"].withColumn("bid_count", F.lit(1))
     cur = spark.createDataFrame([], company_in.schema)
-    t1 = relational.upsert_company(cur, company_in)
+    t1 = relational.upsert("company", cur, company_in)
     assert t1.count() == company_in.count()
     # re-sight: bid_count accumulates
-    t2 = relational.upsert_company(t1, company_in)
+    t2 = relational.upsert("company", t1, company_in)
     assert t2.filter(F.col("bid_count") == 2).count() == company_in.count()
 
     emp_in = corp_items["employee"].unionByName(
@@ -144,7 +144,7 @@ def test_company_employee_upserts(spark, corp_items):
         allowMissingColumns=False,
     ).drop("person_id")
     cur_e = spark.createDataFrame([], emp_in.schema)
-    merged = relational.upsert_employee(cur_e, emp_in)
+    merged = relational.upsert("employee", cur_e, emp_in)
     # conditional key: no (cert or name|corp) collisions lost
     from tbbid_scrapy_spark.plans.relational import employee_merge_key
 
@@ -153,7 +153,7 @@ def test_company_employee_upserts(spark, corp_items):
 
     perf_in = corp_items["performance"]
     cur_p = spark.createDataFrame([], perf_in.schema)
-    p1 = relational.upsert_person_performance(cur_p, perf_in)
+    p1 = relational.upsert("person_performance", cur_p, perf_in)
     assert p1.count() == perf_in.dropDuplicates(
         ["name", "corp_code", "project_name", "role"]
     ).count()

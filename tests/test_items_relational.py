@@ -230,7 +230,7 @@ def test_company_others_kept_unless_truthy(spark):
         [("C1", "甲公司", 1, ""), ("C2", "乙公司", 1, "新备注")],
         "corp_code string, name string, bid_count int, others string",
     )
-    out = {r.corp_code: r.others for r in relational.upsert_company(cur, inc).collect()}
+    out = {r.corp_code: r.others for r in relational.upsert("company", cur, inc).collect()}
     assert out == {"C1": "历史备注", "C2": "新备注"}
 
 
@@ -242,7 +242,7 @@ def test_company_bid_count_increment(spark):
         [("C1", "甲公司", 2), ("C2", "乙公司", 1)],
         "corp_code string, name string, bid_count int",
     )
-    out = {r.corp_code: r.bid_count for r in relational.upsert_company(cur, inc).collect()}
+    out = {r.corp_code: r.bid_count for r in relational.upsert("company", cur, inc).collect()}
     assert out == {"C1": 5, "C2": 1}
 
 
@@ -257,7 +257,7 @@ def test_employee_conditional_key(spark):
          ("", "王五", "C3", "安全员B")],          # new
         "cert_code string, name string, corp_code string, role string",
     )
-    out = relational.upsert_employee(cur, inc)
+    out = relational.upsert("employee", cur, inc)
     assert out.count() == 3
     roles = {r.name: r.role for r in out.collect()}
     assert roles == {"张三": "特级建造师", "李四": "一级建造师", "王五": "安全员B"}
@@ -272,7 +272,7 @@ def test_winner_and_performance_keys(spark):
         "corp_code string, project_name string, win_amt double",
     )
     out = {(r.corp_code, r.project_name): r.win_amt
-           for r in relational.upsert_winner_bid(cur, inc).collect()}
+           for r in relational.upsert("winner_bid", cur, inc).collect()}
     assert out == {("C1", "项目甲"): 200.0, ("C1", "项目乙"): 50.0}
 
     perf_cur = spark.createDataFrame(
@@ -284,7 +284,7 @@ def test_winner_and_performance_keys(spark):
          ("张三", "C1", "项目甲", "项目经理", "L1")],
         "name string, corp_code string, project_name string, role string, data_level string",
     )
-    out2 = relational.upsert_person_performance(perf_cur, perf_inc)
+    out2 = relational.upsert("person_performance", perf_cur, perf_inc)
     assert out2.count() == 2
     lv = {(r.name, r.role): r.data_level for r in out2.collect()}
     assert lv[("张三", "施工员")] == "L2"

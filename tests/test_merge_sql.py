@@ -5,9 +5,13 @@ CompanyEmployee.py:28-188, winner_bid.py:20-67)."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
+import datetime
+import re
 
+import pytest
+from pyspark.sql import types as T
+
+from tbbid_scrapy_spark.plans import relational
 from tbbid_scrapy_spark.plans.relational import MERGE_SPECS, merge_sql_for
 from tbbid_scrapy_spark.sources.sink import to_merge_sql
 
@@ -62,11 +66,10 @@ def test_merge_sql_executes_on_a_real_merge_capable_engine(spark):
     con.execute("INSERT INTO company VALUES ('C1', 'a', 3)")
     con.execute("CREATE TABLE _incoming (corp_code text, name text, bid_count int)")
     con.execute("INSERT INTO _incoming VALUES ('C1', 'a', 2), ('C2', 'b', 1)")
+    spec = MERGE_SPECS["company"]
     sql = to_merge_sql(
-        "company",
-        ["corp_code"],
-        ["corp_code", "name", "bid_count"],
-        {"bid_count": "coalesce(t.bid_count, 0) + coalesce(s.bid_count, 0)"},
+        "company", spec["keys"], ["corp_code", "name", "bid_count"],
+        spec["on_matched_sql"],
     ).replace("<=>", "IS NOT DISTINCT FROM")
     try:
         con.execute(sql)
@@ -75,17 +78,10 @@ def test_merge_sql_executes_on_a_real_merge_capable_engine(spark):
     got = dict(con.execute("SELECT corp_code, bid_count FROM company").fetchall())
     assert got == {"C1": 5, "C2": 1}
 
-    from tbbid_scrapy_spark.sources.sink import merge_upsert
-    from pyspark.sql import functions as F
-
     cur = spark.createDataFrame([("C1", "a", 3)], "corp_code string, name string, bid_count int")
     inc = spark.createDataFrame([("C1", "a", 2), ("C2", "b", 1)],
                                 "corp_code string, name string, bid_count int")
-    emulated = merge_upsert(
-        cur, inc, ["corp_code"],
-        on_matched={"bid_count": lambda c: F.coalesce(F.col(f"t.{c}"), F.lit(0))
-                    + F.coalesce(F.col(f"s.{c}"), F.lit(0))},
-    )
+    emulated = relational.upsert("company", cur, inc)
     assert {(r.corp_code, r.bid_count) for r in emulated.collect()} == set(got.items())
 
 
@@ -111,8 +107,8 @@ def test_merge_upsert_duplicate_key_dedup_is_deterministic(spark):
 
 def test_merge_upsert_on_duplicate_error_matches_iceberg(spark):
     """on_duplicate='error' fails on duplicate source keys like Iceberg
-    MERGE INTO's multiple-match error — required for ADDITIVE on_matched
-    (counter accumulation), where silent last-wins dedup would drop an
+    MERGE INTO's multiple-match error — required for ADDITIVE
+    on_matched_sql rules (counter accumulation), where silent last-wins dedup would drop an
     increment. Unique-key sources pass through unchanged."""
     import pytest
 
@@ -120,15 +116,15 @@ def test_merge_upsert_on_duplicate_error_matches_iceberg(spark):
 
     target = spark.createDataFrame([("K1", 1)], "k string, n int")
     ok = spark.createDataFrame([("K1", 2), ("K2", 3)], "k string, n int")
-    add = {"n": lambda c: F.col(f"t.{c}") + F.col(f"s.{c}")}
+    add = {"n": "t.n + s.n"}
     out = {r.k: r.n for r in
-           merge_upsert(target, ok, ["k"], on_matched=add,
+           merge_upsert(target, ok, ["k"], on_matched_sql=add,
                         on_duplicate="error").collect()}
     assert out == {"K1": 3, "K2": 3}
 
     dup = spark.createDataFrame([("K1", 1), ("K1", 1)], "k string, n int")
     with pytest.raises(Exception) as ei:
-        merge_upsert(target, dup, ["k"], on_matched=add,
+        merge_upsert(target, dup, ["k"], on_matched_sql=add,
                      on_duplicate="error").collect()
     assert "duplicate" in str(ei.value)
 
@@ -137,14 +133,10 @@ def test_merge_upsert_on_duplicate_error_matches_iceberg(spark):
 
 
 def test_upsert_company_rejects_duplicate_corp_batch(spark):
-    """upsert_company's bid_count is additive — a batch with the same
+    """The company upsert's bid_count is additive — a batch with the same
     corp_code twice must FAIL (the pipeline pre-aggregates; silently
     dropping a sighting increment would diverge from the reference's
     row-at-a-time upsert)."""
-    import pytest
-
-    from tbbid_scrapy_spark.plans import relational
-
     cur = spark.createDataFrame(
         [("C1", "n", 2)], "corp_code string, name string, bid_count int"
     )
@@ -153,4 +145,42 @@ def test_upsert_company_rejects_duplicate_corp_batch(spark):
         "corp_code string, name string, bid_count int",
     )
     with pytest.raises(Exception):
-        relational.upsert_company(cur, dup).collect()
+        relational.upsert("company", cur, dup).collect()
+
+
+def _value(dtype: T.DataType, i: int):
+    return {
+        "string": f"v{i}", "int": i, "double": float(i), "array<string>": [f"v{i}"],
+        "timestamp_ntz": datetime.datetime(2024, 1, 1 + i),
+    }[dtype.simpleString()]
+
+
+@pytest.mark.parametrize("table", sorted(MERGE_SPECS))
+def test_spec_declares_empty_table_merge_sql_and_upsert(spark, table):
+    """MERGE_SPECS is the one declaration of a sink table: the empty
+    table, the MERGE INTO insert list and the parquet upsert all follow
+    it. A source with a duplicated key keeps one row per key, except
+    for the additive company table, which must fail."""
+    spec = MERGE_SPECS[table]
+    declared = T._parse_datatype_string(spec["ddl"])
+    empty = relational.empty_tables(spark)[table]
+    assert empty.columns == spec["cols"]
+    assert [f.dataType for f in empty.schema] == [f.dataType for f in declared]
+
+    insert = re.search(r"INSERT \((.*?)\) VALUES", merge_sql_for(table)).group(1)
+    assert insert.split(", ") == spec["cols"]
+
+    # rows (key i, payload j): two share key 0, one has key 1
+    rows = [
+        tuple(_value(f.dataType, k if f.name in spec["keys"] else j) for f in empty.schema)
+        for k, j in [(0, 0), (0, 1), (1, 2)]
+    ]
+    src = spark.createDataFrame(rows, empty.schema)
+    merged = relational.upsert(table, empty, src)
+    if spec["on_duplicate"] == "error":
+        with pytest.raises(Exception, match="duplicate"):
+            merged.collect()
+        return
+    got = merged.collect()
+    assert len(got) == 2
+    assert len({tuple(r[k] for k in spec["keys"]) for r in got}) == 2
