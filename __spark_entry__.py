@@ -467,7 +467,10 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_counter_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8: counter-increment-on-conflict (bid_count += batch count,
-    CompanyEmployee.py:121-122) — pre-aggregate then merge-add."""
+    CompanyEmployee.py:121-122) — pre-aggregate then merge-add with the
+    company sink's own matched-update rules (``MERGE_SPECS["company"]``;
+    the ``others`` rule is skipped, these frames lack that column)."""
+    from tbbid_scrapy_spark.plans.relational import MERGE_SPECS
     from tbbid_scrapy_spark.sources.sink import merge_upsert
 
     o = _t(spark, sf_dir, "orders")
@@ -485,7 +488,7 @@ def q_counter_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         target,
         incoming,
         ["o_custkey"],
-        on_matched_sql={"bid_count": "t.bid_count + s.bid_count"},
+        on_matched_sql=MERGE_SPECS["company"]["on_matched_sql"],
     )
     return merged.orderBy("o_custkey")
 
@@ -1123,8 +1126,7 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _ts(spark, sf_dir, "documents")
     return (
-        minhash_lsh_pairs(d, n=3, num_hashes=32, bands=8, threshold=0.5,
-                          verify="exact")
+        minhash_lsh_pairs(d, n=3, num_hashes=32, bands=8, threshold=0.5)
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
         .orderBy("id_a", "id_b")
     )

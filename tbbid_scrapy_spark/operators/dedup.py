@@ -5,18 +5,27 @@ Five strategies, scale-ordered:
 
 - exact          : hash-groupBy on normalized text. One shuffle, maps to a
                    plain GROUP BY — the 100 TB workhorse.
-- ngram_jaccard  : exact n-gram (shingle) Jaccard over candidate pairs —
-                   ground truth for the approximate methods. Quadratic per
-                   shared-shingle group; used at audit scale / as verifier.
-- minhash_lsh    : shingle → k-seed minhash signature → banded LSH →
-                   bucket self-join. Signatures are built ENTIRELY with
-                   JVM-side xxhash64 (one expression per seed) — no Python
-                   in the hot path. This is the near-dup scale path.
-- simhash        : 64-bit simhash by per-bit token-hash voting, candidate
-                   pairs by 16-bit band equality, verified by
-                   bit_count(xor) hamming distance. All built-ins.
+- ngram_jaccard  : exact n-gram (shingle) Jaccard, count-based over an
+                   inverted index of hashed grams — ground truth for the
+                   approximate methods, with a document-frequency cap on
+                   stop-shingles (``stop_shingle_stats`` reports what it
+                   drops).
+- minhash_lsh    : hashed gram set → k-seed minhash signature → banded LSH
+                   → bucket pairs → exact-Jaccard verify. Signatures are
+                   JVM-side xxhash64 min-aggregates (one expression per
+                   seed) — no Python in the hot path. This is the near-dup
+                   scale path.
+- simhash        : 64-bit shingle-feature simhash (per-bit majority vote
+                   over the hashed gram set, one numpy Arrow kernel),
+                   candidates from rotated 8-bit windows, hamming-screened
+                   by bit_count(xor), then exact-Jaccard verify.
 - embedding near-dup : cosine ≥ τ pairs over the embeddings table (see
                    operators/similarity.py for the kernels).
+
+Every near-dup strategy reads ONE shingle representation:
+``shingle_hash_sets`` — each document's distinct word-n-grams as
+xxhash64 values. A 2^-64 hash collision is the accepted risk
+``exact_dedup`` already documents.
 
 All pair outputs are canonical (id_a < id_b) and deterministic.
 """
@@ -60,18 +69,6 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
             F.count("*").alias("dup_count"),
         )
     )
-
-
-def shingles(col: Column, n: int = 3) -> Column:
-    """Word n-gram shingle array (distinct, order-free) from whitespace
-    tokens — pure Catalyst: split + transform over a slice window."""
-    toks = F.split(normalize_text(col), " ")
-    k = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0))
-    grams = F.transform(
-        F.sequence(F.lit(0), k - F.lit(1)),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + F.lit(1), F.lit(n))),
-    )
-    return F.array_distinct(F.when(k > 0, grams).otherwise(F.array()))
 
 
 _WIDE_PLAN_NODES = ("Join ", "Aggregate [", "Window [", "Sort [",
@@ -159,22 +156,19 @@ def _with_tokens(documents: DataFrame, text_col: str = "text") -> DataFrame:
 
 def _gram_hash_array(n: int) -> Column:
     """array<bigint> of distinct xxhash64(word-n-gram) over a
-    materialized ``_toks`` column — hash VALUES identical to
-    ``transform(shingles(col, n), xxhash64)`` (the concatenated string
-    is byte-equal: tokens are space-free after normalize_text, so
-    ``concat_ws(" ", element_at×n)`` == ``concat_ws(" ", slice(...))``),
-    but ~3× cheaper per shingle (measured at sf0.1: 0.39 s → 0.13 s for
-    the 5k-doc set build): no per-position slice allocation, no
-    re-tokenization per branch. Distinct-then-hash vs hash-then-distinct
-    differ only via 2^-64 hash collisions — the contract exact_dedup
-    already accepts.
+    materialized ``_toks`` column — the one shingle representation every
+    near-dup operator reads. Each gram is ``xxhash64`` of the n tokens
+    joined by single spaces (tokens are space-free after normalize_text).
+    Reading the tokens via ``element_at`` instead of a per-position
+    ``slice`` is ~3× cheaper per shingle (measured at sf0.1: 0.39 s →
+    0.13 s for the 5k-doc set build). Distinct-then-hash vs
+    hash-then-distinct differ only via 2^-64 hash collisions — the
+    contract exact_dedup already accepts.
 
     Parsed as ONE SQL expression: the Column-by-Column build of the
     same tree cost ~100 py4j round-trips per call, driver-side, inside
-    the timed query build (the CASE condition/branches mirror the
-    previous greatest/when form exactly — `size(_toks)-(n-1) > 0` ⟺
-    `greatest(size(_toks)-(n-1), 0) > 0`, and the true branch's
-    sequence bound k-1 = size(_toks)-n)."""
+    the timed query build. A document shorter than n tokens has an
+    empty set."""
     elems = ", ".join(f"element_at(_toks, i + {j + 1})" for j in range(n))
     gram = f"xxhash64(concat_ws(' ', {elems}))"
     return F.expr(
@@ -184,47 +178,15 @@ def _gram_hash_array(n: int) -> Column:
     )
 
 
-def _exploded_shingles(documents: DataFrame, n: int) -> DataFrame:
-    # same one-parsed-expression form as _gram_hash_array (string grams,
-    # no hashing — the exact-verify/stop-shingle paths key on strings)
-    d = _with_tokens(documents)
-    elems = ", ".join(f"element_at(_toks, i + {j + 1})" for j in range(n))
-    distinct = F.expr(
-        f"array_distinct(CASE WHEN size(_toks) - {n - 1} > 0 THEN "
-        f"transform(sequence(0, size(_toks) - {n}), i -> concat_ws(' ', {elems})) "
-        f"ELSE cast(array() as array<string>) END)"
-    )
-    return d.select(F.col("doc_id"), F.explode(distinct).alias("shingle"))
-
-
-def _drop_stop_shingles(ex: DataFrame, max_shingle_df: int | None) -> DataFrame:
-    """Filter exploded (doc_id, shingle) rows to shingles with document
-    frequency ≤ the cap — the single shared implementation of the
-    stop-shingle guard (shingle_candidates and ngram_jaccard_pairs must
-    agree on its semantics or the candidate+verify and count-based paths
-    silently diverge)."""
-    if max_shingle_df is None:
-        return ex
-    rare = (
-        ex.groupBy("shingle").agg(F.count("*").alias("df"))
-        .filter(F.col("df") <= max_shingle_df)
-        .select("shingle")
-    )
-    return ex.join(rare, "shingle", "inner")
-
-
 def shingle_hash_sets(documents: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, sh array<bigint>): each document's distinct word-n-gram
-    set as xxhash64 values — the shared input of fingerprinting
+    set as xxhash64 values (``_gram_hash_array``) — the shared input of
+    minhash signatures (minhash_signatures), fingerprinting
     (simhash_shingle) and exact verification (verify_pairs_jaccard).
     Computing it once and persisting saves a second full document scan +
-    O(len) shingle transform when a pipeline needs both (at corpus scale
-    prefer materializing it to a table over in-memory persist).
-
-    Hash values are ``xxhash64(shingle string)`` exactly as before —
-    built via the materialized-token projection (``_gram_hash_array``),
-    ~3× cheaper than hashing ``shingles()`` output (guide §1.2 step 2:
-    per-task work — measured 0.39 s → 0.13 s for the sf0.1 set build)."""
+    O(len) shingle transform when a pipeline needs more than one (at
+    corpus scale prefer materializing it to a table over in-memory
+    persist)."""
     return _with_tokens(documents).select(
         F.col("doc_id"), _gram_hash_array(n).alias("sh")
     )
@@ -274,28 +236,20 @@ def verify_pairs_jaccard(documents: DataFrame, pairs: DataFrame,
     )
 
 
-def shingle_candidates(documents: DataFrame, n: int = 3,
-                       max_shingle_df: int | None = 1000) -> DataFrame:
-    """Distinct candidate pairs sharing ≥1 (rare) shingle.
-
-    ``max_shingle_df`` (DEFAULT 1000 — the scale guard is on unless
-    explicitly lifted) drops stop-shingles with document frequency above
-    the cap before the self-join: at web scale one shingle appearing in
-    10^6 docs would alone create ~10^12 join pairs. A pair is lost only
-    if EVERY shingle it shares is ubiquitous (df > cap) — such pairs owe
-    their similarity entirely to boilerplate. At the shipped fixtures the
-    cap never binds (max df ≈ 9 at sf0.01), so results equal the uncapped
-    exact computation; the excluded-shingle count is observable via
-    ``stop_shingle_stats``."""
-    ex = _drop_stop_shingles(_exploded_shingles(documents, n), max_shingle_df)
-    return _bucket_pairs(ex, ["shingle"])
+def _gram_rows(documents: DataFrame, n: int) -> DataFrame:
+    """(doc_id, shingle bigint): one row per distinct hashed gram of each
+    document — the explode both the df cap and its statistic count."""
+    return _with_tokens(documents).select(
+        F.col("doc_id"), F.explode(_gram_hash_array(n)).alias("shingle")
+    )
 
 
 def stop_shingle_stats(documents: DataFrame, n: int = 3,
                        max_shingle_df: int | None = 1000) -> DataFrame:
-    """No-silent-caps companion: how many shingles (and exploded rows) the
-    df cap excludes — one aggregate row."""
-    df_tbl = _exploded_shingles(documents, n).groupBy("shingle").agg(
+    """No-silent-caps companion of ``ngram_jaccard_pairs``: how many
+    shingles (and exploded rows) its df cap excludes — one aggregate row,
+    counted over the same hashed-gram rows the cap filters."""
+    df_tbl = _gram_rows(documents, n).groupBy("shingle").agg(
         F.count("*").alias("df")
     )
     dropped = F.col("df") > F.lit(max_shingle_df if max_shingle_df is not None else 2**62)
@@ -351,10 +305,9 @@ def ngram_jaccard_pairs(documents: DataFrame, n: int = 3, threshold: float = 0.8
     FULL shingle sets (its candidate stage has no df cap), so the two
     operators agree exactly on fixtures but diverge on boilerplate-heavy
     pairs at web scale — sub-cap Jaccard here, full Jaccard there."""
-    ex = _with_tokens(documents).select(
-        F.col("doc_id"), F.explode(_gram_hash_array(n)).alias("shingle")
+    grp = _gram_rows(documents, n).groupBy("shingle").agg(
+        F.collect_list("doc_id").alias("docs")
     )
-    grp = ex.groupBy("shingle").agg(F.collect_list("doc_id").alias("docs"))
     if max_shingle_df is not None:
         grp = grp.filter(F.size("docs") <= max_shingle_df)
     grp = scratch.persist(grp)
@@ -391,22 +344,14 @@ def ngram_jaccard_pairs(documents: DataFrame, n: int = 3, threshold: float = 0.8
     )
 
 
-def minhash_signatures(documents: DataFrame, n: int = 3, num_hashes: int = 32,
-                       sets_: DataFrame | None = None) -> DataFrame:
-    """(doc_id, sig array<bigint>) — sig[i] = min over shingles of
-    xxhash64(shingle, i). One explode + one groupBy with
-    ``num_hashes`` min() aggregates, all codegen'd; map-side partial
-    aggregation means the shuffle carries one row per doc.
-
-    ``sets_``: a pre-computed ``shingle_hash_sets`` frame — components
-    become min over xxhash64(shingle_hash, i), an equally valid minhash
-    family (an independent rehash per component of the same distinct
-    set), letting a pipeline share ONE shingle materialization between
-    signatures and exact verification instead of re-scanning the text."""
-    if sets_ is not None:
-        ex = sets_.select(F.col("doc_id"), F.explode("sh").alias("shingle"))
-    else:
-        ex = _exploded_shingles(documents, n)
+def minhash_signatures(sets_: DataFrame, num_hashes: int = 32) -> DataFrame:
+    """(doc_id, sig array<bigint>) from a ``shingle_hash_sets`` frame —
+    sig[i] = min over the document's gram hashes g of xxhash64(g, i), an
+    independent rehash per component of the same distinct set. One
+    explode + one groupBy with ``num_hashes`` min() aggregates, all
+    codegen'd; map-side partial aggregation means the shuffle carries one
+    row per doc. A document with an empty set gets no row."""
+    ex = sets_.select(F.col("doc_id"), F.explode("sh").alias("shingle"))
     # one parsed expression per component (same min/xxhash64/int-seed
     # tree as the Column form, ~6x fewer py4j round-trips to build)
     aggs = [
@@ -431,7 +376,7 @@ def _bucket_pairs(rows: DataFrame, keys: list[str],
     combined) and double-exploding it, instead of self-joining the
     bucket rows — the self-join shape planned the (often expensive)
     signature subtree TWICE, once per side (minhash: the full
-    explode+32-min aggregate; simhash: the 64-vote aggregate), and
+    explode+32-min aggregate; simhash: the fingerprint kernel), and
     shuffled both copies. Volume is identical: a k-member bucket emits
     k(k-1)/2 pair rows either way, in one task either way (the self-join
     hashed all of a bucket's rows to one partition too) — the known hot
@@ -460,10 +405,10 @@ def _bucket_pairs(rows: DataFrame, keys: list[str],
     )
 
 
-def minhash_lsh_candidates(documents: DataFrame, n: int = 3, num_hashes: int = 32,
-                           bands: int = 8,
-                           sigs: DataFrame | None = None) -> DataFrame:
-    """Distinct candidate pairs colliding in ≥1 minhash LSH band.
+def minhash_lsh_candidates(sigs: DataFrame, num_hashes: int = 32,
+                           bands: int = 8) -> DataFrame:
+    """Distinct candidate pairs colliding in ≥1 minhash LSH band of the
+    ``minhash_signatures`` frame ``sigs``.
 
     rows-per-band r = num_hashes/bands; collision probability for a pair
     at Jaccard j is 1-(1-j^r)^b. The band shuffle carries ONLY
@@ -471,8 +416,6 @@ def minhash_lsh_candidates(documents: DataFrame, n: int = 3, num_hashes: int = 3
     join (they'd widen the shuffle ~num_hashes×); callers needing sig or
     exact scores join back on doc_id afterwards."""
     r = num_hashes // bands
-    if sigs is None:
-        sigs = minhash_signatures(documents, n, num_hashes)
     band_rows = sigs.select(
         "doc_id",
         F.explode(
@@ -486,21 +429,13 @@ def minhash_lsh_candidates(documents: DataFrame, n: int = 3, num_hashes: int = 3
 
 
 def minhash_lsh_pairs(documents: DataFrame, n: int = 3, num_hashes: int = 32,
-                      bands: int = 8, threshold: float = 0.5,
-                      verify: str = "exact") -> DataFrame:
-    """Near-dup pairs via banded minhash LSH candidates + verification.
-
-    verify='exact' (default): candidates are re-scored with the TRUE
-    n-gram Jaccard (``verify_pairs_jaccard``) and filtered at
+                      bands: int = 8, threshold: float = 0.5) -> DataFrame:
+    """Near-dup pairs via banded minhash LSH candidates re-scored with the
+    TRUE n-gram Jaccard (``verify_pairs_jaccard``) and filtered at
     ``threshold`` — output (id_a, id_b, jaccard) is deterministic,
     engine-independent, and oracle-checkable against the exact
     all-pairs SQL whenever band recall covers every qualifying pair
     (pinned empirically in tests at the shipped fixtures).
-
-    verify='est': candidates are scored by the fraction of agreeing
-    signature components (the unbiased Jaccard estimator) — cheaper at
-    scale (no second look at the text), output
-    (id_a, id_b, jaccard_est).
 
     The shingle sets are materialized ONCE (scratch-persisted, caller-
     releasable) and shared by signatures and the exact verifier — the
@@ -509,76 +444,27 @@ def minhash_lsh_pairs(documents: DataFrame, n: int = 3, num_hashes: int = 32,
     signature explode and the verifier's set build). At 100 TB
     materialize the sets to a table instead — a persisted corpus-wide
     array column would overrun the storage pool."""
-    from tbbid_scrapy_spark.operators import scratch as _scratch
-
-    sets_ = _scratch.persist(shingle_hash_sets(documents, n))
-    sigs = minhash_signatures(documents, n, num_hashes, sets_=sets_)
-    cand = minhash_lsh_candidates(documents, n, num_hashes, bands, sigs=sigs)
-    if verify == "exact":
-        return verify_pairs_jaccard(documents, cand, n, sets_=sets_).filter(
-            F.col("jaccard") >= threshold
-        )
-    sig_a = sigs.select(F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sig_b = sigs.select(F.col("doc_id").alias("id_b"), F.col("sig").alias("sig_b"))
-    est = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    ) / F.lit(num_hashes)
-    return (
-        cand.join(sig_a, "id_a").join(sig_b, "id_b")
-        .withColumn("jaccard_est", est.cast("double"))
-        .filter(F.col("jaccard_est") >= threshold)
-        .select("id_a", "id_b", "jaccard_est")
+    sets_ = scratch.persist(shingle_hash_sets(documents, n))
+    cand = minhash_lsh_candidates(
+        minhash_signatures(sets_, num_hashes), num_hashes, bands
     )
-
-
-def _simhash_votes(features: DataFrame) -> DataFrame:
-    """(doc_id, simhash bigint) from exploded 64-bit feature hashes
-    (doc_id, th): per-bit majority vote. 64 conditional-sum aggregates,
-    assembled with shift/or — whole-stage codegen, one shuffle."""
-    votes = features.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.col("th").bitwiseAND(F.lit(1 << i) if i < 63 else F.lit(-(2**63))) != 0, 1)
-                .otherwise(-1)
-            ).alias(f"b{i}")
-            for i in range(64)
-        ]
+    return verify_pairs_jaccard(documents, cand, n, sets_=sets_).filter(
+        F.col("jaccard") >= threshold
     )
-    sim = None
-    for i in range(64):
-        bit = F.when(F.col(f"b{i}") > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        term = F.shiftleft(bit, i)
-        sim = term if sim is None else sim.bitwiseOR(term)
-    return votes.select("doc_id", sim.alias("simhash"))
-
-
-def simhash(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """Token-feature simhash: per-bit majority vote over distinct-token
-    xxhash64s — the hamming-distance operator (near-exact dup detection,
-    Manku et al. semantics)."""
-    toks = _spread(documents).select(
-        "doc_id",
-        F.explode(F.array_distinct(F.split(normalize_text(F.col(text_col)), " "))).alias("tok"),
-    ).withColumn("th", F.xxhash64("tok"))
-    return _simhash_votes(toks)
 
 
 @_functools.lru_cache(maxsize=1)
 def _simhash_from_sets_pd():
     """Whole-batch simhash from per-doc feature-hash arrays: one numpy
-    unpackbits + reduceat per Arrow batch instead of exploding every
-    (doc, feature) row into a 64-aggregate shuffle. A document's simhash
-    depends ONLY on its own feature array — per-bit majority vote over
-    its features — so the explode+groupBy shape paid a full shuffle (and
-    265k × 64 conditional-sum updates at sf0.1) for a computation that
-    is row-local. Exact-integer parity with ``_simhash_votes``: bit i is
-    set iff 2·(features with bit i) > n_features, the same strict
-    tie-break as sum(±1) > 0. Same map-only Arrow pattern as
-    ``similarity._band_sigs_pd`` (measured there ~100× vs interpreted
-    HOFs); callers filter empty arrays first to mirror the explode
-    semantics (no row for an empty set)."""
+    unpackbits + reduceat per Arrow batch. A document's simhash depends
+    ONLY on its own feature array, so it is computed row-locally — no
+    explode, no shuffle. Bit i is set iff 2·(features with bit i) >
+    n_features: a per-bit majority vote with a strict tie-break (a tie
+    leaves the bit clear). ``test_simhash_kernel_majority_and_ties`` pins
+    that rule on hand-built arrays, bit 63 included. Same map-only Arrow
+    pattern as ``similarity._band_sigs_pd`` (measured there ~100× vs
+    interpreted HOFs). An empty array maps to 0 here; ``simhash_shingle``
+    filters empty sets out first, so they get no row."""
     import numpy as np
 
     @F.pandas_udf("long")
@@ -619,8 +505,7 @@ def simhash_shingle(documents: DataFrame, n: int = 3,
     measured 83k candidates on 5k docs vs 4k with shingle features).
 
     Computed row-locally from the feature arrays (``_simhash_from_sets_pd``
-    — map-only, no shuffle; the empty-set filter mirrors the previous
-    explode path, which emitted no row for an empty set).
+    — map-only, no shuffle). A document with an empty set gets no row.
 
     ``sets_``: pre-computed ``shingle_hash_sets`` frame to read instead
     of re-scanning/re-shingling the documents."""

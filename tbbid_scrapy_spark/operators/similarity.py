@@ -405,7 +405,7 @@ def _screen_hamming_bound(threshold: float, total_planes: int) -> int:
 
 def pairs_above(corpus: DataFrame, threshold: float = 0.95,
                 n_planes: int = 16, n_bands: int = 20, seed: int = 42,
-                exact: bool = False, screen: bool = True) -> DataFrame:
+                exact: bool = False) -> DataFrame:
     """Embedding near-dup pairs with cosine ≥ threshold.
 
     Default path: BANDED random-hyperplane LSH — ``n_bands`` independent
@@ -428,14 +428,13 @@ def pairs_above(corpus: DataFrame, threshold: float = 0.95,
     ride the candidate shuffle; they join back for the exact re-score,
     so candidate count (not corpus size) drives verify cost. When the
     full signature fits a bigint (n_bands·n_planes ≤ 64) a
-    simhash-style hamming pre-screen (``screen``) XOR+popcounts away
-    unrelated bucket mates before the O(dim) cosine; at the wide default
-    the bands are selective enough on their own and the screen is
-    skipped. The signature arrays are persisted so the self-join
-    computes the n_bands·n_planes interpreted plane dots once per
-    vector, not twice (at 10^10 vectors that persist is
-    ~rows×(n_bands+1)×8 B, MEMORY_AND_DISK — prefer materializing to a
-    table there). The persist is registered with ``operators.scratch``:
+    simhash-style hamming pre-screen XOR+popcounts away unrelated bucket
+    mates before the O(dim) cosine; at the wide default the bands are
+    selective enough on their own and there is no screen. The signature
+    arrays are persisted so the self-join computes the n_bands·n_planes
+    interpreted plane dots once per vector, not twice (at 10^10 vectors
+    that persist is ~rows×(n_bands+1)×8 B, MEMORY_AND_DISK — prefer
+    materializing to a table there). The persist is registered with ``operators.scratch``:
     call ``scratch.release()`` after your final action to drop it
     (long-lived sessions would otherwise accumulate storage-pool
     pressure across repeated operator calls).
@@ -455,10 +454,6 @@ def pairs_above(corpus: DataFrame, threshold: float = 0.95,
         )
     else:
         total = n_bands * n_planes
-        # the full-signature hamming screen needs all bands in ONE bigint
-        # (band i owns bits [i·n_planes, (i+1)·n_planes)) — only possible
-        # for narrow configs; the wide default relies on band selectivity
-        screen = screen and total <= 64
         # materialize the signature ARRAY first (one Arrow-batched matmul
         # per vector batch — see _band_sigs_pd); full-sig assembly and
         # the explode are cheap arithmetic over the cached arrays
@@ -474,7 +469,10 @@ def pairs_above(corpus: DataFrame, threshold: float = 0.95,
         # rows instead of a self-join shuffling both sides
         from tbbid_scrapy_spark.operators.dedup import _bucket_pairs
 
-        if screen:
+        # the full-signature hamming screen needs all bands in ONE bigint
+        # (band i owns bits [i·n_planes, (i+1)·n_planes)) — only possible
+        # for narrow configs; the wide default relies on band selectivity
+        if total <= 64:
             full = F.lit(0).cast("long")
             for i in range(n_bands):
                 full = full.bitwiseOR(

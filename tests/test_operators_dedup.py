@@ -71,38 +71,68 @@ def test_minhash_recall_vs_exact(spark, corpus):
 
 
 def test_minhash_estimate_tracks_exact(spark, corpus):
+    """The agreeing-component fraction of the production signatures
+    (minhash over shingle_hash_sets) is an unbiased Jaccard estimate."""
     exact = {
         (r.id_a, r.id_b): r.jaccard
         for r in dedup.ngram_jaccard_pairs(corpus, n=3, threshold=0.3).collect()
     }
-    est = {
-        (r.id_a, r.id_b): r.jaccard_est
-        for r in dedup.minhash_lsh_pairs(
-            corpus, n=3, num_hashes=32, bands=8, threshold=0.3, verify="est"
+    sigs = {
+        r.doc_id: r.sig
+        for r in dedup.minhash_signatures(
+            dedup.shingle_hash_sets(corpus, n=3), num_hashes=32
         ).collect()
     }
-    both = set(exact) & set(est)
-    assert both
-    for k in both:
-        assert abs(exact[k] - est[k]) < 0.3, (k, exact[k], est[k])
+    assert exact
+    for (a, b), j in exact.items():
+        est = sum(x == y for x, y in zip(sigs[a], sigs[b])) / 32
+        assert abs(j - est) < 0.3, ((a, b), j, est)
+
+
+def _majority_simhash(sh):
+    """Driver-side per-bit majority vote over a gram-hash array: bit i is
+    set iff strictly more than half the hashes have it."""
+    out = 0
+    for i in range(64):
+        ones = sum((v >> i) & 1 for v in sh)
+        if 2 * ones > len(sh):
+            out |= 1 << i
+    return out - (1 << 64) if out >= 1 << 63 else out
+
+
+def _hamming(a, b):
+    return bin((a ^ b) & ((1 << 64) - 1)).count("1")
 
 
 def test_simhash_near_dups(spark, corpus):
-    # exhaustively computed hamming distances between all signatures
-    sigs = {r.doc_id: r.simhash for r in dedup.simhash(corpus).collect()}
-    ids = sorted(sigs)
-    close = {
-        (a, b)
-        for i, a in enumerate(ids)
-        for b in ids[i + 1:]
-        if bin((sigs[a] ^ sigs[b]) & ((1 << 64) - 1)).count("1") <= 7
-    }
-    assert close, "fixture produced no close pairs"
-    # the planted near-dups are overwhelmingly within hamming 7
-    hits = sum((fam * 3, fam * 3 + 1) in close for fam in range(10))
-    assert hits >= 8, f"only {hits}/10 planted near-dups within hamming 7"
-    # exact dup must be hamming 0
-    assert sigs[0] == sigs[100]
+    sets_ = dedup.shingle_hash_sets(corpus, n=3)
+    sigs = {r.doc_id: r.simhash
+            for r in dedup.simhash_shingle(corpus, n=3, sets_=sets_).collect()}
+    # exact dups normalize to one shingle set → one fingerprint
+    assert sigs[0] == sigs[100] == sigs[101]
+    # shingle features make hamming track Jaccard: in every family the
+    # 1-mutation near-dup sits closer to the original than the far variant
+    for fam in range(10):
+        o, near, far = fam * 3, fam * 3 + 1, fam * 3 + 2
+        assert _hamming(sigs[o], sigs[near]) < _hamming(sigs[o], sigs[far]), fam
+    # the Arrow kernel IS the per-bit majority vote over the gram hashes
+    sets_by_doc = {r.doc_id: r.sh for r in sets_.collect()}
+    assert set(sigs) == set(sets_by_doc)
+    for d, sh in sets_by_doc.items():
+        assert sigs[d] == _majority_simhash(sh), d
+
+
+def test_simhash_kernel_majority_and_ties(spark):
+    """_simhash_from_sets_pd on hand-built arrays: bit 63 counts like any
+    other bit, a strict tie leaves the bit clear, an empty set gets no
+    row."""
+    sets_ = spark.createDataFrame(
+        [(1, [-1]), (2, [-1, 0]), (3, [-1, -1, 0]), (4, [])],
+        "doc_id long, sh array<bigint>",
+    )
+    got = {r.doc_id: r.simhash
+           for r in dedup.simhash_shingle(None, sets_=sets_).collect()}
+    assert got == {1: -1, 2: 0, 3: -1}
 
 
 def test_lsh_topk_recall_vs_brute_force(spark):
@@ -159,7 +189,8 @@ def _brute_jaccard(rows, n=3):
 
 def test_verify_pairs_jaccard_matches_definition(spark, corpus):
     truth = _brute_jaccard(corpus.collect())
-    cand = dedup.shingle_candidates(corpus, n=3, max_shingle_df=None)
+    cand = dedup.ngram_jaccard_pairs(corpus, n=3, threshold=0.0,
+                                     max_shingle_df=None)
     got = {
         (r.id_a, r.id_b): r.jaccard
         for r in dedup.verify_pairs_jaccard(corpus, cand, n=3).collect()
@@ -174,8 +205,10 @@ def test_shingle_df_cap_drops_boilerplate_only_pairs(spark):
     # two docs overlapping ONLY via a shingle shared by everyone
     rows = [(i, f"common boiler plate unique{i} tail{i} end{i}") for i in range(6)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    uncapped = dedup.shingle_candidates(df, n=3, max_shingle_df=None).count()
-    capped = dedup.shingle_candidates(df, n=3, max_shingle_df=3).count()
+    uncapped = dedup.ngram_jaccard_pairs(
+        df, n=3, threshold=0.0, max_shingle_df=None).count()
+    capped = dedup.ngram_jaccard_pairs(
+        df, n=3, threshold=0.0, max_shingle_df=3).count()
     assert uncapped == 15 and capped == 0
     stats = dedup.stop_shingle_stats(df, n=3, max_shingle_df=3).collect()[0]
     assert stats.shingles_dropped == 1 and stats.rows_dropped == 6
@@ -203,7 +236,9 @@ def test_candidate_recall_total_on_driver_fixture(spark, driver_docs):
     mh = {
         (r.id_a, r.id_b)
         for r in dedup.minhash_lsh_candidates(
-            driver_docs, n=3, num_hashes=32, bands=8
+            dedup.minhash_signatures(dedup.shingle_hash_sets(driver_docs, n=3),
+                                     num_hashes=32),
+            num_hashes=32, bands=8,
         ).collect()
     }
     sh = {
@@ -224,7 +259,7 @@ def test_verified_entry_queries_equal_exact(spark, driver_docs):
     mh = {
         (r.id_a, r.id_b): round(r.jaccard, 6)
         for r in dedup.minhash_lsh_pairs(
-            driver_docs, n=3, num_hashes=32, bands=8, threshold=0.5, verify="exact"
+            driver_docs, n=3, num_hashes=32, bands=8, threshold=0.5
         ).collect()
     }
     sv = {
@@ -375,7 +410,7 @@ def test_verify_pairs_empty_shingle_sets_null_not_crash(spark):
 
 
 def test_minhash_shares_one_shingle_materialization(spark, corpus):
-    """minhash_lsh_pairs(verify='exact') derives signatures AND the
+    """minhash_lsh_pairs derives signatures AND the
     verifier from ONE scratch-persisted shingle_hash_sets frame — pinned
     by the scratch registration (relative to pre-test state) and by the
     pair output still matching the exact oracle."""

@@ -70,10 +70,18 @@ def test_pricing_summary_stays_jvm_side(spark):
 def test_minhash_signatures_single_shuffle(spark):
     """The minhash signature build must be one explode + one partial-agg
     shuffle — no Python, no extra exchanges."""
-    from tbbid_scrapy_spark.operators.dedup import minhash_signatures
+    from tbbid_scrapy_spark.operators import scratch
+    from tbbid_scrapy_spark.operators.dedup import (
+        minhash_signatures, shingle_hash_sets,
+    )
 
+    # an earlier near-dup query leaves the same scan's shingle sets
+    # scratch-persisted; the build would then read that cache, and
+    # explain() prints the cache's own spread Exchange twice (final and
+    # initial plan). Release it so the plan is the fresh build's.
+    scratch.release()
     d = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _explain(minhash_signatures(d, 3, 16), "simple")
+    plan = _explain(minhash_signatures(shingle_hash_sets(d, 3), 16), "simple")
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert plan.count("Exchange") <= 2, plan  # partial→final agg exchange (+AQE read)
 
