@@ -278,10 +278,12 @@ def _url_norm_cols(url_col: str, base_col: str | None) -> tuple:
     (url_col, base_col) — each is a handful of py4j round-trips that the
     crawl loop otherwise re-paid every wave (see _canonical_jvm_cols)."""
     plain = F.coalesce(is_plain_url(F.col(url_col)), F.lit(False))
-    if base_col:
-        slow_norm = resolve_and_canonicalize_pd(F.col(url_col), F.col(base_col))
-    else:
-        slow_norm = canonicalize_url_pd(F.col(url_col))
+    # a nondeterministic copy of the UDF: a filter on url_norm (the crawl
+    # drops nulls) is then not pushed below this projection, where the
+    # optimizer would evaluate the UDF a second time, in its own tasks
+    udf = resolve_and_canonicalize_pd if base_col else canonicalize_url_pd
+    args = [F.col(url_col)] + ([F.col(base_col)] if base_col else [])
+    slow_norm = F.pandas_udf(udf.func, udf.returnType).asNondeterministic()(*args)
     return (
         plain,
         slow_norm,
@@ -301,10 +303,12 @@ def with_url_norm(df: DataFrame, url_col: str = "url",
     Spark evaluates an extracted Python UDF on every row regardless of
     the branch it feeds, so a conditional expression would still pay the
     full Python cost. Every partition of the fallback branch still
-    starts a Python task, rows or not, but on an all-plain narrow crawl
-    wave AQE coalesces that branch to one partition: one Python task per
-    wave instead of one per partition of the all-Arrow form (5 on the
-    perfbench crawl), at ~0.2 s of CPU each whatever the row count.
+    starts a Python task, rows or not; the crawl sizes a narrow wave's
+    link partitions to one, so that is one Python task per wave instead
+    of one per partition of the all-Arrow form (5 on the perfbench
+    crawl), at ~0.2 s of CPU each whatever the row count. The fallback
+    UDF is nondeterministic, so a caller's filter on url_norm stays
+    above it and it runs once per row.
     Wide waves were already faster on this path (8M-URL wave 160k vs
     ~140k URLs/s against the all-Arrow form). The all-Arrow
     canonicalizer stays available as ``canonicalize_url_pd`` /

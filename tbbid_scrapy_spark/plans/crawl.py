@@ -35,8 +35,12 @@ Performance discipline: each wave materializes exactly two intermediates
 (the fetched batch and the new children — both needed by several
 downstream branches), tracks the global sequence counter on the driver
 (an int, not an agg job), and takes row counts from the dense-index pass
-that already ran — so a wave is a fixed small number of jobs regardless
-of frontier size, and every job is shuffle-parallel. A wave commits only
+that already ran. It is planned statically: ``run()`` turns AQE off for
+its duration (the engine sizes every width from its own row estimate,
+salts the hot host itself and persists its static inputs, and AQE would
+add a job and a re-plan per query stage), so a warm wave is 12 Spark
+jobs regardless of frontier size, and every job is shuffle-parallel at
+the wave's one width. A wave commits only
 what the next wave reads (pending, seen, shards) plus its one log part;
 the settled frontier rows, fetch log, extracted spans and
 per-(partition, host) metrics are views over the log, computed when a
@@ -156,11 +160,11 @@ EXTRACTED_SCHEMA = T.StructType(
 )
 
 
-# Adaptive wave parallelism: explicit repartitions (dense index, link
-# spread, shuffle width) are sized to ceil(rows / MIN_ROWS_PER_TASK),
-# capped at the cluster's defaultParallelism — the same policy AQE
-# applies to shuffle reads, extended to the repartitions AQE can't
-# touch. At 10^10-URL waves this saturates to full parallelism; at
+# Adaptive wave parallelism: a wave's one width (dense index, link
+# spread and shuffle width alike) is ceil(pending rows /
+# MIN_ROWS_PER_TASK), capped at the cluster's defaultParallelism. The
+# wave runs with AQE off, so this is the only coalescing any of its
+# shuffles get. At 10^10-URL waves this saturates to full parallelism; at
 # trickle waves (seed ramp-up, politeness-starved hosts) it stops
 # paying ~1 s/task of scheduling+shuffle-file overhead for 100-row
 # stages (measured: 32-task stages with 74 KB of shuffle spent 20 s
@@ -647,14 +651,13 @@ class CrawlEngine:
         w = st.wave
         t0 = time.monotonic()
 
-        # adaptive wave parallelism (see MIN_ROWS_PER_TASK): batch-side
-        # ops sized to the pending estimate, link-side ops get 4x
-        # headroom for fan-out; shuffle width follows the wave size so
-        # AQE's read-side coalescing is matched by the write side too
-        width = self.spark.sparkContext.defaultParallelism
+        # adaptive wave parallelism (see MIN_ROWS_PER_TASK): ONE width per
+        # wave, sized to the pending estimate, for every shuffle and
+        # repartition. AQE is off inside run(), so nothing coalesces a
+        # shuffle read, and each partition of the Arrow canonicalizer's
+        # branch is one Python task (~0.2 s of CPU) whatever its rows
         wave_parts = self._sized_parts(st.pending_est)
-        links_parts = min(width, wave_parts * 4)
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(links_parts))
+        self.spark.conf.set("spark.sql.shuffle.partitions", str(wave_parts))
 
         # st.pending IS the live frontier — no state filter, no settled rows
         # in any wave join
@@ -679,7 +682,7 @@ class CrawlEngine:
         scratch: list = [] if h_batch is None else [h_batch]
         try:
             return self._run_wave_body(
-                st, w, t0, cfg, batch, n_batch, links_parts, scratch
+                st, w, t0, cfg, batch, n_batch, wave_parts, scratch
             )
         finally:
             for h in scratch:
@@ -688,7 +691,7 @@ class CrawlEngine:
                 except Exception:
                     pass
 
-    def _run_wave_body(self, st, w, t0, cfg, batch, n_batch, links_parts,
+    def _run_wave_body(self, st, w, t0, cfg, batch, n_batch, wave_parts,
                        scratch):
         # NOTE: no extra repartition here — dense_index range-partitioned
         # the batch by global fetch order, which interleaves hosts evenly,
@@ -757,7 +760,7 @@ class CrawlEngine:
         # a hub page can fan out 10^4+ links from ONE row; explode keeps
         # them in the parent's partition, which would serialize the
         # canonicalize/dedup pipeline behind one task — spread them first
-        links = links.repartition(links_parts)
+        links = links.repartition(wave_parts)
         # F16 prefix rewrite before canonicalization: person-detail links
         # are requested as performance lists (company_emp_info.py:214-216)
         links = links.withColumn(
@@ -848,7 +851,7 @@ class CrawlEngine:
                 [F.col("parent_pos"), F.col("eff_pos")],
                 "seq",
                 st.next_seq,
-                links_parts,
+                wave_parts,
             )
             if h_children is not None:
                 scratch.append(h_children)
@@ -921,10 +924,13 @@ class CrawlEngine:
     # -- full run --------------------------------------------------------------
 
     def run(self, resume: bool = False) -> CrawlState:
-        # waves retune spark.sql.shuffle.partitions to their width
-        # (adaptive wave parallelism) — restore the session value so
-        # unrelated queries on the same session keep their planning width
-        prev_shuffle = self.spark.conf.get("spark.sql.shuffle.partitions")
+        # waves are planned statically: AQE off (the engine sizes every
+        # width and salts the hot host itself, and AQE would add a job and
+        # a re-plan per query stage) and the shuffle width retuned per
+        # wave. Both are restored so other queries on the session keep
+        # the caller's values.
+        prev_conf = {k: self.spark.conf.get(k) for k in
+                     ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")}
         # A fresh run re-uses deterministic wave-numbered delta part names
         # (sink.DeltaTable.write_part), so starting over inside a
         # checkpoint_dir that already holds a COMMITTED manifest would
@@ -945,6 +951,7 @@ class CrawlEngine:
         statics = [t for t in (self._rules, self._budgets, self._site_cols)
                    if t is not None]
         try:
+            self.spark.conf.set("spark.sql.adaptive.enabled", "false")
             _fan_out({str(i): t.persist().count for i, t in enumerate(statics)})
             st = self.resume() if resume else self._initial_state()
             if not resume:
@@ -955,6 +962,7 @@ class CrawlEngine:
                     break
             return st
         finally:
-            self.spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+            for k, v in prev_conf.items():
+                self.spark.conf.set(k, v)
             for t in statics:
                 t.unpersist()

@@ -3,9 +3,11 @@
 One place for every config knob so tests, bench, and the entry point agree.
 Defaults are sized for the sandbox (local[N], single JVM) but chosen to be
 the same settings we would ship to a 1000-executor cluster: AQE on
-(runtime re-planning + skew-join splitting), Arrow on (every pandas UDF
-crosses the JVM/Python boundary in columnar batches), shuffle partitions
-matched to parallelism instead of the legacy 200.
+(runtime re-planning + skew-join splitting) for queries, Arrow on (every
+pandas UDF crosses the JVM/Python boundary in columnar batches), shuffle
+partitions matched to parallelism instead of the legacy 200. The crawl
+loop (plans/crawl.py ``CrawlEngine.run``) turns AQE off for its own
+duration and sizes each wave's width itself, then restores both.
 
 Timezone is Asia/Shanghai because the reference stores naive local
 datetimes (/root/reference/xizang/spiders/bid_info.py:18 uses
@@ -30,7 +32,8 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 #   entries      100      200   400    1000   2000
 #   crawl/wave   124-133  30    30     26-32  30
 #   corpus/pass  372      296   10-12  6-14   6
-# 400 is the smallest size on the plateau for both.
+# 400 is the smallest size on the plateau for both. (Crawl figures with
+# AQE on in the wave; planned statically, a warm wave compiles 8 at 400.)
 CODEGEN_CACHE_ENTRIES = 400
 
 
