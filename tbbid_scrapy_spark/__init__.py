@@ -25,7 +25,6 @@ Layout
 - ``fixtures``   : deterministic synthetic site-graph generator + the
                    single-threaded reference-skeleton simulator used as the
                    crawl-ordering / seen-set oracle.
-- ``streaming``  : Structured Streaming variant of the frontier loop.
 """
 
 __version__ = "0.1.0"

@@ -32,9 +32,8 @@ caps at ``MAX_REGISTERED`` frames and evicts (unpersists) the oldest on
 overflow — scratch frames are recomputable by construction, so an
 evicted one costs recompute time, never correctness.
 
-Thread-safety: all registry mutations hold a module lock (the crawl
-engine drives Spark actions from a ThreadPoolExecutor, and a streaming
-query's batches run on Spark's own threads — an unguarded
+Thread-safety: all registry mutations hold a module lock (a caller may
+run registering operators from several threads at once — an unguarded
 check-then-pop would race).  ``scope()`` tracks the IDENTITY of frames
 registered inside it, not a length mark: cap eviction firing inside the
 scope would otherwise shift the mark and make scope exit release the

@@ -112,10 +112,10 @@ def _sweep_stale_scratch(root: str, max_age_sec: int = 24 * 3600) -> None:
     else (legacy layouts) only after max_age_sec. Never touches a live
     owner's directory: there is deliberately NO age-based hard cap on
     pid dirs — the top-level mtime is set at creation and Spark only
-    writes inside blockmgr-* subdirs, so a long-running session (the
-    streaming crawl is designed to run for weeks) has a permanently
-    stale top-level mtime, and an age cap would rmtree its live
-    shuffle/spill dirs out from under it mid-job."""
+    writes inside blockmgr-* subdirs, so any long-running session (a
+    multi-day batch crawl, say) has a permanently stale top-level
+    mtime, and an age cap would rmtree its live shuffle/spill dirs out
+    from under it mid-job."""
     import shutil
     import time
 

@@ -211,8 +211,9 @@ def to_merge_sql(
     bidSaver.py:37-395, models/models.py:51-90). On a cluster with a v2
     catalog the call site is ``spark.sql(to_merge_sql(...))`` against a
     temp view ``source``; on plain parquet ``merge_upsert`` executes the
-    same semantics and this generator is syntax-pinned in tests via Spark's
-    SQL parser.
+    same semantics. Tests pin this generator's syntax with Spark's SQL
+    parser and execute its output in DuckDB, rewritten as
+    ``INSERT … ON CONFLICT … DO UPDATE``, against ``merge_upsert``.
 
     ``on_matched_sql`` gives per-column UPDATE expressions over aliases
     ``t`` (target) / ``s`` (source) — e.g. counter accumulation

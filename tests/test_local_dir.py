@@ -96,10 +96,11 @@ def test_sweep_keeps_live_owner_pid_dir_fresh_mtime(tmp_path):
 def test_sweep_never_age_caps_live_owner_pid_dirs(monkeypatch, tmp_path):
     """A live owner's pid dir is kept at ANY age: the top-level mtime is
     set at creation and Spark only writes inside blockmgr-* subdirs, so
-    a >7-day streaming session's top-level mtime is permanently stale —
-    the old 7-day hard cap would have rmtree'd its live shuffle/spill
-    dirs mid-job (r4 ADVICE item). Simulated: a pid1 dir whose mtime is
-    30 days old but still AFTER /proc/1's (faked, older) start time."""
+    the top-level mtime of any long-running session (a multi-day batch
+    crawl, say) is permanently stale — the old 7-day hard cap would
+    have rmtree'd its live shuffle/spill dirs mid-job (r4 ADVICE item).
+    Simulated: a pid1 dir whose mtime is 30 days old but still AFTER
+    /proc/1's (faked, older) start time."""
     owned = tmp_path / "pid1"
     owned.mkdir()
     fake_dir_mtime = time.time() - 30 * 24 * 3600

@@ -1,7 +1,8 @@
 """Iceberg MERGE INTO surface (VERDICT r1 missing #2): to_merge_sql must
 emit parser-valid Spark SQL with merge_upsert's exact semantics for every
 sink table's natural key (reference bidSaver.py:61-395,
-CompanyEmployee.py:28-188, winner_bid.py:20-67)."""
+CompanyEmployee.py:28-188, winner_bid.py:20-67); DuckDB executes each
+table's statement, rewritten as ON CONFLICT, against merge_upsert."""
 
 from __future__ import annotations
 
@@ -13,7 +14,6 @@ from pyspark.sql import types as T
 
 from tbbid_scrapy_spark.plans import relational
 from tbbid_scrapy_spark.plans.relational import MERGE_SPECS, merge_sql_for
-from tbbid_scrapy_spark.sources.sink import to_merge_sql
 
 
 def _parse(spark, sql: str):
@@ -51,38 +51,141 @@ def test_merge_sql_key_and_update_shape(spark):
     assert "t.project_id = " not in sql_proj.split("UPDATE SET")[1].split("WHEN NOT")[0]
 
 
+def _value(dtype: T.DataType, i: int):
+    return {
+        "string": f"v{i}", "int": i, "double": float(i), "array<string>": [f"v{i}"],
+        "timestamp_ntz": datetime.datetime(2024, 1, 1 + i),
+    }[dtype.simpleString()]
+
+
+# DuckDB column types for the MERGE_SPECS DDL types. DuckDB 1.0 cannot
+# update a list column in ON CONFLICT ("List Update is not supported"),
+# so array<string> is stored as JSON and read back as VARCHAR[].
+_DUCK_TYPES = {
+    "string": "VARCHAR", "int": "INTEGER", "double": "DOUBLE",
+    "array<string>": "JSON", "timestamp_ntz": "TIMESTAMP",
+}
+
+
+def _on_conflict_sql(merge_sql: str) -> str:
+    """Rewrite a generated ``MERGE INTO`` statement as the
+    ``INSERT … ON CONFLICT (keys) DO UPDATE SET`` upsert DuckDB 1.0
+    runs (it has no MERGE): the keys, the SET rules and the insert
+    list are taken from the MERGE text itself, with the target alias
+    ``t.`` → ``<table>.`` and the source alias ``s.`` → ``excluded.``."""
+    m = re.fullmatch(
+        r"MERGE INTO (\w+) t USING (\w+) s ON (.*?) "
+        r"WHEN MATCHED THEN UPDATE SET (.*?) "
+        r"WHEN NOT MATCHED THEN INSERT \((.*?)\) VALUES \((.*?)\)",
+        merge_sql,
+    )
+    table, source, on, sets, cols, vals = m.groups()
+    keys = re.findall(r"t\.(\w+) <=> s\.\1", on)
+    assert on == " AND ".join(f"t.{k} <=> s.{k}" for k in keys), on
+
+    def rewrite(expr: str) -> str:
+        return re.sub(r"\bs\.", "excluded.", re.sub(r"\bt\.", f"{table}.", expr))
+
+    rules = [
+        re.fullmatch(r"t\.(\w+) = (.*)", item).groups()
+        for item in re.split(r", (?=t\.\w+ = )", sets)
+    ]
+    updates = ", ".join(f"{c} = {rewrite(e)}" for c, e in rules)
+    return (
+        f"INSERT INTO {table} ({cols}) SELECT {vals} FROM {source} s "
+        f"ON CONFLICT ({', '.join(keys)}) DO UPDATE SET {updates}"
+    )
+
+
+def _payload(dtype: T.DataType, j: int, pos: int):
+    """Data-column value for payload j: a mix of NULLs, empty strings
+    and values across rows and columns."""
+    kind = (j + pos) % 4
+    if kind == 0:
+        return None
+    if kind == 1 and dtype.simpleString() == "string":
+        return ""
+    return _value(dtype, j)
+
+
 def test_merge_sql_executes_on_a_real_merge_capable_engine(spark):
-    """End-to-end semantics check without Iceberg jars: DuckDB implements
-    ANSI MERGE (1.3+); run the generated statement there (swapping <=> for
-    IS NOT DISTINCT FROM, the ANSI spelling) and compare against
-    merge_upsert on the same rows."""
+    """Every table's generated MERGE runs in a second engine and agrees
+    row-for-row with relational.upsert. DuckDB 1.0 has no MERGE, so the
+    statement runs as the ON CONFLICT upsert rewritten from its own text
+    (_on_conflict_sql). Limits of that rewrite: keys are primary-key
+    columns there, so they are never NULL here (merge_upsert's null-safe
+    <=> key pairing is covered by its own tests), and a batch with a
+    duplicate key is a constraint error, so the source is first deduped
+    by the table's on_duplicate policy — and for an on_duplicate='error'
+    table (company) the duplicate batch must raise on both engines."""
+    import json
+
     import duckdb
 
-    try:
-        con = duckdb.connect()
-        con.execute("CREATE TABLE company (corp_code text, name text, bid_count int)")
-    except Exception:
-        pytest.skip("duckdb unavailable")
-    con.execute("INSERT INTO company VALUES ('C1', 'a', 3)")
-    con.execute("CREATE TABLE _incoming (corp_code text, name text, bid_count int)")
-    con.execute("INSERT INTO _incoming VALUES ('C1', 'a', 2), ('C2', 'b', 1)")
-    spec = MERGE_SPECS["company"]
-    sql = to_merge_sql(
-        "company", spec["keys"], ["corp_code", "name", "bid_count"],
-        spec["on_matched_sql"],
-    ).replace("<=>", "IS NOT DISTINCT FROM")
-    try:
-        con.execute(sql)
-    except duckdb.ParserException:
-        pytest.skip("this duckdb build lacks MERGE")
-    got = dict(con.execute("SELECT corp_code, bid_count FROM company").fetchall())
-    assert got == {"C1": 5, "C2": 1}
+    for table, spec in MERGE_SPECS.items():
+        schema = T._parse_datatype_string(spec["ddl"])
+        keys = spec["keys"]
 
-    cur = spark.createDataFrame([("C1", "a", 3)], "corp_code string, name string, bid_count int")
-    inc = spark.createDataFrame([("C1", "a", 2), ("C2", "b", 1)],
-                                "corp_code string, name string, bid_count int")
-    emulated = relational.upsert("company", cur, inc)
-    assert {(r.corp_code, r.bid_count) for r in emulated.collect()} == set(got.items())
+        def rows(pairs):
+            return [
+                tuple(
+                    _value(f.dataType, k) if f.name in keys
+                    else _payload(f.dataType, j, pos)
+                    for pos, f in enumerate(schema)
+                )
+                for k, j in pairs
+            ]
+
+        stored = rows([(0, 0), (1, 1), (2, 2)])
+        current = spark.createDataFrame(stored, schema)
+        # keys 1, 2 update; key 3 inserts and arrives twice
+        batch = rows([(1, 3), (2, 4), (3, 5), (3, 6)])
+        incoming = spark.createDataFrame(batch, schema)
+
+        con = duckdb.connect()
+        ddl = ", ".join(f"{f.name} {_DUCK_TYPES[f.dataType.simpleString()]}"
+                        for f in schema)
+        con.execute(f"CREATE TABLE {table} ({ddl}, PRIMARY KEY ({', '.join(keys)}))")
+        con.execute(f"CREATE TABLE _incoming ({ddl})")
+        marks = ", ".join("?" for _ in schema)
+
+        def load(name, data):
+            con.execute(f"DELETE FROM {name}")
+            con.executemany(f"INSERT INTO {name} VALUES ({marks})", [
+                [json.dumps(v) if isinstance(v, list) else v for v in r] for r in data
+            ])
+
+        def collect(df):  # merge_upsert puts the key columns first
+            return [tuple(r[c] for c in spec["cols"]) for r in df.collect()]
+
+        load(table, stored)
+        sql = _on_conflict_sql(merge_sql_for(table))
+        if spec["on_duplicate"] == "error":
+            load("_incoming", batch)
+            with pytest.raises(duckdb.Error):
+                con.execute(sql)
+            with pytest.raises(Exception, match="duplicate"):
+                relational.upsert(table, current, incoming).collect()
+            batch = batch[:-1]
+            incoming = spark.createDataFrame(batch, schema)
+        empty = spark.createDataFrame([], schema)
+        load("_incoming", collect(relational.upsert(table, empty, incoming)))
+        con.execute(sql)
+
+        cols = ", ".join(
+            f"{f.name}::VARCHAR[]" if f.dataType.simpleString() == "array<string>"
+            else f.name
+            for f in schema
+        )
+        key_pos = [spec["cols"].index(k) for k in keys]
+
+        def by_key(rows):
+            return {tuple(r[i] for i in key_pos): r for r in rows}
+
+        got = by_key(con.execute(f"SELECT {cols} FROM {table}").fetchall())
+        want = by_key(collect(relational.upsert(table, current, incoming)))
+        assert got == want, table
+        assert len(got) == 4, table
 
 
 def test_merge_upsert_duplicate_key_dedup_is_deterministic(spark):
@@ -146,13 +249,6 @@ def test_upsert_company_rejects_duplicate_corp_batch(spark):
     )
     with pytest.raises(Exception):
         relational.upsert("company", cur, dup).collect()
-
-
-def _value(dtype: T.DataType, i: int):
-    return {
-        "string": f"v{i}", "int": i, "double": float(i), "array<string>": [f"v{i}"],
-        "timestamp_ntz": datetime.datetime(2024, 1, 1 + i),
-    }[dtype.simpleString()]
 
 
 @pytest.mark.parametrize("table", sorted(MERGE_SPECS))

@@ -47,6 +47,38 @@ def test_resume_equals_uninterrupted(spark, site_df, politeness_df, robots_df, t
     assert f_res == f_full
 
 
+def test_resume_fails_loudly_on_corrupt_seen_table(
+    spark, site_df, politeness_df, robots_df, tmp_path
+):
+    """A committed seen part that cannot be read must fail the resumed
+    run before anything commits. Reading it as an empty or missing
+    table instead would drop every URL it holds from the seen-set
+    dedup and re-enqueue already-crawled URLs."""
+    import glob
+    import os
+
+    from tbbid_scrapy_spark.sources.sink import Catalog
+
+    ck = str(tmp_path / "ck")
+    CrawlEngine(
+        spark, site_df, sitegen.default_seeds(), politeness_df, robots_df,
+        CrawlConfig(max_waves=3, checkpoint_dir=ck),
+    ).run()
+    before = Catalog(ck).read()
+    assert before["wave"] == 3
+
+    files = glob.glob(os.path.join(ck, "seen", "part-*", "*.parquet"))
+    with open(max(files, key=os.path.getsize), "wb") as f:
+        f.write(b"this is not parquet")
+
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        CrawlEngine(
+            spark, site_df, sitegen.default_seeds(), politeness_df, robots_df,
+            CrawlConfig(max_waves=50, checkpoint_dir=ck),
+        ).run(resume=True)
+    assert Catalog(ck).read() == before
+
+
 def test_resume_rebuilds_shards_on_seen_format_mismatch(
     spark, site_df, politeness_df, robots_df, tmp_path
 ):

@@ -1,137 +1,12 @@
-"""Structured Streaming variants + multimodal plumbing."""
+"""Multimodal plumbing: media decode, resize, frame sampling, features."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from tbbid_scrapy_spark import schemas
-from tbbid_scrapy_spark.fixtures import sitegen
 from tbbid_scrapy_spark.operators import multimodal as mm
-from tbbid_scrapy_spark.streaming import stream_crawl as sc
 
-
-@pytest.fixture(scope="module")
-def landing(spark, site, tmp_path_factory):
-    d = tmp_path_factory.mktemp("landing")
-    rows = [
-        (p.doc_id, p.page_kind, p.host,
-         [{"kind": k, "text": t, "media_ref": m, "offset": o} for (k, t, m, o) in p.spans])
-        for p in site.values()
-    ]
-    spark.createDataFrame(rows, schemas.DOCUMENTS).write.mode("overwrite").parquet(str(d / "docs"))
-    return d
-
-
-def test_stream_extract_equals_batch(spark, landing, tmp_path):
-    q = sc.stream_extract(
-        spark, str(landing / "docs"), str(tmp_path / "ck"), str(tmp_path / "out")
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(str(tmp_path / "out"))
-    batch = (
-        spark.read.parquet(str(landing / "docs"))
-        .select("doc_id", F.explode("spans").alias("s"))
-    )
-    assert got.count() == batch.count()
-    assert got.filter(F.col("kind") == "link").count() == \
-        batch.filter(F.col("s.kind") == "link").count()
-
-
-def test_stream_host_state(spark, landing, tmp_path):
-    q = sc.stream_host_state(
-        spark, str(landing / "docs"), str(tmp_path / "ck2"), str(tmp_path / "out2")
-    )
-    q.awaitTermination(120)
-    got = {r.host: r.total_pages for r in spark.read.parquet(str(tmp_path / "out2")).collect()}
-    exp = (
-        spark.read.parquet(str(landing / "docs")).groupBy("host").count().collect()
-    )
-    for r in exp:
-        assert got[r.host] == r["count"]
-
-
-def test_stream_metrics_watermark(spark, tmp_path):
-    sch = T.StructType(
-        list(schemas.DOCUMENTS.fields)
-        + [T.StructField("fetched_at", T.TimestampType(), False)]
-    )
-    rows = [
-        (f"https://h/{i}", "notice", "h",
-         [{"kind": "text", "text": "x", "media_ref": None, "offset": 0}],
-         __import__("datetime").datetime(2024, 1, 1, 0, i))
-        for i in range(30)
-    ]
-    d = tmp_path / "landing2"
-    spark.createDataFrame(rows, sch).write.parquet(str(d))
-    q = sc.stream_metrics(
-        spark, str(d), str(tmp_path / "ck3"), str(tmp_path / "out3"), sch,
-        window_minutes=10, watermark_minutes=5,
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(str(tmp_path / "out3"))
-    # 30 min of events, 10-min windows, watermark 5 min: max event 00:29 →
-    # watermark 00:24 → windows [0,10) and [10,20) are closed and emitted;
-    # [20,30) is still open (not below the watermark) and is correctly
-    # HELD BACK in append mode — the late-data guarantee under test
-    assert got.count() == 2
-    assert got.agg(F.sum("pages")).collect()[0][0] == 20
-    starts = sorted(r.window_start.minute for r in got.collect())
-    assert starts == [0, 10]
-
-
-def test_stream_frontier_foreachBatch(spark, tmp_path):
-    d = tmp_path / "urls"
-    urls = [(f"https://h.example.org/p/{i % 7}?x={i % 7}&_=123",) for i in range(20)]
-    spark.createDataFrame(urls, "url string").write.parquet(str(d))
-    stream = spark.readStream.schema("url string").parquet(str(d))
-    q = sc.stream_frontier_foreachBatch(
-        spark, stream, str(tmp_path / "seen"), str(tmp_path / "frontier"),
-        str(tmp_path / "ck4"),
-    )
-    q.awaitTermination(120)
-    frontier = spark.read.parquet(str(tmp_path / "frontier"))
-    # 7 distinct canonical URLs (cache-buster stripped)
-    assert frontier.count() == 7
-    seen = spark.read.parquet(str(tmp_path / "seen"))
-    assert seen.select("url_hash").distinct().count() == 7
-
-
-def test_stream_frontier_corrupt_seen_table_fails_loudly(spark, tmp_path):
-    """A transient/corrupt seen-table read must FAIL the batch (so the
-    stream retries with dedup intact), not be swallowed as 'no seen table
-    yet' — a blanket except here silently re-enqueues every
-    already-crawled URL in the batch (re-crawl storm)."""
-    d = tmp_path / "urls"
-    spark.createDataFrame(
-        [("https://h.example.org/p/1",)], "url string"
-    ).write.parquet(str(d))
-    seen_dir = tmp_path / "seen"
-    seen_dir.mkdir()
-    # not a parquet file: the read fails with something OTHER than
-    # path-not-found, which must propagate
-    (seen_dir / "part-00000.parquet").write_bytes(b"this is not parquet")
-    stream = spark.readStream.schema("url string").parquet(str(d))
-    q = sc.stream_frontier_foreachBatch(
-        spark, stream, str(seen_dir), str(tmp_path / "frontier2"),
-        str(tmp_path / "ck5"),
-    )
-    import pyspark.errors
-
-    with pytest.raises(pyspark.errors.PySparkException):
-        q.awaitTermination(120)
-    # nothing may have been appended to the frontier on the failed batch
-    import os
-    fdir = tmp_path / "frontier2"
-    assert not fdir.exists() or not [
-        f for f in os.listdir(fdir) if f.endswith(".parquet")
-    ]
-
-
-# ---------------------------------------------------------------------------
-# multimodal
-# ---------------------------------------------------------------------------
 
 def test_decode_roundtrip(spark):
     media = mm.synthetic_media(spark, 60)
